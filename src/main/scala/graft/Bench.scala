@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with total + per-query wall seconds. Results are
@@ -18,21 +17,7 @@ object Bench {
     // that forgot to export SPARK_GRAFT_CPUS — see BENCH_NOTES round-10
     // core-count correction
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Tables.session: the default 100-entry codegen cache thrashes
-      // at 180+ queries and every cache miss re-runs a fragment JIT-cold
-      // (the measured q142 in-suite inflation mechanism)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tables.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // untimed warmup: run the whole suite once at smoke scale so janino
     // codegen, JIT, and file-index init are paid before timing — per-query

@@ -84,6 +84,11 @@ object Tables {
       // cost is metaspace, not heap. (Q142Probe2 + b142 bisect, round 11)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      // local-disk IO without a chmod/readlink subprocess per file and
+      // per checkpoint rename; same files, .crc checksums and permission
+      // bits (graft/io/LocalFs.scala)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
       .getOrCreate()
     // opt-in state-store provider for the streaming queries (q43/q47/
     // q59/q72): RocksDB keeps streaming state off-heap, which is how a

@@ -71,6 +71,9 @@ object FakeKinesis extends ShardService {
     * horizon). Throws ThrottledException while an injected throttle budget
     * remains — callers must retry with backoff like
     * `/root/reference/triton/stream.go:63-111`.
+    *
+    * A record's sequence number is its index in the shard buffer, so a
+    * page is a slice, not a scan.
     */
   def getRecords(stream: String, shardId: String, afterSeq: Long, limit: Int = 1000): Seq[Rec] =
     synchronized {
@@ -81,8 +84,9 @@ object FakeKinesis extends ShardService {
       }
       val idx = shardId.stripPrefix("shard-").toInt
       getRecordsCalls += 1
-      streams(stream).shards(idx).records.iterator
-        .filter(_.sequenceNumber > afterSeq).take(limit).toSeq
+      val records = streams(stream).shards(idx).records
+      val from = if (afterSeq < 0) 0 else math.min(afterSeq, records.length - 1L).toInt + 1
+      records.view.drop(from).take(limit).toVector
     }
 
   def latestSequence(stream: String, shardId: String): Long = synchronized {

@@ -181,6 +181,28 @@ class KinesisLikeSourceSpec extends AnyFunSuite with SparkFixture {
       s"expected paged draining, saw ${FakeKinesis.getRecordsCalls} getRecords calls")
   }
 
+  test("a 20k-record shard drains in 100-record pages, every record exactly once, in order") {
+    FakeKinesis.reset()
+    FakeKinesis.createStream("s11", 1)
+    (1L to 20000L).foreach(i => put("s11", "samekey", i, "x"))
+    // consecutive pages of the service itself tile the shard
+    val pages = Iterator.iterate(FakeKinesis.getRecords("s11", "shard-0", -1L, 100)) { prev =>
+      FakeKinesis.getRecords("s11", "shard-0", prev.last.sequenceNumber, 100)
+    }.takeWhile(_.nonEmpty).toVector
+    assert(pages.map(_.size).distinct === Vector(100))
+    assert(pages.flatten.map(_.sequenceNumber) === (0L until 20000L))
+    assert(FakeKinesis.getRecords("s11", "shard-0", 19999L, 100).isEmpty)
+    val q = spark.readStream.format("kinesis-graft")
+      .option("stream", "s11").option("maxRecordsPerFetch", "100").load()
+      .withColumn("rec", expr("from_msgpack(data, 'id BIGINT, kind STRING')"))
+      .select(col("sequence_number"), col("rec.id").as("id"))
+      .writeStream.format("memory").queryName("t11").start()
+    q.processAllAvailable(); q.stop()
+    val rows = spark.table("t11").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows.map(_._1) === (0L until 20000L))
+    assert(rows.map(_._2) === (1L to 20000L))
+  }
+
   test("short pages are not exhaustion: a service returning fewer than limit loses nothing") {
     FakeKinesis.reset()
     FakeKinesis.createStream("s10", 1)

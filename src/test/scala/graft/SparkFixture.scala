@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local session for specs — same config surface as the harness
-  * mains (extensions registered, UTC, nanos-as-long).
+/** Shared local session for specs — made by the harness mains' own
+  * `Tables.session`, at 4 cores.
   */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
@@ -14,17 +14,5 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Tables.session("graft-test", "4")
 }
