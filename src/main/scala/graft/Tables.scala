@@ -81,7 +81,8 @@ object Tables {
       // inflation" (3.0 s solo vs 6.3 s after any ~20-query prefix,
       // identical IO/GC, 2.4x task CPU, gone by the very next run).
       // 5000 entries keep every suite fragment's compiled class live;
-      // cost is metaspace, not heap. (Q142Probe2 + b142 bisect, round 11)
+      // cost is metaspace, not heap. (BENCH_NOTES "Round-11: q142's
+      // in-suite inflation mechanized")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       // local-disk IO without a chmod/readlink subprocess per file and

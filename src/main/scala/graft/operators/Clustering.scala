@@ -168,10 +168,9 @@ object Clustering {
       .distinct()
   }
 
-  /** Round-12's join-form contraction round, kept LIVE for the plan
-    * probe and the equivalence spec (the q142 pagerankEdgesLegacy
-    * discipline): identical output set to [[ccRound]] on any canonical
-    * edge frame, ~6 exchanges against its 3.
+  /** Round-12's join-form contraction round, kept as the equivalence
+    * spec's reference: identical output set to [[ccRound]] on any
+    * canonical edge frame, ~6 exchanges against its 3.
     */
   private[graft] def ccRoundLegacy(cur: DataFrame): DataFrame = {
     val s = cur.sparkSession
@@ -315,12 +314,10 @@ object Clustering {
     * rank frame shuffles per round — 5 rounds = 5 small shuffles plus
     * one cached big build, the same discipline a 100 TB Pregel runs.
     */
-  def bipartitePagerank(s: SparkSession, dir: String, iters: Int = 5,
-                        ckptRounds: Boolean = false): DataFrame = {
-    import s.implicits._
+  def bipartitePagerank(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val edges = OpCache.memoDir("prEdges", s.sparkContext.applicationId, dir, "",
       pagerankEdgesWindowed(s, dir).cache())
-    pagerankFromEdges(s, edges.toDF(), iters, ckptRounds)
+    pagerankFromEdges(s, edges.toDF(), iters)
   }
 
   /** The q142 edge-with-degree build in ONE shuffle: the per-src degree
@@ -328,11 +325,11 @@ object Clustering {
     * partitioning is exactly the hashpartitioning(src) every Pregel
     * round's join demands — replacing the round-11 build's
     * groupBy(deg) + 2E-row join + repartition chain (3 extra 2E-row
-    * movements). Q142Probe3 at sf10: build 41.5 -> 20.6 s, build spill
+    * movements). Measured at sf10: build 41.5 -> 20.6 s, build spill
     * 27.4 -> 14.8 GB mem / 4.3 -> 2.5 GB disk, identical edge count and
-    * round cost (BENCH_NOTES round 12).
+    * round cost (BENCH_NOTES "Round-12 spill-tail probes").
     */
-  private[graft] def pagerankEdgesWindowed(s: SparkSession, dir: String): DataFrame = {
+  private def pagerankEdgesWindowed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val pairs = graft.Tables.table(s, dir, "lineitem")
@@ -342,22 +339,15 @@ object Clustering {
     e.withColumn("deg", count(lit(1)).over(Window.partitionBy($"src")))
   }
 
-  /** Round-11's q142 edge build, kept for the probe comparison. */
-  private[graft] def pagerankEdgesLegacy(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = graft.Tables.table(s, dir, "lineitem")
-      .select($"l_partkey", $"l_suppkey").distinct()
-    val e = pairs.select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-      .unionByName(pairs.select(($"l_suppkey" * 2 + 1).as("src"), ($"l_partkey" * 2).as("dst")))
-    val deg = e.groupBy($"src").agg(count(lit(1)).as("deg"))
-    e.join(deg, "src").repartition($"src")
-  }
-
-  /** The Pregel rounds + supplier tail over ANY (src, dst, deg) edge
-    * frame — shared by the registered query and the build probes. */
-  private[graft] def pagerankFromEdges(s: SparkSession, edges: DataFrame,
-                                       iters: Int,
-                                       ckptRounds: Boolean = false): DataFrame = {
+  /** The Pregel rounds + supplier tail over the cached (src, dst, deg)
+    * edge frame. Per-round `localCheckpoint` of the rank frame measured
+    * slower at 5 rounds (BENCH_NOTES "q142 per-round localCheckpoint:
+    * negative result"), and computing contrib on the node-sized frame
+    * before the edge join bought nothing (BENCH_NOTES "Round-13 focused
+    * ladders", negative results).
+    */
+  private def pagerankFromEdges(s: SparkSession, edges: DataFrame,
+                                iters: Int): DataFrame = {
     import s.implicits._
     var ranks = edges.select($"src".as("node"), $"deg").distinct()
       .select($"node", lit(1000000L).as("r"))
@@ -371,10 +361,6 @@ object Clustering {
         .select($"dst", expr("r div deg").as("contrib"))
         .groupBy($"dst").agg(sum($"contrib").as("c"))
         .select($"dst".as("node"), (lit(150000L) + expr("(85 * c) div 100")).as("r"))
-      // probe knob (Q142Probe): truncate the per-round lineage — the
-      // rank frame is node-bounded, so materializing it is cheap while
-      // re-analyzing an unrolling plan is not
-      if (ckptRounds) ranks = ranks.localCheckpoint()
     }
     val sdeg = edges.select($"src", $"deg").distinct()
       .where($"src" % 2 === 1)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement harness for q53's recall/cost curve: sweeps (nCells,
   * nProbe) over the REAL operator (`Similarity.annIvfKmeans` — same
   * codebook build, same probe/search) against exact brute force, printing
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object IvfSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Tables.session("ivf-sweep", "16")
     spark.sparkContext.setLogLevel("ERROR")
 
     def topk(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =

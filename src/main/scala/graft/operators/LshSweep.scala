@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness behind `annLsh`'s default config: sweeps
@@ -18,11 +17,7 @@ import org.apache.spark.sql.functions._
 object LshSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Tables.session("lsh-sweep", "8")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for q20's scale boundary: reports the PPJoin
@@ -18,11 +17,7 @@ object PpjoinDiag {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val exact = args.lift(1).contains("exact")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Tables.session("ppjoin-diag", "16")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

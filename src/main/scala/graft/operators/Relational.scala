@@ -67,13 +67,14 @@ object Relational {
     * Join strategy is pinned to SHUFFLED-HASH with the build on the
     * smaller (filtered-orders) side: the Catalyst default (sort-merge)
     * sorted both sides and spilled 129-617 MB at sf10 ("known since
-    * round 6"); `Q03Probe` measured SMJ 3.9-7.2 s / 129 MB spill vs SHJ
+    * round 6"); measured at sf10: SMJ 3.9-7.2 s / 129 MB spill vs SHJ
     * 3.5-3.9 s / ZERO spill on identical output (bucketed tables also
     * measured: zero shuffle but a 11 s one-time write + residual sort —
     * right only when the key is reused across many queries). The hash
     * build is per-partition orders rows — the side a deployment sizes
     * shuffle partitions for; hinting the lineitem side instead OOMs the
-    * hashed relation (measured).
+    * hashed relation (measured). Numbers: BENCH_NOTES "q03 join-strategy
+    * probe".
     */
   def revenueByPriority(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -184,7 +185,7 @@ object Relational {
     * combine map-side. Output is one row per schema edge at any SF.
     *
     * The per-edge shape survived a measured challenge (round 10,
-    * `Q90Probe` at sf10): the "lineitem is scanned once per FK edge"
+    * at sf10): the "lineitem is scanned once per FK edge"
     * criticism is ILLUSORY under columnar storage — each edge's scan
     * prunes to a DIFFERENT single key column, so three 1-column scans
     * read the same bytes as one 3-column scan. The fused alternatives
@@ -196,7 +197,7 @@ object Relational {
     * anti-join sort spill can be traded away with a shuffle_hash hint
     * (0 spill, but 818 MB shuffle) — on a real cluster network bytes
     * dominate local spill, so the unhinted form stays. Full numbers in
-    * BENCH_NOTES round 10.
+    * BENCH_NOTES "q90 fused-scan probe".
     */
   /** Correlated-subquery surface (q101): orders priced above 1.5x their
     * own customer's average, summarized per priority — the "whale order"

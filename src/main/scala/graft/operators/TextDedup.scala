@@ -556,7 +556,7 @@ object TextDedup {
     * (frequency/first-occurrence aggregate + the join back), so without
     * the memo the tokenize+chunk+hash+explode pass runs four times per
     * suite — and twice per single action — for one frame's worth of
-    * information. Same precedent as hashedShingles/dupSubstrWins:
+    * information. Same precedent as hashedShingles/dupSubstrWinsP:
     * corpus-derived, multiple consumers, spill-backed storage.
     */
   private def lineHashesCached(s: SparkSession, dir: String,
@@ -650,17 +650,9 @@ object TextDedup {
     * one window function, one partition-by-doc shuffle.
     */
   def dupSubstringCoverage(s: SparkSession, dir: String, window: Int = 8,
-                           minDf: Int = 2): DataFrame =
-    dupSubstringCoverageDf(table(s, dir, "documents"), window, minDf,
-      cacheKey = Some((dir, s"$window")), packed = true)
-
-  private[graft] def dupSubstringCoverageDf(docs: DataFrame, window: Int,
-                                            minDf: Int,
-                                            cacheKey: Option[(String, String)] = None,
-                                            packed: Boolean = false): DataFrame = {
-    val s = docs.sparkSession
+                           minDf: Int = 2): DataFrame = {
     import s.implicits._
-    val base = docs
+    val base = table(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("ts"))
       .select($"doc_id", size($"ts").cast("long").as("ntok"), $"ts")
     // window fingerprint: xxhash64 over the SLICE OF PER-TOKEN HASHES
@@ -674,38 +666,36 @@ object TextDedup {
     // 1-based window starts 1..ntok-window+1; docs shorter than one
     // window contribute nothing (sequence() would count DOWN on a
     // negative span, so the where-guard is load-bearing)
-    val wins0 = base.where($"ntok" >= window)
+    val wins = base.where($"ntok" >= window)
       .select($"doc_id", expr("transform(ts, t -> xxhash64(t))").as("th"),
         $"ntok")
       .select($"doc_id", posexplode(expr(
         s"transform(sequence(1, cast(ntok as int) - ${window - 1})," +
         s" i -> xxhash64(slice(th, i, $window)))")).as(Seq("p0", "wh")))
-      .select($"doc_id", ($"p0" + 1L).as("pos"), $"wh")
+      // (doc_id, pos) packed into one BIGINT doc_id * 2^32 + pos, so the
+      // cached/shuffled stream is 2 longs per window instead of 3 — exact
+      // for -2^31 <= doc_id < 2^31 and pos < 2^32; a doc_id outside that
+      // range fails the query with an ANSI overflow on the multiply
+      // rather than aliasing another document's windows. Measured at
+      // sf10 against the unpacked 3-long frame: cold 20.9 -> 13.7 s,
+      // cache-build spill 1.9 GB -> 0, steady 5.4 -> 4.6 s (BENCH_NOTES
+      // "Round-12 spill-tail probes").
+      .select((($"doc_id" * 4294967296L) + $"p0" + 1L).as("dp"), $"wh")
     // the window stream feeds BOTH the df aggregate and the join back —
     // without a cache the whole tokenize+hash+explode pass (the
     // operator's CPU bill) runs twice per action. Dir-keyed entries
-    // memoize the compact (doc_id, pos, wh) frame through OpCache,
-    // exactly the hashedShingles precedent: corpus-derived, two
-    // consumers, spill-backed storage at scale.
-    // packed (the registered default since round 12): (doc_id, pos) in
-    // one BIGINT (doc_id << 32 | pos), so the cached/shuffled stream is
-    // 2 longs per window instead of 3 — sound while doc_id < 2^31 and
-    // pos < 2^32 (orders of magnitude of headroom at every tested SF).
-    // Q76Probe at sf10: cold 20.9 -> 13.7 s, cache-build spill
-    // 1.9 GB -> 0, steady 5.4 -> 4.6 s (BENCH_NOTES round 12).
-    val winsShape =
-      if (packed) wins0.select((($"doc_id" * 4294967296L) + $"pos").as("dp"), $"wh")
-      else wins0
-    val family = if (packed) "dupSubstrWinsP" else "dupSubstrWins"
-    val wins = cacheKey.map { case (d, k) => OpCache.memoDir(family,
-      s.sparkContext.applicationId, d, k, winsShape.cache()) }.getOrElse(winsShape)
-    val dupHashes = wins.groupBy($"wh").agg(count(lit(1)).as("c"))
+    // memoize the compact (dp, wh) frame through OpCache, exactly the
+    // hashedShingles precedent: corpus-derived, two consumers,
+    // spill-backed storage at scale.
+    val cached = OpCache.memoDir("dupSubstrWinsP", s.sparkContext.applicationId,
+      dir, s"$window", wins.cache())
+    val dupHashes = cached.groupBy($"wh").agg(count(lit(1)).as("c"))
       .where($"c" >= minDf).select($"wh")
-    val dups0 = wins.join(dupHashes, Seq("wh"))
-    val dups =
-      if (packed) dups0.select(expr("dp div 4294967296").as("doc_id"),
-        expr("dp % 4294967296").as("pos"))
-      else dups0.select($"doc_id", $"pos")
+    // floor-semantics unpack: pmod keeps pos in [0, 2^32) for a negative
+    // doc_id, where truncating div/% would split (-1, 3) into (0, -2^32+3)
+    val dups = cached.join(dupHashes, Seq("wh"))
+      .select($"dp", expr("pmod(dp, 4294967296)").as("pos"))
+      .select(expr("(dp - pos) div 4294967296").as("doc_id"), $"pos")
     val byDoc = Window.partitionBy($"doc_id").orderBy($"pos")
     val spans = dups
       .withColumn("brk", when(lag($"pos", 1).over(byDoc).isNull ||

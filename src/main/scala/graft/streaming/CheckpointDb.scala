@@ -163,8 +163,8 @@ object CheckpointDb {
     * mirror DB must not kill the listener bus. Returns the listener;
     * detach with `spark.streams.removeListener`.
     *
-    * Scale boundary, measured by [[CheckpointProbe]] (BENCH_NOTES round
-    * 9): the mirror is one serial upsert per shard, ~0.18 ms each on
+    * Scale boundary, measured (BENCH_NOTES "Checkpoint-mirror ceiling"):
+    * the mirror is one serial upsert per shard, ~0.18 ms each on
     * embedded Derby — negligible through ~10 k shards (~1.8 s/event),
     * but at ~100 k shards a per-progress-event mirror would lag a 10 s
     * trigger. Past that, mirror every Nth progress event or wrap the

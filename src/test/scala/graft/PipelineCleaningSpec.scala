@@ -196,6 +196,24 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
     assert(got(5L) === ((20L, 13L, 2L, 2L, 16L, 0.8)))
   }
 
+  test("q76 packs negative doc_ids exactly and refuses ids past 32 bits") {
+    val a = "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10 a1 a2"
+    val b = "z1 s1 s2 s3 s4 s5 s6 s7 s8 s9 s10 z2"
+    def coverage(ids: (Long, Long)): Seq[(Long, Long, Long, Long, Long, Double)] =
+      TextDedup.dupSubstringCoverage(spark, writeDocs(Seq(ids._1 -> a, ids._2 -> b)))
+        .collect().toSeq.map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getDouble(6)))
+    val want = Seq.fill(2)((12L, 5L, 3L, 1L, 10L, 0.833333))
+    assert(coverage((0L, 1L)) === want)
+    // doc_id -1 packs to a negative BIGINT; a truncating unpack would
+    // file its windows under doc 0 at negative positions
+    assert(coverage((-1L, 1L)) === want)
+    // past 2^31 the pack cannot be exact: the query must fail, not alias
+    val err = intercept[Exception](coverage(((1L << 31) + 1L, 1L)))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).toLowerCase.contains("overflow")))
+  }
+
   test("q78 writes one file per shard and round-trips every document") {
     val dir = writeDocs((0L until 20L).map(i => i -> s"tok$i a b"))
     val out = java.nio.file.Files.createTempDirectory("q78spec").toString
