@@ -43,25 +43,8 @@ object Bench {
       catch { case _: Throwable => () }
     }
     val warmup = (System.nanoTime() - w0) / 1e9
-    // SPARK_GRAFT_BENCH_RELEASE_EVERY=N (0 = off): drop every memoized
-    // corpus cache + cached plan after each N queries. Emulates what a
-    // real cluster gets for free — operator caches spread over many
-    // executor heaps with LRU eviction — inside the one local JVM, where
-    // by mid-suite the old gen otherwise holds EVERY family's cache and
-    // allocation-heavy queries late in the run pay full-GC tax (the
-    // round-9 heap lesson; at 119 queries the tax dominates the suite).
-    // Costs the memo-dependent queries their rebuild, which their
-    // isolated ladders already price in.
-    val releaseEvery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RELEASE_EVERY", "0").toInt
-    def runSuite(): Seq[(String, Double)] = {
-      var sinceRelease = 0
+    def runSuite(): Seq[(String, Double)] =
       queries.map { case (name, fn) =>
-        if (releaseEvery > 0 && sinceRelease >= releaseEvery) {
-          graft.operators.Similarity.releaseCaches()
-          spark.catalog.clearCache()
-          sinceRelease = 0
-        }
-        sinceRelease += 1
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -69,7 +52,6 @@ object Bench {
         }
         name -> (System.nanoTime() - t0) / 1e9
       }
-    }
     // cold pass at the target SF pays the page-cache/file-index cost once
     // (reported as cold_sec); the reported per-query numbers are
     // MEDIANS over n steady passes — the harness box shows ±25% run-to-run

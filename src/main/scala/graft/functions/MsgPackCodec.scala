@@ -338,17 +338,6 @@ object MsgPackCodec {
     v
   }
 
-  /** Decode a concatenation of top-level values (one archive file's record
-    * stream, `/root/reference/triton/archive_reader.go:16-28`) lazily.
-    */
-  def decodeAll(bytes: Array[Byte], dt: DataType): Iterator[Any] = {
-    val in = new BufIn(ByteBuffer.wrap(bytes))
-    new Iterator[Any] {
-      override def hasNext: Boolean = in.hasMore
-      override def next(): Any = read(in, dt)
-    }
-  }
-
   /** Decode a concatenation of top-level values incrementally from a
     * stream — memory is bounded by the single largest record, not the
     * file (`.tri` archives are one snappy-framed stream per file; foreign
@@ -362,11 +351,12 @@ object MsgPackCodec {
     }
   }
 
-  /** Infer a Spark type from the first msgpack value in `bytes` — maps the
-    * msgpack tag space onto (struct, array, long, double, string, binary,
-    * boolean, timestamp). Used for `.tri` schema inference.
+  /** Infer a Spark type from the first msgpack value read off `in` — maps
+    * the msgpack tag space onto (struct, array, long, double, string,
+    * binary, boolean, timestamp). Reads only that value, whatever its size.
+    * Used for `.tri` schema inference.
     */
-  def inferType(bytes: Array[Byte]): DataType = inferValue(new BufIn(ByteBuffer.wrap(bytes)))
+  def inferType(in: java.io.InputStream): DataType = inferValue(new StreamIn(in))
 
   private def inferValue(buf: MsgIn): DataType = {
     val tag = buf.u8()

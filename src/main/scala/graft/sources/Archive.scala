@@ -63,22 +63,30 @@ object Archive {
     * single-client invariant enforced like the reference's mixed-client
     * error (`store_reader.go:90-99`).
     *
-    * The invariant check is metadata-only: the reference enforces it while
-    * *listing* keys, so here it reads the `date=`/`client=` partition
-    * directory names — never a data-touching Spark job. At 100 TB that is
-    * one listing per in-range date directory instead of a full-range scan
-    * before every query.
+    * Spark's file index of `root` is the only listing. A named client is
+    * a filter, so the invariant holds by construction and no check runs.
+    * With `client = ""` the check reads the `date=`/`client=` directories
+    * of the indexed data files (`inputFiles`, which already skips `_`/`.`
+    * files and empty directories) — metadata only, never a Spark job.
     */
   def read(spark: SparkSession, root: String, client: String,
            startDate: String, endDate: String): DataFrame = {
-    val clients = listClients(spark, root, startDate, endDate)
-      .filter(c => client.isEmpty || c == client)
-    if (clients.size > 1)
-      throw new IllegalStateException(
-        s"mixed clients in archive range: ${clients.toSeq.sorted.mkString(",")}")
     val df = spark.read.format("tri").load(root)
       .where(col("date") >= startDate && col("date") <= endDate)
-    if (client.nonEmpty) df.where(col("client") === client) else df
+    if (client.nonEmpty) return df.where(col("client") === client)
+    val unescape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName _
+    val clients = df.inputFiles.toSeq.flatMap { f =>
+      // inputFiles is the whole index, unpruned: the range applies here
+      val dir = new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent
+      val date = unescape(dir.getParent.getName.stripPrefix("date="))
+      if (date >= startDate && date <= endDate)
+        Some(unescape(dir.getName.stripPrefix("client=")))
+      else None
+    }.distinct.sorted
+    if (clients.size > 1)
+      throw new IllegalStateException(
+        s"mixed clients in archive range: ${clients.mkString(",")}")
+    df
   }
 
   /** Compact one (date, client) partition of the archive — the maintenance
@@ -132,89 +140,5 @@ object Archive {
     }
     fs.delete(bak, true)
     (before, dataFiles(partDir).length.toLong)
-  }
-
-  /** Distinct `client` partition values present in [startDate, endDate],
-    * from the directory layout alone (`date=YYYYMMDD/client=<c>/`). The
-    * per-date listings run concurrently: on an object store each LIST is
-    * ~tens of ms, so a multi-year range listed serially would cost more
-    * than the query — 16-way fan-out keeps it bounded by the slowest call,
-    * like the reference's per-day prefix listing loop but parallel.
-    *
-    * A client directory holding no data files (an aborted write's leftover,
-    * or a cleaned-up partition) does not count: the invariant is about data
-    * rows, and the reference derives it from keys that by construction have
-    * bytes behind them. The whole fan-out is bounded by `listTimeout`
-    * (`graft.archive.listTimeoutSec`, default 120 s) — a hung object-store
-    * LIST fails the query naming the stuck date directory instead of
-    * blocking it forever.
-    */
-  private def listClients(spark: SparkSession, root: String,
-                          startDate: String, endDate: String): Set[String] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val timeoutSec = spark.conf.getOption("graft.archive.listTimeoutSec")
-      .map(_.toLong).getOrElse(120L)
-    val dateDirs = fs.listStatus(rootPath).toSeq
-      .filter(_.isDirectory)
-      .flatMap(d => partValue(d.getPath.getName, "date").map(_ -> d.getPath))
-      .filter { case (date, _) => date >= startDate && date <= endDate }
-      .map(_._2)
-    listClientDirs(fs, dateDirs, timeoutSec)
-  }
-
-  private def partValue(name: String, col: String): Option[String] =
-    if (name.startsWith(col + "=")) Some(
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(name.substring(col.length + 1)))
-    else None
-
-  /** The fan-out body of [[listClients]], seam-exposed for tests (a slow
-    * FileSystem fake can exercise the timeout without a real object store).
-    */
-  private[graft] def listClientDirs(fs: org.apache.hadoop.fs.FileSystem,
-                                      dateDirs: Seq[org.apache.hadoop.fs.Path],
-                                      timeoutSec: Long): Set[String] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, dateDirs.size)))
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val deadline = System.nanoTime() + timeoutSec * 1000000000L
-      def awaitAll[T](futs: Seq[(org.apache.hadoop.fs.Path, Future[T])]): Seq[T] =
-        futs.map { case (dir, fut) =>
-          val left = math.max(1L, (deadline - System.nanoTime()) / 1000000L)
-          try Await.result(fut, left.millis)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              throw new java.io.IOException(
-                s"archive listing timed out after ${timeoutSec}s at $dir")
-          }
-        }
-      // phase 1: one LIST per date dir — client names from directory names
-      val clientDirs = awaitAll(dateDirs.map { d =>
-        d -> Future {
-          fs.listStatus(d).toSeq.filter(_.isDirectory)
-            .flatMap(c => partValue(c.getPath.getName, "client").map(_ -> c.getPath))
-        }
-      }).flatten
-      val byClient = clientDirs.groupBy(_._1)
-      if (byClient.size <= 1) byClient.keySet
-      else {
-        // phase 2 — only when the cheap listing LOOKS mixed: probe each
-        // client's dirs for an actual data file, so a leftover empty
-        // `client=` dir (aborted write) cannot raise a false mixed-client
-        // error. The single-client common case never pays these LISTs.
-        def hasData(p: org.apache.hadoop.fs.Path): Boolean =
-          fs.listStatus(p).exists { f =>
-            val n = f.getPath.getName
-            f.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-        awaitAll(byClient.toSeq.map { case (client, dirs) =>
-          dirs.head._2 -> Future { if (dirs.exists(d => hasData(d._2))) Some(client) else None }
-        }).flatten.toSet
-      }
-    } finally pool.shutdownNow()
   }
 }

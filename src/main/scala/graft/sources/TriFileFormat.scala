@@ -32,22 +32,20 @@ class TriFileFormat extends FileFormat with DataSourceRegister with Serializable
 
   override def toString: String = "TRI"
 
+  /** Merged struct of the first record of up to 8 files: archives written
+    * by evolving producers carry different field sets per file, and the
+    * merged struct decodes all of them (missing fields null, unknown
+    * skipped). Each first record decodes straight off the snappy stream,
+    * so its size is unbounded, like any record the reader decodes.
+    */
   override def inferSchema(sparkSession: SparkSession, options: Map[String, String],
                            files: Seq[FileStatus]): Option[StructType] = {
-    // sample several files, not just the first: archives written by
-    // evolving producers carry different field sets per file; the merged
-    // struct decodes all of them (missing fields null, unknown skipped)
     val conf = sparkSession.sessionState.newHadoopConf()
-    val sampled = files.take(
-      options.get("inferSampleFiles").map(_.toInt).getOrElse(8))
-    val inferred = sampled.map { f =>
+    val inferred = files.take(8).map { f =>
       val fs = f.getPath.getFileSystem(conf)
       val in = new SnappyFramedInputStream(fs.open(f.getPath))
       try {
-        val head = new Array[Byte](1 << 20)
-        var off = 0; var n = 0
-        while (off < head.length && { n = in.read(head, off, head.length - off); n > 0 }) off += n
-        MsgPackCodec.inferType(java.util.Arrays.copyOf(head, off)) match {
+        MsgPackCodec.inferType(new java.io.BufferedInputStream(in, 1 << 16)) match {
           case st: StructType => st
           case other => StructType(Seq(StructField("value", other)))
         }

@@ -1303,8 +1303,8 @@ object StreamOps {
     }
 
     /** Forget every staged artifact (files die with the JVM; a re-staged
-      * key gets a fresh dir). Wired into Similarity.releaseCaches so the
-      * bench's RELEASE_EVERY path drops these with the Dataset memos.
+      * key gets a fresh dir). Wired into Similarity.releaseCaches so a
+      * cache release drops these with the Dataset memos.
       */
     def clear(): Unit = dirs.clear()
   }

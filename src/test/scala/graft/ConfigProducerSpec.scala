@@ -42,7 +42,7 @@ class ConfigProducerSpec extends AnyFunSuite {
     assert(mock.puts.length === 1)
     val (_, pk, bytes) = mock.puts.head
     assert(pk === "key1")
-    val st = MsgPackCodec.inferType(bytes).asInstanceOf[StructType]
+    val st = MsgPackCodec.inferType(new java.io.ByteArrayInputStream(bytes)).asInstanceOf[StructType]
     assert(st.fieldNames.toSet === Set("object_type", "version", "ok", "score", "ids", "nested"))
     val row = MsgPackCodec.decode(bytes, st).asInstanceOf[org.apache.spark.sql.catalyst.expressions.GenericInternalRow]
     assert(row.getLong(st.fieldIndex("version")) === 3L)
@@ -58,7 +58,7 @@ class ConfigProducerSpec extends AnyFunSuite {
     // (/root/reference/tritond/client.go:103-115), quotes/backslashes escaped
     assert(Producer.parseHeader(header) === Some(("courier_activity_v2", "drv\"42\\")))
     // frame 2: the same msgpack payload the store pipeline decodes
-    val st = MsgPackCodec.inferType(body).asInstanceOf[StructType]
+    val st = MsgPackCodec.inferType(new java.io.ByteArrayInputStream(body)).asInstanceOf[StructType]
     assert(st.fieldNames.toSet === Set("object_type", "version"))
     // garbage header frames drop cleanly
     assert(Producer.parseHeader("not json".getBytes) === None)

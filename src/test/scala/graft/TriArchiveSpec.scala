@@ -122,11 +122,11 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = Archive.read(spark, root, "clientA", "20240101", "20241231")
+      // client = "" runs the single-client check: it must come from the
+      // file index's paths, not a data-touching distinct() job (reference
+      // enforces it at listing time, store_reader.go:90-99)
+      val df = Archive.read(spark, root, "", "20240101", "20241231")
       Thread.sleep(200) // let any async job-start events drain
-      // the single-client check must come from the partition directory
-      // listing, not a data-touching distinct() job (reference enforces it
-      // at listing time, store_reader.go:90-99)
       assert(jobs.get() === 0, s"Archive.read ran ${jobs.get()} Spark job(s) before any action")
       assert(df.count() === 2) // the data itself is intact
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -186,27 +186,6 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     assert(got.count() === 1)
   }
 
-  test("archive listing is bounded: a hung LIST times out naming the stuck dir") {
-    val root = Files.createTempDirectory("tri_slow").toString
-    val ok = new java.io.File(root, "date=20240105/client=cA")
-    assert(ok.mkdirs()); assert(new java.io.File(ok, "f.tri").createNewFile())
-    val stuck = new java.io.File(root, "date=20240106/client=cA")
-    assert(stuck.mkdirs()); assert(new java.io.File(stuck, "f.tri").createNewFile())
-    val fs = new org.apache.hadoop.fs.RawLocalFileSystem {
-      override def listStatus(p: org.apache.hadoop.fs.Path)
-          : Array[org.apache.hadoop.fs.FileStatus] = {
-        if (p.toString.contains("20240106")) Thread.sleep(600000)
-        super.listStatus(p)
-      }
-    }
-    fs.initialize(new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-    val dirs = Seq(
-      new org.apache.hadoop.fs.Path(s"file:$root/date=20240105"),
-      new org.apache.hadoop.fs.Path(s"file:$root/date=20240106"))
-    val e = intercept[java.io.IOException](Archive.listClientDirs(fs, dirs, timeoutSec = 2))
-    assert(e.getMessage.contains("20240106"), s"error must name the stuck dir: ${e.getMessage}")
-  }
-
   test("mixed clients in a range raise (reference single-client invariant)") {
     import spark.implicits._
     val root = Files.createTempDirectory("tri_mixed").toString
@@ -231,6 +210,37 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     val got = Archive.read(spark, root, "client: a", "20240101", "20241231")
     assert(got.count() === 1)
     assert(got.select("client").distinct().as[String].collect().toSeq === Seq("client: a"))
+  }
+
+  test("mixed-client check reads date and client from escaped file paths") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("tri_mixed_esc").toString
+    def ev(ts: String) = Seq((1L, ts, 1.0))
+      .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
+    Archive.store(ev("2024-01-05 10:00:00"), root, "client: a")
+    // a second client only outside the range is not mixed
+    Archive.store(ev("2024-03-01 10:00:00"), root, "clientB")
+    assert(Archive.read(spark, root, "", "20240101", "20240131").count() === 1)
+    Archive.store(ev("2024-01-06 10:00:00"), root, "client: b")
+    val e = intercept[IllegalStateException](
+      Archive.read(spark, root, "", "20240101", "20240131"))
+    assert(e.getMessage.endsWith("mixed clients in archive range: client: a,client: b"),
+      e.getMessage)
+    assert(Archive.read(spark, root, "client: a", "20240101", "20240131").count() === 1)
+  }
+
+  test("a first record over 1 MiB infers its schema and reads back") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("tri_big").toString
+    val blob = Array.tabulate[Byte](2 << 20)(i => (i * 31).toByte)
+    val ev = Seq((1L, "2024-01-05 10:00:00", blob), (2L, "2024-01-05 11:00:00", Array[Byte](7)))
+      .toDF("event_id", "ts", "payload").withColumn("ts", to_timestamp($"ts"))
+      .coalesce(1)
+    Archive.store(ev, root, "c1")
+    val back = Archive.read(spark, root, "c1", "20240101", "20241231")
+      .orderBy("event_id").select("event_id", "payload").as[(Long, Array[Byte])].collect()
+    assert(back.map(_._1).toSeq === Seq(1L, 2L))
+    assert(java.util.Arrays.equals(back(0)._2, blob) && back(1)._2.toSeq === Seq[Byte](7))
   }
 
   test("tri works as a file stream source (readStream over the archive)") {
