@@ -84,6 +84,15 @@ object Tables {
       // cost is metaspace, not heap. (BENCH_NOTES "Round-11: q142's
       // in-suite inflation mechanized")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // the codegen cache is keyed by (task context classloader, source).
+      // With artifact isolation on (Spark's default) every
+      // writeStream.start() clones the session into a new artifact
+      // session, whose tasks run under a fresh classloader, so each
+      // streaming drain recompiled all of its generated classes (7 per
+      // 500-record trickle cycle, ~90 ms of janino per cycle). The engine
+      // adds no jars or artifacts, so isolation buys nothing here.
+      // (BENCH_NOTES "Streaming drains reuse compiled code")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       // local-disk IO without a chmod/readlink subprocess per file and
       // per checkpoint rename; same files, .crc checksums and permission

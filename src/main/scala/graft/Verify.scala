@@ -24,6 +24,9 @@ object Verify {
       // see Tables.session: 100-entry codegen cache thrashes at 180+
       // queries (the measured q142 in-suite JIT-cold mechanism)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // see Tables.session: per-query artifact sessions recompile every
+      // streaming query's generated code under a fresh classloader
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
     val spark = (if (master.startsWith("local-cluster"))
         builder.config("spark.executor.extraClassPath",

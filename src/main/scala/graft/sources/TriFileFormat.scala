@@ -32,25 +32,33 @@ class TriFileFormat extends FileFormat with DataSourceRegister with Serializable
 
   override def toString: String = "TRI"
 
-  /** Merged struct of the first record of up to 8 files: archives written
-    * by evolving producers carry different field sets per file, and the
-    * merged struct decodes all of them (missing fields null, unknown
-    * skipped). Each first record decodes straight off the snappy stream,
-    * so its size is unbounded, like any record the reader decodes.
+  /** Merged struct of the first record of up to 8 files that hold one:
+    * archives written by evolving producers carry different field sets per
+    * file, and the merged struct decodes all of them (missing fields null,
+    * unknown skipped). A file with no record (an empty frame's write leaves
+    * just the snappy stream header) is skipped. Each first record decodes
+    * straight off the snappy stream, so its size is unbounded, like any
+    * record the reader decodes.
     */
   override def inferSchema(sparkSession: SparkSession, options: Map[String, String],
                            files: Seq[FileStatus]): Option[StructType] = {
     val conf = sparkSession.sessionState.newHadoopConf()
-    val inferred = files.take(8).map { f =>
+    val inferred = files.iterator.flatMap { f =>
       val fs = f.getPath.getFileSystem(conf)
-      val in = new SnappyFramedInputStream(fs.open(f.getPath))
+      val in = new java.io.BufferedInputStream(
+        new SnappyFramedInputStream(fs.open(f.getPath)), 1 << 16)
       try {
-        MsgPackCodec.inferType(new java.io.BufferedInputStream(in, 1 << 16)) match {
-          case st: StructType => st
-          case other => StructType(Seq(StructField("value", other)))
+        in.mark(1)
+        if (in.read() < 0) None
+        else {
+          in.reset()
+          Some(MsgPackCodec.inferType(in) match {
+            case st: StructType => st
+            case other => StructType(Seq(StructField("value", other)))
+          })
         }
       } finally in.close()
-    }
+    }.take(8).toSeq
     inferred.reduceOption(mergeStructs)
   }
 

@@ -55,6 +55,39 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     assert(got.select("value").as[Double].collect().sorted.toSeq === Seq(1.5, 2.5))
   }
 
+  test("repeated store drains on one checkpoint reuse compiled code, not recompile it") {
+    import spark.implicits._
+    import graft.streaming.FakeKinesis
+    import org.apache.spark.metrics.source.CodegenMetrics
+    FakeKinesis.reset()
+    FakeKinesis.createStream("redrain", 2)
+    val p = new graft.streaming.StreamProducer
+    val root = Files.createTempDirectory("redrain_root").toString
+    val ckpt = Files.createTempDirectory("redrain_ckpt").toString
+    val decoded = spark.readStream.format("kinesis-graft").option("stream", "redrain").load()
+      .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
+      .select("r.event_id", "r.ts", "r.value")
+    // one drain of 40 fresh records; returns the classes compiled meanwhile
+    def drain(round: Int): Long = {
+      (1 to 40).foreach { i =>
+        val id = round * 1000L + i
+        p.put("redrain", s"k$i", Map("event_id" -> id, "ts" -> ts("2024-01-05 10:00:00"),
+          "value" -> id * 0.5))
+      }
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      StreamOps.startStore(decoded, root, "c", ckpt).awaitTermination()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    def ids = Archive.read(spark, root, "c", "20240105", "20240105")
+      .select("event_id").as[Long].collect().sorted.toSeq
+    drain(1) // compiles what no earlier query of this shape left in the cache
+    assert(ids === (1L to 40L).map(1000L + _))
+    // each later start() is a new query: its classes must come from the cache
+    assert(drain(2) === 0L)
+    assert(drain(3) === 0L)
+    assert(ids === (1 to 3).flatMap(r => (1L to 40L).map(r * 1000L + _)))
+  }
+
   test("watermarked tumbling window counts, late row beyond watermark dropped") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext

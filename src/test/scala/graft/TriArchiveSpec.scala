@@ -243,6 +243,17 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     assert(java.util.Arrays.equals(back(0)._2, blob) && back(1)._2.toSeq === Seq[Byte](7))
   }
 
+  test("a sampled file that holds no record is skipped by schema inference") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tri_empty").resolve("out").toString
+    // an empty frame writes a header-only .tri file (the snappy stream id)
+    Seq.empty[(Long, String)].toDF("id", "kind").coalesce(1).write.format("tri").save(dir)
+    Seq((1L, "a")).toDF("id", "kind").write.format("tri").mode("append").save(dir)
+    val back = spark.read.format("tri").load(dir)
+    assert(back.count() === 1)
+    assert(back.select("id", "kind").as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+  }
+
   test("tri works as a file stream source (readStream over the archive)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("tri_stream").resolve("in").toString
