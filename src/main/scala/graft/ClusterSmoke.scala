@@ -25,20 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ClusterSmoke {
   def main(args: Array[String]): Unit = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,4,4096]")
-    val classDir = sys.env.getOrElse("SPARK_GRAFT_CLASSDIR",
-      "/root/repo/target/scala-2.13/classes")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.executor.extraClassPath", classDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-cluster-smoke", "8", "local-cluster[2,4,4096]")
     import spark.implicits._
     var ok = true
     def check(name: String, cond: Boolean, detail: => String = ""): Unit = {

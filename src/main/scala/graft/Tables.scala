@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, lit, timestamp_micros, unix_micros}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Access to the engine's table layer.
   *
@@ -32,41 +34,59 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** `events` with its timestamp normalized: adds `ts_us` (microseconds
-    * since epoch, BIGINT) and rewrites `ts` as a microsecond TIMESTAMP.
-    * The driver has shipped this column as parquet TIMESTAMP(NANOS) (read
-    * as LongType under `spark.sql.legacy.parquet.nanosAsLong=true`) and as
-    * timestamp[us] without tz metadata (read as TIMESTAMP_NTZ) across
-    * testdata generations; all three arrivals funnel to the same
-    * (TIMESTAMP, ts_us) pair here. The NTZ→LTZ cast interprets the wall
-    * clock in the session time zone — every graft session pins UTC, so it
-    * is exactly the epoch the oracle's `epoch_us(ts)` computes.
+  /** `events` with its timestamp normalized by [[withEventTs]], plus
+    * `ts_us` (microseconds since epoch, BIGINT).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = table(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts_us", expr("ts div 1000"))
-          .withColumn("ts", timestamp_micros($"ts_us"))
-      case TimestampNTZType =>
-        raw.withColumn("ts", $"ts".cast(TimestampType))
-          .withColumn("ts_us", unix_micros($"ts"))
-      case _ =>
-        raw.withColumn("ts_us", unix_micros($"ts"))
-    }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    withEventTs(table(spark, dir, "events")).withColumn("ts_us", unix_micros(col("ts")))
+
+  /** The one event-time rule: `df` (a batch or streaming read of the raw
+    * events file) with `ts` rewritten as a microsecond TIMESTAMP. The
+    * driver has shipped this column as parquet TIMESTAMP(NANOS) (read as
+    * LongType under `spark.sql.legacy.parquet.nanosAsLong=true`), as
+    * timestamp[us] without tz metadata (read as TIMESTAMP_NTZ) and as a
+    * tz-aware timestamp across testdata generations; all three arrivals
+    * funnel to the same TIMESTAMP here. The NTZ→LTZ cast interprets the
+    * wall clock in the session time zone — every graft session pins UTC,
+    * so it is exactly the epoch the oracle's `epoch_us(ts)` computes.
+    */
+  def withEventTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+    case _ => df
   }
+
+  /** A `ts` literal of the raw events file's own type (the schema of
+    * `raw`) that [[withEventTs]] reads back as `us` microseconds since
+    * epoch — how a drain lifecycle writes a sentinel row next to the
+    * corpus.
+    */
+  def rawEventTsLit(raw: DataFrame, us: Long): Column = raw.schema("ts").dataType match {
+    case LongType => lit(us * 1000L) // nanos convention
+    case TimestampNTZType => timestamp_micros(lit(us)).cast(TimestampNTZType)
+    case _ => timestamp_micros(lit(us))
+  }
+
+  /** The one session builder, `local[cpus]` unless `SPARK_GRAFT_MASTER`
+    * names another master. */
+  def session(appName: String, cpus: String): SparkSession =
+    session(appName, cpus, s"local[$cpus]")
 
   /** Session tuned for the local[32] harness but with settings that hold on
     * a real cluster: AQE re-plans skew/shuffle at runtime, shuffle
     * partitions sized to cores (the driver overrides per-run), broadcast
     * threshold left at default so dimension tables broadcast.
+    *
+    * `SPARK_GRAFT_MASTER` overrides `defaultMaster`. Under a
+    * `local-cluster[n,cores,mem]` master (separate executor JVMs, the
+    * harness of tools/cluster_smoke.sh) the executors also need the
+    * compiled classes on their own class path: `SPARK_GRAFT_CLASSDIR`,
+    * by default the directory or jar this class was loaded from.
     */
-  def session(appName: String, cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+  def session(appName: String, cpus: String, defaultMaster: String): SparkSession = {
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster)
+    val builder = SparkSession.builder()
+      .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -99,7 +119,10 @@ object Tables {
       // bits (graft/io/LocalFs.scala)
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
-      .getOrCreate()
+    val spark = (if (master.startsWith("local-cluster"))
+        builder.config("spark.executor.extraClassPath", sys.env.getOrElse("SPARK_GRAFT_CLASSDIR",
+          new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath))
+      else builder).getOrCreate()
     // opt-in state-store provider for the streaming queries (q43/q47/
     // q59/q72): RocksDB keeps streaming state off-heap, which is how a
     // production cluster sizes stateful executors — the sf10 ladder

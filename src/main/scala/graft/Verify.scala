@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,30 +9,8 @@ object Verify {
     // SPARK_GRAFT_MASTER=local-cluster[2,4,4096] runs the whole dump in
     // multi-JVM mode (separate executor processes — same harness as
     // tools/cluster_smoke.sh), turning the oracle gate into a
-    // cluster-execution check; executors then need the compiled classes
-    // on their own classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 refuses by
-      // default; read as raw nanos and normalize in graft.operators.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Tables.session: 100-entry codegen cache thrashes at 180+
-      // queries (the measured q142 in-suite JIT-cold mechanism)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // see Tables.session: per-query artifact sessions recompile every
-      // streaming query's generated code under a fresh classloader
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-        builder.config("spark.executor.extraClassPath",
-          sys.env.getOrElse("SPARK_GRAFT_CLASSDIR",
-            "/root/repo/target/scala-2.13/classes"))
-      else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cluster-execution check (Tables.session)
+    val spark = Tables.session("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_SKIP: comma-separated query names to exclude at
     // stress SFs. q20 self-guards since round 5 (in-operator candidate

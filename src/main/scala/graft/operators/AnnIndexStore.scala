@@ -218,8 +218,7 @@ object AnnIndexStore {
     */
   def annIndexAppendAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val work = java.nio.file.Files.createTempDirectory("q188_annidx")
-    try {
+    graft.io.Scratch.withWorkDir("q188_annidx") { work =>
       val idxPath = work.resolve("idx").toString
       // Stage the audit's scratch artifact by REPLICATING the session's
       // memoized artifact (hardlinks; build+write priced once per corpus
@@ -269,10 +268,7 @@ object AnnIndexStore {
           $"c0" === $"c1" && $"k0" === $"k1", 1L).otherwise(0L))
           .as("n_code_matches"))
         .select($"n_base", $"n_appended", $"n_code_matches")
-      val rows = out.collect().toSeq // 1 row; break lineage off the temp dir
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      graft.streaming.StreamOps.deleteRecursively(work.toFile)
+      graft.io.Scratch.collected(out) // 1 row; break lineage off the temp dir
     }
   }
 
@@ -281,18 +277,15 @@ object AnnIndexStore {
     * path serves without rebuilding (that is the point) — but the
     * registered query keys its auto-managed path by corpus stamp so a
     * rewritten corpus triggers a rebuild instead of tripping the serve
-    * guard.
+    * guard. The auto-built artifact is a [[graft.io.Scratch.cached]]
+    * directory, deleted with the scratch root on JVM exit.
     */
-  private def artifactPath(s: SparkSession, dir: String, nCells: Int,
-      iters: Int, nSub: Int, nCodes: Int, pqIters: Int): String = {
-    val key = s"${s.sparkContext.applicationId}|$dir|${OpCache.dirStamp(dir)}|" +
-      s"$nCells|$iters|$nSub|$nCodes|$pqIters"
-    builtPaths.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_annidx").toString
-      write(s, dir, p, nCells, iters, nSub, nCodes, pqIters)
-      p
-    })
-  }
+  private[graft] def artifactPath(s: SparkSession, dir: String, nCells: Int,
+      iters: Int, nSub: Int, nCodes: Int, pqIters: Int): String =
+    graft.io.Scratch.cached(s"annidx|${s.sparkContext.applicationId}|$dir|" +
+        s"${OpCache.dirStamp(dir)}|$nCells|$iters|$nSub|$nCodes|$pqIters", "annidx") { p =>
+      write(s, dir, p.toString, nCells, iters, nSub, nCodes, pqIters)
+    }.toString
 
   /** Replicates an artifact tree: real directories, HARDLINKED files
     * (same bytes, zero copy; falls back to a byte copy across devices or
@@ -321,10 +314,7 @@ object AnnIndexStore {
     } finally st.close()
   }
 
-  private val builtPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: forget auto-built artifact paths (files are left on
-    * disk; tmp cleanup owns them). */
-  private[graft] def clearBuiltPaths(): Unit = builtPaths.clear()
+  /** Test hook: forget the auto-built artifacts and delete their files
+    * (the next q185/q186/q188 call rebuilds). */
+  private[graft] def clearBuiltPaths(): Unit = graft.io.Scratch.forget("annidx|")
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.{events, table}
+import graft.io.Scratch
 
 /** Event-stream operators: the reference's query surface re-expressed over
   * the `events` table (which stands in for the Kinesis stream / S3 archive
@@ -16,11 +17,6 @@ import graft.Tables.{events, table}
   * engines.
   */
 object EventOps {
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 
   /** The reference `cat` query (`/root/reference/triton.go:344-367`,
     * `/root/reference/triton/store_reader.go:54-111`): scan an archive date
@@ -248,8 +244,7 @@ object EventOps {
     import org.apache.spark.sql.types._
     val ev = events(s, dir)
       .select($"event_id", $"ts_us", $"user_id", $"event_type")
-    val work = java.nio.file.Files.createTempDirectory("q100_jsonl")
-    try {
+    Scratch.withWorkDir("q100_jsonl") { work =>
       val lines = ev
         .select($"event_id",
           to_json(struct($"event_id", $"ts_us", $"user_id", $"event_type")).as("line"))
@@ -276,15 +271,7 @@ object EventOps {
         .orderBy($"kind")
       // bounded: one row per event type + the dead-letter row; collect
       // so the returned plan does not reference the deleted temp dir
-      val rows = rolled.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"kind")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(work.toFile)
+      Scratch.collected(rolled).orderBy($"kind")
     }
   }
 
@@ -446,8 +433,7 @@ object EventOps {
     val schema = StructType(Seq(
       StructField("kind", StringType), StructField("n_rows", LongType),
       StructField("sum_cents_all", LongType), StructField("day_span", LongType)))
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-      .orderBy($"kind")
+    Scratch.local(s, rows, schema).orderBy($"kind")
   }
 
   /** Custom typed UDAF in action: exact top-k (value desc, id asc) per
@@ -506,7 +492,7 @@ object EventOps {
     * bounded-driver pattern as q47's sentinel.
     *
     * Shared-filesystem assumption: the scratch archive lives under a
-    * driver-local `Files.createTempDirectory` that executors write and
+    * driver-local [[Scratch.withWorkDir]] that executors write and
     * read — valid on local / local-cluster (one host) where this bench
     * fixture runs, NOT on a multi-node master. A production compaction
     * points [[graft.sources.Archive.compact]] at a shared root (HDFS /
@@ -520,8 +506,7 @@ object EventOps {
     val cutoff = minUs + 5L * 86400L * 1000000L
     val slice = ev.where($"ts_us" < cutoff)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val work = java.nio.file.Files.createTempDirectory("q84_compact")
-    try {
+    Scratch.withWorkDir("q84_compact") { work =>
       val root = work.resolve("archive").toString
       graft.sources.Archive.store(slice, root, "graft", maxRecordsPerFile = 512)
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -558,14 +543,7 @@ object EventOps {
           max(unix_micros($"ts")).as("max_ts_us"),
           min($"event_id").as("min_event_id"))
         .orderBy($"date")
-      val rows = rolled.collect().toSeq // bounded: one row per day in the slice
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"date")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(work.toFile)
+      Scratch.collected(rolled).orderBy($"date") // bounded: one row per day in the slice
     }
   }
 
@@ -704,27 +682,16 @@ object EventOps {
   /** One pinned `.tri` archive per source dataset per JVM: the archive is
     * written on first use and reused by later invocations (the bench's
     * steady pass then times read+decode, not a repeated write), keyed by
-    * the source directory so different scale factors never collide. The
-    * whole cache directory is removed on JVM exit — earlier rounds leaked
-    * a UUID-named archive into tmpdir per invocation.
+    * the source directory so different scale factors never collide. It
+    * lives in a [[Scratch.cached]] directory, removed on JVM exit.
     */
-  private val triArchives = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def triArchiveFor(s: SparkSession, dir: String): String =
-    triArchives.computeIfAbsent(dir, { d =>
-      import s.implicits._
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_tri_cache_${java.util.UUID.randomUUID()}")
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(base)
-      }
-      val root = new java.io.File(base, "archive").getAbsolutePath
-      val ev = events(s, d).select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      graft.sources.Archive.store(ev, root, "graft")
-      root
-    })
+  private def triArchiveFor(s: SparkSession, dir: String): String = {
+    import s.implicits._
+    Scratch.cached(s"tri|$dir", "tri_cache") { base =>
+      val ev = events(s, dir).select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      graft.sources.Archive.store(ev, base.resolve("archive").toString, "graft")
+    }.resolve("archive").toString
+  }
 
   /** msgpack codec round-trip with dead-letter semantics: encode the record
     * struct with `to_msgpack`, corrupt every 50th payload (0xc1 — a tag the
@@ -797,8 +764,7 @@ object EventOps {
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = events(s, dir).select($"event_id", $"ts_us", $"user_id", $"event_type")
-    val work = java.nio.file.Files.createTempDirectory("q112_orc")
-    try {
+    Scratch.withWorkDir("q112_orc") { work =>
       val out = work.resolve("orc").toString
       ev.write.orc(out)
       val report = s.read.orc(out)
@@ -807,10 +773,8 @@ object EventOps {
           min($"ts_us").as("min_ts_us"), max($"ts_us").as("max_ts_us"))
       // bounded: one row per event type — collect so the corpus-sized ORC
       // copy can be deleted under the returned plan (q100's discipline)
-      val rows = report.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), report.schema)
-        .orderBy($"event_type")
-    } finally deleteRecursively(work.toFile)
+      Scratch.collected(report).orderBy($"event_type")
+    }
   }
 
   /** CSV ingest with TYPE-level dead-lettering (q113): next to q100's
@@ -827,8 +791,7 @@ object EventOps {
     import s.implicits._
     import org.apache.spark.sql.types._
     val ev = events(s, dir).select($"event_id", $"ts_us", $"user_id", $"event_type")
-    val work = java.nio.file.Files.createTempDirectory("q113_csv")
-    try {
+    Scratch.withWorkDir("q113_csv") { work =>
       val out = work.resolve("csv").toString
       ev.select(concat_ws(",", $"event_id", $"ts_us",
           when($"event_id" % 41 === 0, lit("not_a_number"))
@@ -855,10 +818,8 @@ object EventOps {
           max(when($"_corrupt".isNull, $"ts_us")).as("max_ts_us"))
       // bounded: types + the dead row — collect so the corpus-sized CSV
       // copy can be deleted on every exit path (q100's discipline)
-      val rows = rolled.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"kind")
-    } finally deleteRecursively(work.toFile)
+      Scratch.collected(rolled).orderBy($"kind")
+    }
   }
 
   /** Latest-state snapshot from the event log (q114): the CDC-read
@@ -900,8 +861,7 @@ object EventOps {
     val ev = events(s, dir)
       .select($"event_id", $"user_id", $"event_type",
         floor($"value" * 100 + 0.5).cast("long").as("cents"))
-    val work = java.nio.file.Files.createTempDirectory("q115_evo")
-    try {
+    Scratch.withWorkDir("q115_evo") { work =>
       val root = work.resolve("data")
       ev.where($"event_id" % 2 === 0)
         .select($"event_id", $"user_id", $"event_type")
@@ -917,10 +877,8 @@ object EventOps {
           sum($"cents").as("sum_cents"))
       // bounded: one row per event type — collect so the corpus-sized
       // v1/v2 copies can be deleted on every exit path
-      val rows = rolled.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"event_type")
-    } finally deleteRecursively(work.toFile)
+      Scratch.collected(rolled).orderBy($"event_type")
+    }
   }
 
   /** DAU/WAU stickiness (q106): per day, distinct active users that day
@@ -1888,14 +1846,14 @@ object EventOps {
         // drop the (now empty) write-stage dirs so linkInto sees only
         // the ordered parquet set
         Seq("w_ontime", "stage_a_mid", "stage_b_late", "stage_c_end")
-          .foreach(d => graft.streaming.StreamOps
-            .deleteRecursively(root.resolve(d).toFile))
+          .foreach(d => Scratch.delete(root.resolve(d)))
       } finally pool.shutdownNow(): Unit
     }
-    val work = java.nio.file.Files.createTempDirectory("q179_late")
-    try {
-      val src = work.resolve("src")
-      java.nio.file.Files.createDirectories(src)
+    // the work dir holds symlinks into the staging root + sink +
+    // checkpoint; Scratch.delete never traverses through a link (staged
+    // files are shared across passes)
+    Scratch.withWorkDir("q179_late") { work =>
+      val src = java.nio.file.Files.createDirectories(work.resolve("src"))
       graft.streaming.StreamOps.StageCache.linkInto(stagedSrc, src)
       val nGroup = math.max(1, stagedSrc.toFile.listFiles().count(f =>
         f.getName.endsWith(".parquet") && !f.getName.startsWith("zz_")))
@@ -1920,14 +1878,8 @@ object EventOps {
         .select($"event_type", $"n_total",
           coalesce($"n_survived", lit(0L)).as("n_survived"),
           ($"n_total" - coalesce($"n_survived", lit(0L))).as("n_late_dropped"))
-      val rows = rep.collect() // types-bounded; decouples from work-dir cleanup
-      s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), rep.schema)
-        .orderBy($"event_type")
-    } finally {
-      // the work dir holds symlinks into the staging root + sink +
-      // checkpoint; never traverse through a link (staged files are
-      // shared across passes)
-      graft.streaming.StreamOps.deleteRecursively(work.toFile)
+      // types-bounded; decouples from work-dir cleanup
+      Scratch.collected(rep).orderBy($"event_type")
     }
   }
 }

@@ -295,38 +295,32 @@ object Pipeline {
     * 10^12 docs (ANSI-mode safe).
     *
     * `keepDir` (tests) writes to the given directory and leaves it on
-    * disk; the default writes to a temp dir and cleans up after the
-    * manifest materializes.
+    * disk; the default writes to a [[graft.io.Scratch.withWorkDir]] and
+    * collects the manifest before the directory goes.
     */
   def trainingShards(s: SparkSession, dir: String, nShards: Int = 32,
                      keepDir: Option[String] = None): DataFrame = {
     import s.implicits._
     val docs = table(s, dir, "documents")
       .withColumn("shard", expr("hash60(cast(doc_id as string))") % nShards)
-    val work = keepDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("q78_shards").toString)
-    val outDir = s"$work/shards"
-    docs.repartition(nShards, $"shard")
-      .write.partitionBy("shard").mode("overwrite").parquet(outDir)
-    val stats = s.read.parquet(outDir)
-      .groupBy($"shard".cast("long").as("shard"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(size(split($"text", " "))).cast("long").as("n_tokens"),
-        min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"),
-        sum(expr("hash60(text) % 1000000007")).as("content_sum"))
-      .orderBy($"shard")
-    if (keepDir.isDefined) stats
-    else {
-      // materialize the manifest off the files, then drop them
-      val rows = stats.collect().toSeq
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(work))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), stats.schema)
+    def manifest(work: String): DataFrame = {
+      val outDir = s"$work/shards"
+      docs.repartition(nShards, $"shard")
+        .write.partitionBy("shard").mode("overwrite").parquet(outDir)
+      s.read.parquet(outDir)
+        .groupBy($"shard".cast("long").as("shard"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(size(split($"text", " "))).cast("long").as("n_tokens"),
+          min($"doc_id").as("min_doc"), max($"doc_id").as("max_doc"),
+          sum(expr("hash60(text) % 1000000007")).as("content_sum"))
         .orderBy($"shard")
+    }
+    keepDir match {
+      case Some(d) => manifest(d)
+      case None => graft.io.Scratch.withWorkDir("q78_shards") { work =>
+        graft.io.Scratch.collected(manifest(work.toString)).orderBy($"shard")
+      }
     }
   }
 

@@ -898,7 +898,7 @@ object Relational {
         .join(s.table(tl), $"o_orderkey" === $"l_orderkey")
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n_items"), sum($"cents").as("revenue_cents"))
-      val rows = joined.collect().toSeq // bounded: one row per priority
+      val rows = graft.io.Scratch.collected(joined) // bounded: one row per priority
       // typed plan traversal, not plan-string substring matching: a
       // shuffle spelled differently (rangepartitioning, an operator
       // rename in a Spark upgrade) must still count, or the pinned
@@ -921,8 +921,7 @@ object Relational {
           }
           n
         }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), joined.schema)
-        .withColumn("n_join_exchanges", lit(exchanges))
+      rows.withColumn("n_join_exchanges", lit(exchanges))
         .orderBy($"o_orderpriority")
     } finally {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
@@ -952,7 +951,7 @@ object Relational {
       .groupBy($"r_name")
       .agg(count(lit(1)).as("n_customers"),
         sum(expr("cast(floor(c_acctbal * 100 + 0.5) as bigint)")).as("acctbal_cents"))
-    val rows = joined.collect().toSeq // bounded: one row per region
+    val rows = graft.io.Scratch.collected(joined) // bounded: one row per region
     // typed node counts (see bucketedJoinAudit): the audit survives plan
     // string renames across Spark upgrades
     val nodes = planNodes(joined.queryExecution.executedPlan)
@@ -960,8 +959,7 @@ object Relational {
       _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]).toLong
     val nSmj = nodes.count(
       _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]).toLong
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), joined.schema)
-      .withColumn("n_broadcast_joins", lit(nBhj))
+    rows.withColumn("n_broadcast_joins", lit(nBhj))
       .withColumn("n_sort_merge_joins", lit(nSmj))
       .orderBy($"r_name")
   }

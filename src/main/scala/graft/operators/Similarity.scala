@@ -47,8 +47,8 @@ object Similarity {
     // dir's documents table) — release them with the rest
     TextAnalysis.clearBpeRankCache()
     // staged derived stream inputs (sentinels, q104 dup slice, q111/q130
-    // fixed-file-count copies) are corpus-derived too — forget them with
-    // the Dataset memos (files die with the JVM's staging root)
+    // fixed-file-count copies) are corpus-derived too — forget and delete
+    // them with the Dataset memos
     graft.streaming.StreamOps.StageCache.clear()
   }
 

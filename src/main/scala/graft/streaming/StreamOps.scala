@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.Tables.{rawEventTsLit, withEventTs}
+import graft.io.Scratch
+
 /** Streaming operator surface beyond the reference (which is
   * processing-time only — `/root/reference/triton/store.go:109`): event-time
   * windows with watermarks, session windows, and custom keyed state via
@@ -52,6 +55,22 @@ object StreamOps {
     val prev = s.conf.get(ndKey)
     s.conf.set(ndKey, "false")
     try withStatePartitions(s, n)(body) finally s.conf.set(ndKey, prev)
+  }
+
+  /** Runs `body` with the RocksDB state-store provider, restoring the
+    * previous provider after. The provider conf is query-start-scoped, so
+    * the rest of the suite keeps the default in-memory store (the measured
+    * winner at the suite's state sizes — see the state-store probe in
+    * BENCH_NOTES).
+    */
+  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(p) => s.conf.set(key, p)
+      case None => s.conf.unset(key)
+    }
   }
 
   /** State partitions sized to the SOURCE VOLUME — the production rule
@@ -154,8 +173,7 @@ object StreamOps {
   def streamDedupWithinWatermark(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val work = java.nio.file.Files.createTempDirectory("q104_dedup")
-    try {
+    Scratch.withWorkDir("q104_dedup") { work =>
       // stage the original corpus by SYMLINK (zero data bytes move) and
       // WRITE only the injected-duplicate slice (1/7 of the corpus) next
       // to it — the previous shape wrote original+duplicates (8/7 of the
@@ -164,9 +182,7 @@ object StreamOps {
       // so the deduped sink and its per-type report are unchanged; all
       // files land in the one AvailableNow data batch (no
       // maxFilesPerTrigger), so batch composition cannot shift either.
-      val srcDir = work.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      stageEventsFile(s, dir, srcDir)
+      val srcDir = stagedEventsDir(dir, work)
       // the duplicate slice is a pure function of the corpus: build it
       // once per (session, corpus stamp) and symlink it into each run's
       // work dir — the per-pass slice WRITE was staging fixed cost
@@ -183,22 +199,13 @@ object StreamOps {
             }
           }
         } finally st.close()
-        deleteRecursively(p.resolve("d").toFile)
+        Scratch.delete(p.resolve("d"))
       }
       StageCache.linkInto(dupStaged, srcDir)
       val out = work.resolve("out").toString
-      // same ts normalization as graft.Tables.events (nanos-long or NTZ)
-      val stream0 = s.readStream.schema(raw.schema)
-        .parquet(s"${srcDir.toString}/*.parquet")
-      val streamTs = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          stream0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          stream0.withColumn("ts",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => stream0
-      }
-      val stream = streamTs.select($"event_id", $"ts", $"user_id", $"event_type")
+      val stream = withEventTs(s.readStream.schema(raw.schema)
+          .parquet(s"${srcDir.toString}/*.parquet"))
+        .select($"event_id", $"ts", $"user_id", $"event_type")
       val q = stream
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("event_id")
@@ -212,15 +219,8 @@ object StreamOps {
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), sum($"user_id").as("sum_user"),
           max(unix_micros($"ts")).as("max_ts_us"))
-      val rows = report.collect().toSeq // bounded: one row per event type
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), report.schema)
+      Scratch.collected(report) // bounded: one row per event type
         .orderBy($"event_type")
-    } finally {
-      // the work dir holds the corpus symlink, the duplicate slice, the
-      // sink and the checkpoint; the report above is types-bounded and
-      // already collected, so the q47 cleanup discipline applies on
-      // every exit path (deleteRecursively never follows the symlink)
-      deleteRecursively(work.toFile)
     }
   }
 
@@ -253,10 +253,8 @@ object StreamOps {
     import s.implicits._
     val ev = graft.Tables.events(s, dir)
       .select($"ts", $"event_type", $"user_id")
-    val work = java.nio.file.Files.createTempDirectory("q111_view")
-    try {
-      val srcDir = work.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
+    Scratch.withWorkDir("q111_view") { work =>
+      val srcDir = java.nio.file.Files.createDirectories(work.resolve("src"))
       // 2 files = 2 micro-batches: the spec's pinned minimum (> 1) that
       // still exercises the cross-batch merge; each extra batch is pure
       // source-listing + offset-log + parquet-version fixed cost. The
@@ -299,13 +297,8 @@ object StreamOps {
       q.awaitTermination()
       val path = current.getOrElse(sys.error("q111: stream produced no batches"))
       val view = s.read.parquet(path).select($"event_type", $"n", $"sum_user")
-      val rows = view.collect().toSeq // bounded: one row per event type
-      (s.createDataFrame(s.sparkContext.parallelize(rows, 1), view.schema)
-        .orderBy($"event_type"), nBatches.get())
-    } finally {
-      // work dir holds a corpus-sized source copy + every view version;
-      // the final view is types-bounded and collected above
-      deleteRecursively(work.toFile)
+      // bounded: one row per event type
+      (Scratch.collected(view).orderBy($"event_type"), nBatches.get())
     }
   }
 
@@ -324,15 +317,7 @@ object StreamOps {
     import s.implicits._
     val path = s"$dir/events.parquet"
     val raw = s.read.parquet(path)
-    val stream0 = s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet")
-    val stream = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream0.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => stream0
-    }
+    val stream = withEventTs(s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet"))
     val dim = graft.Tables.table(s, dir, "customer")
       .select($"c_custkey", $"c_mktsegment")
     val name = s"q119_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -345,12 +330,11 @@ object StreamOps {
       .format("memory").queryName(name)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    val sink = s.table(name).select($"c_mktsegment", $"n", $"sum_cents")
-    val rows = sink.collect().toSeq
-    s.catalog.dropTempView(name)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), sink.schema)
-      .orderBy($"c_mktsegment")
+    try {
+      q.awaitTermination()
+      Scratch.collected(s.table(name).select($"c_mktsegment", $"n", $"sum_cents"))
+        .orderBy($"c_mktsegment")
+    } finally s.catalog.dropTempView(name)
   }
 
   /** Exactly-once streaming upsert into a JDBC store (q167): the
@@ -578,29 +562,20 @@ object StreamOps {
     // the source treat the file itself as basePath and reject it); the
     // [e] character class matches ONLY events.parquet — the batch/oracle
     // side's exact input — not e.g. an events_backup.parquet sibling
-    val stream0 = s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet")
-    // same ts normalization as graft.Tables.events (nanos-long or NTZ)
-    val stream = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream0.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => stream0
-    }
+    val stream = withEventTs(s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet"))
     val name = s"q43_hourly_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = tumblingCounts(stream)
       .writeStream.outputMode(OutputMode.Complete)
       .format("memory").queryName(name)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    val sink = s.table(name)
-      .select(unix_seconds(col("window_start")).as("window_epoch"), col("event_type"), col("n"))
-    val rows = sink.collect().toSeq
-    s.catalog.dropTempView(name)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), sink.schema)
-      .orderBy($"window_epoch", $"event_type")
+    // the memory sink's temp view goes on every exit path
+    try {
+      q.awaitTermination()
+      Scratch.collected(s.table(name).select(
+          unix_seconds(col("window_start")).as("window_epoch"), col("event_type"), col("n")))
+        .orderBy($"window_epoch", $"event_type")
+    } finally s.catalog.dropTempView(name)
   }
 
   /** The PRODUCTION shape of [[hourlyCountsStreamed]], under the same
@@ -623,60 +598,35 @@ object StreamOps {
   def hourlyCountsStreamedAppend(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsIsNanosLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tsIsNtz =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType
-    val work = java.nio.file.Files.createTempDirectory("q47_append")
-    val srcDir = work.resolve("src"); java.nio.file.Files.createDirectories(srcDir)
-    stageEventsFile(s, dir, srcDir)
-    // sentinel: same schema as the input file, event time 2 h past max —
-    // far beyond the last real window end + the 10 min watermark delay.
-    // A pure function of the corpus (its max ts), so built once per
-    // (session, corpus stamp) — the max-ts scan + the tiny write were a
-    // per-pass staging tax — and symlinked into each run's work dir
-    val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q47sent") { p =>
-      val maxTs = raw.agg(max(col("ts"))).head.get(0)
-      val sentinel =
-        if (tsIsNanosLong)
-          raw.limit(1).withColumn("ts", lit(maxTs.asInstanceOf[Long] + 7200L * 1000000000L))
-        else if (tsIsNtz)
-          // NTZ collects as LocalDateTime; the literal round-trips as NTZ so
-          // the sentinel file's schema matches the copied input file's
-          raw.limit(1).withColumn("ts",
-            lit(maxTs.asInstanceOf[java.time.LocalDateTime].plusHours(2)))
-        else
-          raw.limit(1).withColumn("ts",
-            lit(maxTs.asInstanceOf[java.sql.Timestamp].getTime / 1000 + 7200L).cast("timestamp"))
-      StageCache.writeOne(sentinel.withColumn("event_type", lit("__sentinel")),
-        p, "sentinel.parquet")
+    Scratch.withWorkDir("q47_append") { work =>
+      val srcDir = stagedEventsDir(dir, work)
+      // sentinel: same schema as the input file, event time 2 h past max —
+      // far beyond the last real window end + the 10 min watermark delay.
+      // A pure function of the corpus (its max ts), so built once per
+      // (session, corpus stamp) — the max-ts scan + the tiny write were a
+      // per-pass staging tax — and symlinked into each run's work dir
+      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q47sent") { p =>
+        StageCache.writeOne(raw.limit(1)
+            .withColumn("ts", rawEventTsLit(raw, maxEventUs(s, dir) + 7200L * 1000000L))
+            .withColumn("event_type", lit("__sentinel")),
+          p, "sentinel.parquet")
+      }
+      StageCache.linkInto(sentStaged, srcDir)
+      val stream = withEventTs(
+        s.readStream.schema(raw.schema).parquet(s"${srcDir.toString}/*.parquet"))
+      val outDir = work.resolve("out").toString
+      val q = tumblingCounts(stream)
+        .writeStream.outputMode(OutputMode.Append)
+        .format("parquet").option("path", outDir)
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      Scratch.collected(s.read.parquet(outDir)
+          .where(col("event_type") =!= "__sentinel")
+          .select(unix_seconds(col("window_start")).as("window_epoch"), col("event_type"), col("n")))
+        .orderBy($"window_epoch", $"event_type")
     }
-    StageCache.linkInto(sentStaged, srcDir)
-
-    val stream0 = s.readStream.schema(raw.schema).parquet(s"${srcDir.toString}/*.parquet")
-    val stream =
-      if (tsIsNanosLong) stream0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else if (tsIsNtz) stream0.withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      else stream0
-    val outDir = work.resolve("out").toString
-    val q = tumblingCounts(stream)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("parquet").option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sink = s.read.parquet(outDir)
-      .where(col("event_type") =!= "__sentinel")
-      .select(unix_seconds(col("window_start")).as("window_epoch"), col("event_type"), col("n"))
-    val rows = sink.collect().toSeq
-    // the work dir holds a dataset-sized input copy + checkpoint + sink;
-    // everything needed is in `rows` now — delete it, or repeated runs
-    // (Bench executes q47 five times) leak a copy of the corpus each
-    deleteRecursively(work.toFile)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), sink.schema)
-      .orderBy($"window_epoch", $"event_type")
   }
 
   /** Streaming SESSION windows under the BATCH oracle (q72 — the q47
@@ -699,55 +649,35 @@ object StreamOps {
   def sessionizeStreamed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsIsNanosLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tsIsNtz =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType
-    val work = java.nio.file.Files.createTempDirectory("q72_sessions")
-    val srcDir = work.resolve("src"); java.nio.file.Files.createDirectories(srcDir)
-    stageEventsFile(s, dir, srcDir)
-    // corpus-derived sentinel: built once per (session, corpus stamp),
-    // symlinked per run (q47 discipline)
-    val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q72sent") { p =>
-      val maxTs = raw.agg(max(col("ts"))).head.get(0)
-      val sentinel0 =
-        if (tsIsNanosLong)
-          raw.limit(1).withColumn("ts", lit(maxTs.asInstanceOf[Long] + 7200L * 1000000000L))
-        else if (tsIsNtz)
-          raw.limit(1).withColumn("ts",
-            lit(maxTs.asInstanceOf[java.time.LocalDateTime].plusHours(2)))
-        else
-          raw.limit(1).withColumn("ts",
-            lit(maxTs.asInstanceOf[java.sql.Timestamp].getTime / 1000 + 7200L).cast("timestamp"))
-      StageCache.writeOne(sentinel0.withColumn("user_id", lit(-1L)),
-        p, "sentinel.parquet")
+    Scratch.withWorkDir("q72_sessions") { work =>
+      val srcDir = stagedEventsDir(dir, work)
+      // corpus-derived sentinel: built once per (session, corpus stamp),
+      // symlinked per run (q47 discipline)
+      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q72sent") { p =>
+        StageCache.writeOne(raw.limit(1)
+            .withColumn("ts", rawEventTsLit(raw, maxEventUs(s, dir) + 7200L * 1000000L))
+            .withColumn("user_id", lit(-1L)),
+          p, "sentinel.parquet")
+      }
+      StageCache.linkInto(sentStaged, srcDir)
+      val stream = withEventTs(
+        s.readStream.schema(raw.schema).parquet(s"${srcDir.toString}/*.parquet"))
+      val outDir = work.resolve("out").toString
+      val q = sessionCounts(stream)
+        .writeStream.outputMode(OutputMode.Append)
+        .format("parquet").option("path", outDir)
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // the sink holds one row per closed session — per-user rollup is a
+      // tiny batch aggregate over it, same shape as q32's second groupBy
+      Scratch.collected(s.read.parquet(outDir)
+          .where(col("user_id") =!= -1L)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n_sessions"), sum(col("n_in_session")).as("n_events")))
+        .orderBy($"user_id")
     }
-    StageCache.linkInto(sentStaged, srcDir)
-
-    val stream0 = s.readStream.schema(raw.schema).parquet(s"${srcDir.toString}/*.parquet")
-    val stream =
-      if (tsIsNanosLong) stream0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else if (tsIsNtz) stream0.withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      else stream0
-    val outDir = work.resolve("out").toString
-    val q = sessionCounts(stream)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("parquet").option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // the sink holds one row per closed session — per-user rollup is a
-    // tiny batch aggregate over it, same shape as q32's second groupBy
-    val sink = s.read.parquet(outDir)
-      .where(col("user_id") =!= -1L)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_sessions"), sum(col("n_in_session")).as("n_events"))
-    val rows = sink.collect().toSeq
-    deleteRecursively(work.toFile)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), sink.schema)
-      .orderBy($"user_id")
   }
 
   /** The streaming near-dup detector under the BATCH oracle (q59 — the
@@ -792,8 +722,9 @@ object StreamOps {
       // detector's TTL semantics are exercised separately by its spec
       .withColumn("ts", timestamp_seconds(lit(1700000000L)))
       .select(col("doc_id"), col("ts"), col("text"))
-    val work = java.nio.file.Files.createTempDirectory("q59_stream")
-    try {
+    // the work dir holds a corpus-scale candidate sink + checkpoint; the
+    // decisions are materialized via localCheckpoint before it goes
+    Scratch.withWorkDir("q59_stream") { work =>
     val outDir = work.resolve("out").toString
     // the hash-equality contract with the batch screen holds only if NO
     // band bucket hits the detector's state cap (overflow docs stop
@@ -841,12 +772,6 @@ object StreamOps {
     graft.operators.TextDedup
       .decideIncoming(s, dir, cand, threshold, mod, rem)
       .localCheckpoint(true)
-    } finally {
-      // the work dir holds a corpus-scale candidate sink + checkpoint;
-      // delete it on EVERY path (a failed stream or decision job must
-      // not leave it behind), which is safe because the success path
-      // materialized the decisions via localCheckpoint above
-      deleteRecursively(work.toFile)
     }
   }
 
@@ -877,10 +802,9 @@ object StreamOps {
     val raw = s.read.parquet(s"$dir/documents.parquet")
     // [d] glob: same single-file stream addressing trick as q43/q47/q59
     val stream = s.readStream.schema(raw.schema).parquet(s"$dir/[d]ocuments.parquet")
-    val work = java.nio.file.Files.createTempDirectory("q83_gate")
-    val passDir = work.resolve("pass").toString
-    val failDir = work.resolve("fail").toString
-    try {
+    Scratch.withWorkDir("q83_gate") { work =>
+      val passDir = work.resolve("pass").toString
+      val failDir = work.resolve("fail").toString
       val q = graft.operators.TextAnalysis.gateFlags(stream)
         .writeStream
         .option("checkpointLocation", work.resolve("ckpt").toString)
@@ -932,10 +856,8 @@ object StreamOps {
           sum(when($"f_ttr", 1L).otherwise(0L)).as("n_ttr"),
           sum(when($"f_stop", 1L).otherwise(0L)).as("n_stop"),
           sum(when($"routed_pass" =!= $"pass", 1L).otherwise(0L)).as("n_misrouted"))
-      val rows = rollup.collect().toSeq // bounded: one row per source
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rollup.schema)
-        .orderBy($"source")
-    } finally deleteRecursively(work.toFile)
+      Scratch.collected(rollup).orderBy($"source") // bounded: one row per source
+    }
   }
 
   /** Spark 4 `transformWithState` under the BATCH oracle (q91): the
@@ -957,43 +879,24 @@ object StreamOps {
   def runningCountsStreamed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsIsNanosLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tsIsNtz =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType
-    val stream0 = s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet")
-    val tsUs =
-      if (tsIsNanosLong) expr("ts div 1000")
-      else if (tsIsNtz) unix_micros(col("ts").cast("timestamp"))
-      else unix_micros(col("ts"))
-    val ds = stream0.select(col("user_id").cast("long"), tsUs.cast("long"))
+    val ds = withEventTs(s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet"))
+      .select(col("user_id").cast("long"), unix_micros(col("ts")).cast("long"))
       .as[(Long, Long)]
-    val work = java.nio.file.Files.createTempDirectory("q91_tws")
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(confKey)
-    try {
-      s.conf.set(confKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = runningUserCountsTws(s, ds).toDF("user_id", "n", "last_us")
-        .writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .format("parquet").option("path", work.resolve("out").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val rolled = s.read.parquet(work.resolve("out").toString)
-        .groupBy($"user_id")
-        .agg(max($"n").as("n_events"), max($"last_us").as("last_us"))
-        .orderBy($"user_id")
-      val rows = rolled.collect().toSeq // bounded: one row per user
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"user_id")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(confKey, p)
-        case None => s.conf.unset(confKey)
+    Scratch.withWorkDir("q91_tws") { work =>
+      withRocksDbState(s) {
+        val q = runningUserCountsTws(s, ds).toDF("user_id", "n", "last_us")
+          .writeStream
+          .option("checkpointLocation", work.resolve("ckpt").toString)
+          .format("parquet").option("path", work.resolve("out").toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        val rolled = s.read.parquet(work.resolve("out").toString)
+          .groupBy($"user_id")
+          .agg(max($"n").as("n_events"), max($"last_us").as("last_us"))
+          .orderBy($"user_id")
+        Scratch.collected(rolled).orderBy($"user_id") // bounded: one row per user
       }
-      deleteRecursively(work.toFile)
     }
   }
 
@@ -1012,24 +915,16 @@ object StreamOps {
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsIsNanosLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tsIsNtz =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType
     // one streaming source, two filtered sides — a stream SELF-join:
     // Spark still materializes join state for both sides, but file
     // listing/offset tracking happens once instead of twice (identical
     // output to two independent readStream handles; within box noise at
     // this scale, strictly less source work at any scale)
-    val stream0 = s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet")
-    def side(eventType: String, alias: String): DataFrame = {
-      val ts =
-        if (tsIsNanosLong) timestamp_micros(expr("ts div 1000"))
-        else if (tsIsNtz) col("ts").cast("timestamp")
-        else col("ts")
+    val stream0 = withEventTs(s.readStream.schema(raw.schema).parquet(s"$dir/[e]vents.parquet"))
+    def side(eventType: String, alias: String): DataFrame =
       stream0.where(col("event_type") === eventType)
         .select(col("user_id").cast("long").as(s"${alias}_user"),
-          ts.as(s"${alias}_ts"))
+          col("ts").as(s"${alias}_ts"))
         // watermark must COVER the 1-hour join range: with a narrower
         // delay (say 10 min), a multi-batch run (maxFilesPerTrigger,
         // many input files under AvailableNow) could evict click state
@@ -1037,9 +932,7 @@ object StreamOps {
         // cross-batch matches — breaking batch-oracle equality
         // nondeterministically. 70 min = range + 10 min disorder slack.
         .withWatermark(s"${alias}_ts", "70 minutes")
-    }
-    val work = java.nio.file.Files.createTempDirectory("q92_ssj")
-    try {
+    Scratch.withWorkDir("q92_ssj") { work =>
       val joined = side("click", "c").join(side("purchase", "p"),
         expr("c_user = p_user AND p_ts >= c_ts AND p_ts < c_ts + interval 1 hour"))
         .select($"c_user".as("user_id"),
@@ -1056,10 +949,8 @@ object StreamOps {
           sum($"lag_us").as("sum_lag_us"),
           min($"lag_us").as("min_lag_us"))
         .orderBy($"user_id")
-      val rows = rolled.collect().toSeq // bounded: one row per converting user
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"user_id")
-    } finally deleteRecursively(work.toFile)
+      Scratch.collected(rolled).orderBy($"user_id") // bounded: one row per converting user
+    }
   }
 
   /** LEFT-OUTER stream-stream join under the batch oracle (q96) — the
@@ -1101,51 +992,29 @@ object StreamOps {
   def streamAbandonment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsIsNanosLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tsIsNtz =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType
-    val work = java.nio.file.Files.createTempDirectory("q96_abandon")
-    try {
+    Scratch.withWorkDir("q96_abandon") { work =>
       // scratch input = the original file(s) + the sentinel part file.
       // SYMLINK the input instead of copying it (the q47/q72/q159
       // zero-copy staging discipline): the copy was corpus-sized fixed
       // cost per lifecycle run — ~0.9 GB at sf10, paid again every bench
       // pass. File naming is irrelevant here (no maxFilesPerTrigger, so
       // every file lands in the one data batch); only set membership
-      // matters. Falls back to a real copy where symlinks are unsupported.
-      val srcDir = work.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
+      // matters.
+      val srcDir = java.nio.file.Files.createDirectory(work.resolve("src"))
       val evPath = java.nio.file.Paths.get(s"$dir/events.parquet")
-      def stage(p: java.nio.file.Path, name: String): Unit = {
-        val link = srcDir.resolve(name)
-        try { java.nio.file.Files.createSymbolicLink(link, p.toAbsolutePath); () }
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(p, link): Unit
-        }
-      }
       if (java.nio.file.Files.isDirectory(evPath)) {
         val st = java.nio.file.Files.list(evPath)
         try st.forEach { p =>
           val n = p.getFileName.toString
-          if (n.endsWith(".parquet") || n.startsWith("part-")) stage(p, s"a_$n")
+          if (n.endsWith(".parquet") || n.startsWith("part-")) Scratch.link(p, srcDir.resolve(s"a_$n"))
         } finally st.close()
-      } else stage(evPath, "a_events.parquet")
+      } else Scratch.link(evPath, srcDir.resolve("a_events.parquet"))
       // the sentinel pair is a pure function of the corpus (its max ts):
       // built once per (session, corpus stamp) — the max-ts scan rides
       // inside the build — and symlinked per run (q47 discipline)
       val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q96sent") { p =>
-        val maxUs = graft.Tables.events(s, dir).agg(max($"ts_us")).head.getLong(0)
-        val sentUs = maxUs + 30L * 86400L * 1000000L
-        val sentTs = raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => lit(sentUs * 1000L) // nanos convention
-          case org.apache.spark.sql.types.TimestampNTZType =>
-            timestamp_micros(lit(sentUs)).cast(org.apache.spark.sql.types.TimestampNTZType)
-          case _ => timestamp_micros(lit(sentUs))
-        }
         val sentBase = raw.limit(1)
-          .withColumn("ts", sentTs)
+          .withColumn("ts", rawEventTsLit(raw, maxEventUs(s, dir) + 30L * 86400L * 1000000L))
           .withColumn("user_id", lit(-1L).cast(raw.schema("user_id").dataType))
         StageCache.writeOne(
           sentBase.withColumn("event_type", lit("click"))
@@ -1153,22 +1022,17 @@ object StreamOps {
           p, "z_sentinel.parquet")
       }
       StageCache.linkInto(sentStaged, srcDir)
-      val stream0 = s.readStream.schema(raw.schema).parquet(srcDir.toString)
-      def side(eventType: String, alias: String): DataFrame = {
-        val ts =
-          if (tsIsNanosLong) timestamp_micros(expr("ts div 1000"))
-          else if (tsIsNtz) col("ts").cast("timestamp")
-          else col("ts")
+      val stream0 = withEventTs(s.readStream.schema(raw.schema).parquet(srcDir.toString))
+      def side(eventType: String, alias: String): DataFrame =
         stream0
           .select(col("user_id").cast("long").as(s"${alias}_user"),
-            ts.as(s"${alias}_ts"), col("event_type"))
+            col("ts").as(s"${alias}_ts"), col("event_type"))
           // note: Catalyst pushes the type filter BELOW this watermark
           // node, so each side's watermark tracks its own type only —
           // which is exactly why the sentinel pair carries both types
           .withWatermark(s"${alias}_ts", "70 minutes")
           .where(col("event_type") === eventType)
           .drop("event_type")
-      }
       val clicks = side("click", "c")
       val purchases = side("purchase", "p")
       // only ABANDONED clicks reach the sink (round 13, guide §2.3/§6):
@@ -1196,19 +1060,15 @@ object StreamOps {
           min($"click_us").as("min_click_us"),
           max($"click_us").as("max_click_us"))
         .orderBy($"user_id")
-      val rows = rolled.collect().toSeq // bounded: one row per abandoning user
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), rolled.schema)
-        .orderBy($"user_id")
-    } finally deleteRecursively(work.toFile)
+      Scratch.collected(rolled).orderBy($"user_id") // bounded: one row per abandoning user
+    }
   }
 
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    // never traverse THROUGH a symlink: staged inputs link to the real
-    // corpus (stageEventsFile), and following the link would delete it
-    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+  /** Max event time of `dir`'s events in microseconds since epoch: the
+    * anchor every drain sentinel is offset from.
+    */
+  private def maxEventUs(s: SparkSession, dir: String): Long =
+    graft.Tables.events(s, dir).agg(max(col("ts_us"))).head.getLong(0)
 
   /** Session-scoped staging cache for DERIVED stream-input files. The
     * drain-pattern lifecycles feed the file source deterministic
@@ -1217,49 +1077,26 @@ object StreamOps {
     * full Spark write job on EVERY invocation: pure per-pass fixed cost
     * (guide §1.2 "don't compute things you throw away"; at sf10 the
     * q111/q130 copies are corpus-sized writes). Each artifact is now
-    * built ONCE per (session, source stamp) into a JVM-scoped staging
-    * root and SYMLINKED into each run's work dir, extending the
-    * stageEventsFile zero-copy discipline to derived inputs. The timed
+    * built ONCE per (session, source stamp) into a [[Scratch.cached]]
+    * directory and SYMLINKED into each run's work dir, extending the
+    * zero-copy staging of the events file to derived inputs. The timed
     * query still streams every byte through the state machinery — only
     * the redundant re-STAGING of identical input files is removed; the
-    * bench cold pass prices each build. The root dies with the JVM
-    * (shutdown hook), so no intermediate ever persists across
-    * bench/oracle invocations, and keys embed OpCache.dirStamp of the
-    * source file so a mutated corpus rebuilds instead of serving stale
-    * inputs (the q161 corpus-stamp discipline).
+    * bench cold pass prices each build. The files die with the JVM's
+    * scratch root, so no intermediate ever persists across bench/oracle
+    * invocations, and keys embed OpCache.dirStamp of the source file so a
+    * mutated corpus rebuilds instead of serving stale inputs (the q161
+    * corpus-stamp discipline).
     */
   private[graft] object StageCache {
-    private val dirs =
-      new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-    private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    private lazy val root: java.nio.file.Path = {
-      val p = java.nio.file.Files.createTempDirectory("graft_stage")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRecursively(p.toFile)))
-      p
-    }
 
     /** Memoized staged directory: `build` populates a fresh dir on first
       * use per (app, source-stamp, tag); later calls return the same dir.
       */
     def stagedDir(s: SparkSession, srcPath: String, tag: String)
-                 (build: java.nio.file.Path => Unit): java.nio.file.Path = {
-      val key = s"${s.sparkContext.applicationId}|$srcPath|" +
-        s"${graft.operators.OpCache.dirStamp(srcPath)}|$tag"
-      val hit = dirs.get(key)
-      if (hit != null) hit
-      else dirs.synchronized {
-        val again = dirs.get(key)
-        if (again != null) again
-        else {
-          val d = root.resolve(s"${counter.getAndIncrement()}_$tag")
-          java.nio.file.Files.createDirectories(d)
-          build(d)
-          dirs.put(key, d)
-          d
-        }
-      }
-    }
+                 (build: java.nio.file.Path => Unit): java.nio.file.Path =
+      Scratch.cached(s"stage|${s.sparkContext.applicationId}|$srcPath|" +
+        s"${graft.operators.OpCache.dirStamp(srcPath)}|$tag", tag)(build)
 
     /** Writes `df` as a single parquet part file named `name` inside the
       * staged dir (the sentinel-file shape every drain lifecycle uses).
@@ -1280,56 +1117,32 @@ object StreamOps {
         java.nio.file.Files.setLastModifiedTime(dest,
           java.nio.file.attribute.FileTime.fromMillis(m)): Unit
       }
-      deleteRecursively(tmp.toFile)
+      Scratch.delete(tmp)
     }
 
-    /** Symlinks every staged *.parquet into `dest` (copy fallback where
-      * symlinks are unsupported), renaming via `rename(name, index)` over
-      * the name-sorted file list.
-      */
-    def linkInto(staged: java.nio.file.Path, dest: java.nio.file.Path,
-                 rename: (String, Int) => String = (n, _) => n): Unit = {
-      val files = staged.toFile.listFiles()
+    /** Links every staged *.parquet into `dest` ([[Scratch.link]]). */
+    def linkInto(staged: java.nio.file.Path, dest: java.nio.file.Path): Unit =
+      staged.toFile.listFiles()
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) =>
-        val link = dest.resolve(rename(f.getName, i))
-        try { java.nio.file.Files.createSymbolicLink(link, f.toPath.toAbsolutePath); () }
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(f.toPath, link): Unit
-        }
-      }
-    }
+        .foreach(f => Scratch.link(f.toPath, dest.resolve(f.getName)))
 
-    /** Forget every staged artifact (files die with the JVM; a re-staged
-      * key gets a fresh dir). Wired into Similarity.releaseCaches so a
-      * cache release drops these with the Dataset memos.
+    /** Forget and delete every staged artifact (a re-staged key gets a
+      * fresh dir). Wired into Similarity.releaseCaches so a cache release
+      * drops these with the Dataset memos.
       */
-    def clear(): Unit = dirs.clear()
+    def clear(): Unit = Scratch.forget("stage|")
   }
 
-  /** Stages the events file into a drain-pattern work dir WITHOUT
-    * copying the corpus: a symlink lets the file-stream source see one
-    * directory holding input + sentinel while zero data bytes move —
-    * the input copy was the dominant staging cost of every
-    * drain-lifecycle query (corpus-sized per run, and Bench repeats
-    * each). Falls back to a real copy where symlinks are unsupported.
+  /** `work/src` holding a link to the events file: the input directory of
+    * a drain-pattern lifecycle. The file-stream source sees one directory
+    * holding input + sentinel while zero data bytes move — the input copy
+    * was the dominant staging cost of every drain-lifecycle query
+    * (corpus-sized per run, and Bench repeats each).
     */
-  private def stageEventsFile(s: SparkSession, dir: String,
-                              srcDir: java.nio.file.Path): Unit = {
-    val target = java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath
-    val link = srcDir.resolve("events.parquet")
-    try { java.nio.file.Files.createSymbolicLink(link, target); () }
-    catch {
-      case _: UnsupportedOperationException | _: java.io.IOException =>
-        val conf = s.sessionState.newHadoopConf()
-        val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-        org.apache.hadoop.fs.FileUtil.copy(
-          fs, new org.apache.hadoop.fs.Path(target.toString),
-          fs, new org.apache.hadoop.fs.Path(link.toString), false, conf)
-        ()
-    }
+  private def stagedEventsDir(dir: String, work: java.nio.file.Path): java.nio.file.Path = {
+    val src = java.nio.file.Files.createDirectories(work.resolve("src"))
+    Scratch.link(java.nio.file.Paths.get(s"$dir/events.parquet"), src.resolve("events.parquet"))
+    src
   }
 
   /** Custom keyed state: running per-user event counter + last-seen
@@ -1394,10 +1207,8 @@ object StreamOps {
     val Array(mn, mx) = graft.operators.TextAnalysis.psiScoresCorpus(s, dir)
       .agg(min($"iscore"), max($"iscore")).as[(Long, Long)].collect()
       .flatMap(t => Array(t._1, t._2))
-    val work = java.nio.file.Files.createTempDirectory("q130_drift")
-    try {
-      val srcDir = work.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
+    Scratch.withWorkDir("q130_drift") { work =>
+      val srcDir = java.nio.file.Files.createDirectories(work.resolve("src"))
       // 2 files = the spec's pinned minimum batch count (> 1): each batch
       // pays a full psiScores pass + a versioned parquet write, so batches
       // beyond the minimum that proves the merge are pure fixed cost. The
@@ -1441,13 +1252,8 @@ object StreamOps {
       val path = current.getOrElse(sys.error("q130: stream produced no batches"))
       // counts state is (sources x bins)-bounded: collect it off the temp
       // dir so the work dir can be deleted under the lazy PSI tail
-      val counts = s.read.parquet(path)
-      val rows = counts.collect().toSeq
-      val inMem = s.createDataFrame(s.sparkContext.parallelize(rows, 1), counts.schema)
+      val inMem = Scratch.collected(s.read.parquet(path))
       (graft.operators.TextAnalysis.psiFromCounts(s, inMem, nBins), nBatches.get())
-    } finally {
-      // work dir holds a corpus-sized source copy + every counts version
-      deleteRecursively(work.toFile)
     }
   }
 
@@ -1480,90 +1286,59 @@ object StreamOps {
   def timerSessionsStreamed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsIsNanosLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tsIsNtz =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType
-    val work = java.nio.file.Files.createTempDirectory("q159_tsess")
-    val srcDir = work.resolve("src"); java.nio.file.Files.createDirectories(srcDir)
-    stageEventsFile(s, dir, srcDir)
-    val nRealFiles = {
-      val p = srcDir.resolve("events.parquet")
-      if (java.nio.file.Files.isDirectory(p))
-        p.toFile.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))
-      else 1 // single staged file (or symlink to one)
-    }
-    // the two global sentinels are pure functions of the corpus (its max
-    // ts): built once per (session, corpus stamp), symlinked per run.
-    // Batch order (real files -> sentinel1 -> sentinel2) rides on mtime
-    // under maxFilesPerTrigger, so the memoized files PIN theirs to the
-    // corpus mtime +60 s/+120 s (q179 discipline) instead of relying on
-    // write-order wall clock — strictly harder ordering than before
-    val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q159sent") { p =>
-      val maxTs = raw.agg(max(col("ts"))).head.get(0)
-      val evMtime = java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(s"$dir/events.parquet")).toMillis
-      def sentinel(hours: Long, uid: Long, name: String, mtimeMs: Long): Unit = {
-        val s0 =
-          if (tsIsNanosLong)
-            raw.limit(1).withColumn("ts",
-              lit(maxTs.asInstanceOf[Long] + hours * 3600L * 1000000000L))
-          else if (tsIsNtz)
-            raw.limit(1).withColumn("ts",
-              lit(maxTs.asInstanceOf[java.time.LocalDateTime].plusHours(hours)))
-          else
-            raw.limit(1).withColumn("ts",
-              lit(maxTs.asInstanceOf[java.sql.Timestamp].getTime / 1000 +
-                hours * 3600L).cast("timestamp"))
-        StageCache.writeOne(s0.withColumn("user_id", lit(uid)), p,
-          s"$name.parquet", Some(mtimeMs))
+    Scratch.withWorkDir("q159_tsess") { work =>
+      val srcDir = stagedEventsDir(dir, work)
+      val nRealFiles = {
+        val p = srcDir.resolve("events.parquet")
+        if (java.nio.file.Files.isDirectory(p))
+          p.toFile.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))
+        else 1 // single staged file (or symlink to one)
       }
-      sentinel(2, -1L, "sentinel1", evMtime + 60000L)
-      sentinel(4, -2L, "sentinel2", evMtime + 120000L)
-    }
-    StageCache.linkInto(sentStaged, srcDir)
-    val stream0 = s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", math.max(1, nRealFiles).toString)
-      .parquet(s"${srcDir.toString}/*.parquet")
-    val stream =
-      if (tsIsNanosLong) stream0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else if (tsIsNtz) stream0.withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      else stream0
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(confKey)
-    val outDir = work.resolve("out").toString
-    try {
-      s.conf.set(confKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import org.apache.spark.sql.streaming.TimeMode
-      val q = stream
-        .withWatermark("ts", "10 minutes")
-        .select($"user_id".cast("long"), unix_micros($"ts"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new TimerSessionProcessor(1800L * 1000000L),
-          TimeMode.EventTime(), OutputMode.Append)
-        .toDF("user_id", "start_us", "end_us", "n_in_session")
-        .writeStream.outputMode(OutputMode.Append)
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val sink = s.read.parquet(outDir)
-        .where(col("user_id") >= 0L)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"), sum(col("n_in_session")).as("n_events"))
-      val rows = sink.collect().toSeq // bounded: one row per user
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), sink.schema)
-        .orderBy($"user_id")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(confKey, p)
-        case None => s.conf.unset(confKey)
+      // the two global sentinels are pure functions of the corpus (its max
+      // ts): built once per (session, corpus stamp), symlinked per run.
+      // Batch order (real files -> sentinel1 -> sentinel2) rides on mtime
+      // under maxFilesPerTrigger, so the memoized files PIN theirs to the
+      // corpus mtime +60 s/+120 s (q179 discipline) instead of relying on
+      // write-order wall clock — strictly harder ordering than before
+      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q159sent") { p =>
+        val maxUs = maxEventUs(s, dir)
+        val evMtime = java.nio.file.Files.getLastModifiedTime(
+          java.nio.file.Paths.get(s"$dir/events.parquet")).toMillis
+        def sentinel(hours: Long, uid: Long, name: String, mtimeMs: Long): Unit =
+          StageCache.writeOne(raw.limit(1)
+              .withColumn("ts", rawEventTsLit(raw, maxUs + hours * 3600L * 1000000L))
+              .withColumn("user_id", lit(uid)),
+            p, s"$name.parquet", Some(mtimeMs))
+        sentinel(2, -1L, "sentinel1", evMtime + 60000L)
+        sentinel(4, -2L, "sentinel2", evMtime + 120000L)
       }
-      deleteRecursively(work.toFile)
+      StageCache.linkInto(sentStaged, srcDir)
+      val stream = withEventTs(s.readStream.schema(raw.schema)
+        .option("maxFilesPerTrigger", math.max(1, nRealFiles).toString)
+        .parquet(s"${srcDir.toString}/*.parquet"))
+      val outDir = work.resolve("out").toString
+      withRocksDbState(s) {
+        import org.apache.spark.sql.streaming.TimeMode
+        val q = stream
+          .withWatermark("ts", "10 minutes")
+          .select($"user_id".cast("long"), unix_micros($"ts"))
+          .as[(Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new TimerSessionProcessor(1800L * 1000000L),
+            TimeMode.EventTime(), OutputMode.Append)
+          .toDF("user_id", "start_us", "end_us", "n_in_session")
+          .writeStream.outputMode(OutputMode.Append)
+          .format("parquet").option("path", outDir)
+          .option("checkpointLocation", work.resolve("ckpt").toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        Scratch.collected(s.read.parquet(outDir) // bounded: one row per user
+            .where(col("user_id") >= 0L)
+            .groupBy(col("user_id"))
+            .agg(count(lit(1)).as("n_sessions"), sum(col("n_in_session")).as("n_events")))
+          .orderBy($"user_id")
+      }
     }
   }
 }

@@ -132,7 +132,7 @@ class AdversarialSkewSpec extends AnyFunSuite with SparkFixture {
         }
       }
     } finally {
-      graft.streaming.StreamOps.deleteRecursively(new java.io.File(dir))
+      graft.io.Scratch.delete(java.nio.file.Paths.get(dir))
     }
   }
 }

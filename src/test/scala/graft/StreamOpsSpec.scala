@@ -334,7 +334,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
-      StreamOps.deleteRecursively(work.toFile)
+      graft.io.Scratch.delete(work)
     }
   }
 

@@ -111,7 +111,7 @@ class TimerSessionSpec extends AnyFunSuite with SparkFixture {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
-      graft.streaming.StreamOps.deleteRecursively(work.toFile)
+      graft.io.Scratch.delete(work)
     }
   }
 }
