@@ -25,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ClusterSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = Tables.session("graft-cluster-smoke", "8", "local-cluster[2,4,4096]")
+    val spark = Tables.session("graft-cluster-smoke", "8",
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,4,4096]"))
     import spark.implicits._
     var ok = true
     def check(name: String, cond: Boolean, detail: => String = ""): Unit = {

@@ -67,8 +67,7 @@ object Tables {
     case _ => timestamp_micros(lit(us))
   }
 
-  /** The one session builder, `local[cpus]` unless `SPARK_GRAFT_MASTER`
-    * names another master. */
+  /** The one session builder on a `local[cpus]` master. */
   def session(appName: String, cpus: String): SparkSession =
     session(appName, cpus, s"local[$cpus]")
 
@@ -77,14 +76,13 @@ object Tables {
     * partitions sized to cores (the driver overrides per-run), broadcast
     * threshold left at default so dimension tables broadcast.
     *
-    * `SPARK_GRAFT_MASTER` overrides `defaultMaster`. Under a
-    * `local-cluster[n,cores,mem]` master (separate executor JVMs, the
-    * harness of tools/cluster_smoke.sh) the executors also need the
-    * compiled classes on their own class path: `SPARK_GRAFT_CLASSDIR`,
-    * by default the directory or jar this class was loaded from.
+    * Under a `local-cluster[n,cores,mem]` master (separate executor JVMs,
+    * the harness of tools/cluster_smoke.sh; only Verify and ClusterSmoke
+    * pass one) the executors also need the compiled classes on their own
+    * class path: `SPARK_GRAFT_CLASSDIR`, by default the directory or jar
+    * this class was loaded from.
     */
-  def session(appName: String, cpus: String, defaultMaster: String): SparkSession = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster)
+  def session(appName: String, cpus: String, master: String): SparkSession = {
     val builder = SparkSession.builder()
       .master(master)
       .appName(appName)

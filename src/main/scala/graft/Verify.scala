@@ -10,7 +10,8 @@ object Verify {
     // multi-JVM mode (separate executor processes — same harness as
     // tools/cluster_smoke.sh), turning the oracle gate into a
     // cluster-execution check (Tables.session)
-    val spark = Tables.session("graft-verify", cpus)
+    val spark = Tables.session("graft-verify", cpus,
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_SKIP: comma-separated query names to exclude at
     // stress SFs. q20 self-guards since round 5 (in-operator candidate

@@ -314,7 +314,4 @@ object AnnIndexStore {
     } finally st.close()
   }
 
-  /** Test hook: forget the auto-built artifacts and delete their files
-    * (the next q185/q186/q188 call rebuilds). */
-  private[graft] def clearBuiltPaths(): Unit = graft.io.Scratch.forget("annidx|")
 }

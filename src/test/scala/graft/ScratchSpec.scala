@@ -13,12 +13,17 @@ import graft.operators.AnnIndexStore
   */
 class ScratchSpec extends AnyFunSuite with SparkFixture {
 
-  private def tmpEntries(prefix: String): Set[String] = {
-    val st = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-    try st.toArray.map(_.asInstanceOf[Path].getFileName.toString)
-      .filter(_.startsWith(prefix)).toSet
-    finally st.close()
-  }
+  /** Entries named `prefix…` at the top of `java.io.tmpdir` (where a
+    * per-run directory used to be made) and in the scratch root's `work/`
+    * (where it is made now): one check covers both trees. */
+  private def tmpEntries(prefix: String): Set[Path] =
+    Seq(Paths.get(System.getProperty("java.io.tmpdir")), Scratch.root.resolve("work"))
+      .filter(Files.isDirectory(_)).flatMap { d =>
+        val st = Files.list(d)
+        try st.toArray.map(_.asInstanceOf[Path])
+          .filter(_.getFileName.toString.startsWith(prefix)).toSet
+        finally st.close()
+      }.toSet
 
   test("a throwing body still deletes its work directory") {
     var seen: Option[Path] = None
@@ -60,7 +65,7 @@ class ScratchSpec extends AnyFunSuite with SparkFixture {
         SparkEntry.queries("q47_stream_hourly_append")(spark, dir.toString).collect()
       }
       assert(tmpEntries("q47_append") -- before == Set.empty,
-        "q47 left its work directory in java.io.tmpdir")
+        "q47 left its work directory behind")
       assert(Scratch.liveWorkDirs.isEmpty, s"left: ${Scratch.liveWorkDirs}")
     } finally Scratch.delete(dir)
   }
