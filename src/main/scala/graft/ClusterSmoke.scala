@@ -45,41 +45,45 @@ object ClusterSmoke {
     val rt = StructType(Seq(StructField("id", LongType), StructField("kind", StringType)))
     def rec(i: Long): Array[Byte] = functions.MsgPackCodec.encode(
       new GenericInternalRow(Array[Any](i, UTF8String.fromString("t"))), rt)
-    val streamDir = java.nio.file.Files.createTempDirectory("fss_stream").toString
-    import graft.streaming.FileShardService
-    (1L to 6L).foreach(i => FileShardService.put(streamDir, s"shard-${i % 2}", i, s"k$i", rec(i)))
-    val ckpt = java.nio.file.Files.createTempDirectory("fss_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("fss_out").toString
-    def runOnce(): Unit = {
-      val q = spark.readStream.format("kinesis-graft")
-        .option("stream", streamDir)
-        .option("service", "graft.streaming.FileShardService")
-        .load()
-        .withColumn("rec", expr("from_msgpack(data, 'id BIGINT, kind STRING')"))
-        .select($"shard_id", $"sequence_number", $"rec.id".as("id"))
-        .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    runOnce()
-    val ids1 = spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
-    check("stream_first_run", ids1 == (1L to 6L), s"got $ids1")
+    io.Scratch.withWorkDir("fss") { work =>
+      val streamDir = work.resolve("stream").toString
+      import graft.streaming.FileShardService
+      (1L to 6L).foreach(i => FileShardService.put(streamDir, s"shard-${i % 2}", i, s"k$i", rec(i)))
+      val ckpt = work.resolve("ckpt").toString
+      val outDir = work.resolve("out").toString
+      def runOnce(): Unit = {
+        val q = spark.readStream.format("kinesis-graft")
+          .option("stream", streamDir)
+          .option("service", "graft.streaming.FileShardService")
+          .load()
+          .withColumn("rec", expr("from_msgpack(data, 'id BIGINT, kind STRING')"))
+          .select($"shard_id", $"sequence_number", $"rec.id".as("id"))
+          .writeStream.format("parquet").option("path", outDir)
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      runOnce()
+      val ids1 = spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
+      check("stream_first_run", ids1 == (1L to 6L), s"got $ids1")
 
-    // 2. resume: more records after a stop; the checkpoint must dedupe
-    (7L to 10L).foreach(i => FileShardService.put(streamDir, s"shard-${i % 2}", i, s"k$i", rec(i)))
-    runOnce()
-    val ids2 = spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
-    check("stream_resume_exactly_once", ids2 == (1L to 10L), s"got $ids2")
+      // 2. resume: more records after a stop; the checkpoint must dedupe
+      (7L to 10L).foreach(i => FileShardService.put(streamDir, s"shard-${i % 2}", i, s"k$i", rec(i)))
+      runOnce()
+      val ids2 = spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
+      check("stream_resume_exactly_once", ids2 == (1L to 10L), s"got $ids2")
+    }
 
     // 3. archive store -> pruned read (files written by executor tasks)
-    val root = java.nio.file.Files.createTempDirectory("cs_tri").resolve("arch").toString
-    val ev = Seq((1L, "2024-01-05 10:00:00", 2.5), (2L, "2024-01-08 11:00:00", 7.5))
-      .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
-    sources.Archive.store(ev, root, "c1")
-    check("archive_pruned", sources.Archive.read(spark, root, "c1", "20240105", "20240106")
-      .count() == 1L)
+    io.Scratch.withWorkDir("cs_tri") { work =>
+      val root = work.resolve("arch").toString
+      val ev = Seq((1L, "2024-01-05 10:00:00", 2.5), (2L, "2024-01-08 11:00:00", 7.5))
+        .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
+      sources.Archive.store(ev, root, "c1")
+      check("archive_pruned", sources.Archive.read(spark, root, "c1", "20240105", "20240106")
+        .count() == 1L)
+    }
 
     // 4. codegen'd msgpack expressions inside executor-side codegen
     val n = spark.range(0, 1000, 1, 8)

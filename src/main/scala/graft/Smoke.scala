@@ -46,12 +46,14 @@ object Smoke {
     println(s"SMOKE dedup_rows=${spark.table("smoke_dedup").count()} (expect 10: 11 puts, 1 dup)")
 
     // 2. archive: store -> pruned range read
-    val root = java.nio.file.Files.createTempDirectory("smoke_tri").resolve("arch").toString
-    val ev = Seq((1L, "2024-01-05 10:00:00", 2.5), (2L, "2024-01-08 11:00:00", 7.5))
-      .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
-    sources.Archive.store(ev, root, "c1")
-    val pruned = sources.Archive.read(spark, root, "c1", "20240105", "20240106")
-    println(s"SMOKE archive_pruned_rows=${pruned.count()} (expect 1)")
+    io.Scratch.withWorkDir("smoke_tri") { work =>
+      val root = work.resolve("arch").toString
+      val ev = Seq((1L, "2024-01-05 10:00:00", 2.5), (2L, "2024-01-08 11:00:00", 7.5))
+        .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
+      sources.Archive.store(ev, root, "c1")
+      val pruned = sources.Archive.read(spark, root, "c1", "20240105", "20240106")
+      println(s"SMOKE archive_pruned_rows=${pruned.count()} (expect 1)")
+    }
 
     // 3. SQL surface: permissive decode of garbage
     val corrupt = spark.sql("SELECT from_msgpack(X'deadbeef', 'a BIGINT') AS r").collect()(0).isNullAt(0)

@@ -43,14 +43,35 @@ object Archive {
     * reference's own rotation unit (`store.go:201`) — so skewed record
     * sizes cannot produce a monster non-splittable file that serializes
     * the readers.
+    *
+    * The layout is the caller's: every task writes one file per date it
+    * holds, so `df`'s partitioning decides the file count (a caller that
+    * wants one file per date rebalances first, as
+    * [[graft.streaming.StreamOps.startStore]] does; a caller that wants a
+    * fragmented archive repartitions).
     */
   def store(df: DataFrame, root: String, client: String,
             maxRecordsPerFile: Long = 1000000L,
             maxBytesPerFile: Long = 0L): Unit =
+    writePartitioned(withPartitionColumns(df, client), root, maxRecordsPerFile, maxBytesPerFile)
+
+  /** `df` plus the archive's partition columns: `date` (`yyyyMMdd` of
+    * `ts`) and `client`. Computed once, before any shuffle a caller puts
+    * between this and [[writePartitioned]].
+    */
+  private[graft] def withPartitionColumns(df: DataFrame, client: String): DataFrame =
     df
       .withColumn("date", date_format(col("ts"), "yyyyMMdd"))
       .withColumn("client", lit(client))
-      .write.format("tri")
+
+  /** Appends `df` (already carrying `date`/`client`) to the archive at
+    * `root`: one `.tri` file per (task, date, client), rotated by the two
+    * limits of [[store]].
+    */
+  private[graft] def writePartitioned(df: DataFrame, root: String,
+                                     maxRecordsPerFile: Long = 1000000L,
+                                     maxBytesPerFile: Long = 0L): Unit =
+    df.write.format("tri")
       .partitionBy("date", "client")
       .option("maxRecordsPerFile", maxRecordsPerFile) // bounds rows like hourly rotation did
       .option("maxBytesPerFile", maxBytesPerFile)
@@ -90,11 +111,14 @@ object Archive {
   }
 
   /** Compact one (date, client) partition of the archive — the maintenance
-    * job a streaming store makes necessary: `foreachBatch` appends one
-    * `.tri` file per (micro-batch, task), so a day of 5-second batches
-    * leaves thousands of files, each a listing entry and (the format is
-    * non-splittable) a separate read task. Compaction rewrites the
-    * partition as ceil(records / maxRecordsPerFile) files and swaps
+    * job a streaming store makes necessary: each micro-batch of
+    * `StreamOps.startStore` appends one `.tri` file per date it touches
+    * (more where AQE splits a skewed date), so a day of 5-second batches
+    * still leaves thousands of files, each a listing entry and (the format
+    * is non-splittable) a separate read task. A batch `store` of a
+    * many-partition DataFrame leaves one file per (task, date) at once.
+    * Compaction rewrites the partition as
+    * ceil(records / maxRecordsPerFile) files and swaps
     * directories in two renames, via hidden (`.`-prefixed) staging and
     * backup names that Spark's partition discovery never sees — so a
     * reader observes either the old file set or the new one, modulo the

@@ -152,9 +152,11 @@ class TriFileFormat extends FileFormat with DataSourceRegister with Serializable
   * Rotated siblings live next to `path` inside the task attempt directory,
   * so any directory-commit protocol (the batch write path, incl.
   * `foreachBatch`) commits them atomically with the primary file. A
-  * manifest-tracked streaming file sink would orphan them — use
-  * `Archive.store` (foreachBatch) for streaming, which is the engine's
-  * store pipeline anyway.
+  * manifest-tracked streaming file sink would orphan them — stream into
+  * the archive with `StreamOps.startStore`, the engine's store pipeline,
+  * whose `foreachBatch` rebalances each micro-batch by date and writes it
+  * through the batch path: one writer (so one file, plus rotations) per
+  * (date, client) per batch, not one per source shard.
   */
 private class TriOutputWriter(val path: String, dataSchema: StructType,
                               context: TaskAttemptContext,

@@ -191,9 +191,13 @@ private class ShardReader(p: ShardPartition) extends PartitionReader[InternalRow
     if (page.hasNext) { current = page.next(); true } else false
   }
 
+  // constant within the partition: encoded once, not once per record
+  private val streamName = UTF8String.fromString(p.stream)
+  private val shardId = UTF8String.fromString(p.shard)
+
   override def get(): InternalRow =
     new GenericInternalRow(Array[Any](
-      UTF8String.fromString(p.stream), UTF8String.fromString(p.shard),
+      streamName, shardId,
       current.sequenceNumber, UTF8String.fromString(current.partitionKey), current.data))
 
   override def close(): Unit = ()

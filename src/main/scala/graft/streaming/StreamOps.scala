@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.Tables.{rawEventTsLit, withEventTs}
 import graft.io.Scratch
+import graft.sources.Archive
 
 /** Streaming operator surface beyond the reference (which is
   * processing-time only — `/root/reference/triton/store.go:109`): event-time
@@ -111,17 +112,38 @@ object StreamOps {
     * checkpoint-after-upload, `/root/reference/triton/store.go:51-67`, but
     * exactly-once instead of at-least-once). `foreachBatch` + deterministic
     * batch handling keeps re-runs idempotent.
+    *
+    * The source partitions a batch by shard, so a plain `Archive.store`
+    * would write one file per (shard, date). Each batch is rebalanced by
+    * `date` instead (Spark's `REBALANCE` hint, planned by AQE inside
+    * `foreachBatch`), so it writes one file per (date, client) — the
+    * reference writes one file per rotation, not one per worker
+    * (`store.go:106-171`) — and AQE still splits a date larger than
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` into several files.
+    * The hint takes column references only, so the date is computed once,
+    * before the shuffle. (BENCH_NOTES "Store drains write one file per date")
+    *
+    * The batch is written through the session that started the store, not
+    * the per-start clone Spark hands to `foreachBatch`: AQE's stage thread
+    * pools create a thread per stage, and each new thread inherits the
+    * submitting thread's active session and keeps it for its 60 s idle
+    * life. Under the clone, every drain pinned its own cloned session
+    * that way (about 0.25 MB each, hundreds at a few drains a second).
     */
   def startStore(events: DataFrame, root: String, client: String,
-                 checkpointLocation: String): StreamingQuery =
+                 checkpointLocation: String): StreamingQuery = {
+    val owner = events.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     events.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointLocation)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Archive.store(batch, root, client)
+        val rows = GraftSqlBridge.ofRows(owner, batch.queryExecution.logical)
+        Archive.writePartitioned(
+          Archive.withPartitionColumns(rows, client).hint("rebalance", col("date")), root)
       }
       .start()
+  }
 
   /** Watermarked tumbling event-time window counts — late data beyond the
     * watermark is dropped instead of landing in the wrong hour file

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,7 +43,7 @@ class AdversarialSkewSpec extends AnyFunSuite with SparkFixture {
       val tsUs = 1700000000000000L + i.toLong * 37000000L
       (i.toLong, user, tsUs * 1000L, if (i % 3 == 0) "click" else "view")
     }
-    val dir = Files.createTempDirectory("skew_events").toString
+    val dir = tempDir("skew_events").toString
     rows.toDF("event_id", "user_id", "ts", "event_type")
       .repartition(8)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -80,59 +78,55 @@ class AdversarialSkewSpec extends AnyFunSuite with SparkFixture {
   test("90%-one-key corpus: plain window funnels the hot key through one task; chunked stays balanced and exact") {
     import org.apache.spark.sql.functions._
     val dir = writeSkewed()
+    val plain = EventOps.lagFeatures(spark, dir)
+    val chunked = EventOps.lagFeaturesChunked(spark, dir, bucketUs)
+
+    // exactness: identical rows in identical order
+    val plainRows = plain.collect().toSeq.map(_.toString)
+    assert(plainRows.size === nEvents)
+    assert(chunked.collect().toSeq.map(_.toString) === plainRows,
+      "chunked lag features diverged from the plain window")
+
+    // hand arithmetic on the hot user's head: events 0,1,2,3 are all
+    // user 1 and 37 s apart, so every defined gap is exactly 37 s
+    val hot = plain.where(col("user_id") === 1L).limit(4).collect()
+      .map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(hot(0) === ((0L, -1L, -1L, -1L)))
+    assert(hot(1) === ((1L, 37000000L, -1L, 37000000L)))
+    assert(hot(2) === ((2L, 37000000L, 37000000L, 37000000L)))
+    assert(hot(3) === ((3L, 37000000L, 37000000L, 37000000L)))
+
+    // data-level scale claim: the largest chunked window KEY is
+    // bucket-bounded (hot user ~88 rows/bucket; 128 = generous lid),
+    // vs the plain window's single 3600-row key
+    val maxKey = Tables.events(spark, dir)
+      .groupBy(col("user_id"), expr(s"ts_us div ${bucketUs}L"))
+      .count().agg(max("count")).collect()(0).getLong(0)
+    assert(maxKey <= 128, s"largest (user, bucket) key holds $maxKey rows")
+
+    // task-level measurement, AQE coalescing off for attribution
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesceKey)
     try {
-      val plain = EventOps.lagFeatures(spark, dir)
-      val chunked = EventOps.lagFeaturesChunked(spark, dir, bucketUs)
-
-      // exactness: identical rows in identical order
-      val plainRows = plain.collect().toSeq.map(_.toString)
-      assert(plainRows.size === nEvents)
-      assert(chunked.collect().toSeq.map(_.toString) === plainRows,
-        "chunked lag features diverged from the plain window")
-
-      // hand arithmetic on the hot user's head: events 0,1,2,3 are all
-      // user 1 and 37 s apart, so every defined gap is exactly 37 s
-      val hot = plain.where(col("user_id") === 1L).limit(4).collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(5)))
-      assert(hot(0) === ((0L, -1L, -1L, -1L)))
-      assert(hot(1) === ((1L, 37000000L, -1L, 37000000L)))
-      assert(hot(2) === ((2L, 37000000L, 37000000L, 37000000L)))
-      assert(hot(3) === ((3L, 37000000L, 37000000L, 37000000L)))
-
-      // data-level scale claim: the largest chunked window KEY is
-      // bucket-bounded (hot user ~88 rows/bucket; 128 = generous lid),
-      // vs the plain window's single 3600-row key
-      val maxKey = Tables.events(spark, dir)
-        .groupBy(col("user_id"), expr(s"ts_us div ${bucketUs}L"))
-        .count().agg(max("count")).collect()(0).getLong(0)
-      assert(maxKey <= 128, s"largest (user, bucket) key holds $maxKey rows")
-
-      // task-level measurement, AQE coalescing off for attribution
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val prev = spark.conf.getOption(coalesceKey)
-      try {
-        spark.conf.set(coalesceKey, "false")
-        val plainMax = maxTaskRead {
-          EventOps.lagFeaturesCore(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        val chunkedMax = maxTaskRead {
-          EventOps.lagFeaturesChunkedCore(spark, dir, bucketUs)
-            .write.format("noop").mode("overwrite").save()
-        }
-        val hotRows = (nEvents * hotShare).toLong
-        assert(plainMax >= hotRows,
-          s"expected the hot key's $hotRows rows through one task, max was $plainMax")
-        assert(chunkedMax <= plainMax / 2,
-          s"chunked max task read $chunkedMax is not meaningfully below the straggler $plainMax")
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(coalesceKey, v)
-          case None => spark.conf.unset(coalesceKey)
-        }
+      spark.conf.set(coalesceKey, "false")
+      val plainMax = maxTaskRead {
+        EventOps.lagFeaturesCore(spark, dir)
+          .write.format("noop").mode("overwrite").save()
       }
+      val chunkedMax = maxTaskRead {
+        EventOps.lagFeaturesChunkedCore(spark, dir, bucketUs)
+          .write.format("noop").mode("overwrite").save()
+      }
+      val hotRows = (nEvents * hotShare).toLong
+      assert(plainMax >= hotRows,
+        s"expected the hot key's $hotRows rows through one task, max was $plainMax")
+      assert(chunkedMax <= plainMax / 2,
+        s"chunked max task read $chunkedMax is not meaningfully below the straggler $plainMax")
     } finally {
-      graft.io.Scratch.delete(java.nio.file.Paths.get(dir))
+      prev match {
+        case Some(v) => spark.conf.set(coalesceKey, v)
+        case None => spark.conf.unset(coalesceKey)
+      }
     }
   }
 }

@@ -29,7 +29,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
     val inSession = rows(Similarity.annIvfPq(spark, dir))
     assert(inSession.nonEmpty)
 
-    val work = java.nio.file.Files.createTempDirectory("annidx_spec").toString
+    val work = tempDir("annidx_spec").toString
     AnnIndexStore.write(spark, dir, work)
 
     // fresh-session simulation: drop EVERY session memo (vector caches,
@@ -60,7 +60,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("serving a stale index against a different corpus is refused") {
-    val work = java.nio.file.Files.createTempDirectory("annidx_stale").toString
+    val work = tempDir("annidx_stale").toString
     AnnIndexStore.write(spark, dir, work)
     val idx = AnnIndexStore.load(spark, work)
     val other = "/root/testdata/sf0.001"
@@ -76,13 +76,13 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.functions._
     // growable corpus sandbox: embeddings.parquet as a DIRECTORY of part
     // files, so the corpus can grow the way a landing zone does
-    val corpus = java.nio.file.Files.createTempDirectory("annidx_grow").toString
+    val corpus = tempDir("annidx_grow").toString
     val embDir = java.nio.file.Paths.get(corpus, "embeddings.parquet")
     java.nio.file.Files.createDirectories(embDir)
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/embeddings.parquet"),
       embDir.resolve("part-000.parquet"))
-    val work = java.nio.file.Files.createTempDirectory("annidx_append").toString
+    val work = tempDir("annidx_append").toString
     AnnIndexStore.write(spark, corpus, work)
     val idx0 = AnnIndexStore.load(spark, work)
     def codeMap(idx: AnnIndexStore.Loaded, pred: org.apache.spark.sql.Column) =
@@ -147,7 +147,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the probed-cell IN lands as a parquet partition filter on the codes scan") {
-    val work = java.nio.file.Files.createTempDirectory("annidx_prune").toString
+    val work = tempDir("annidx_prune").toString
     AnnIndexStore.write(spark, dir, work)
     val idx = AnnIndexStore.load(spark, work)
     // the serving kernel's exact pre-filter shape, on the loaded frame

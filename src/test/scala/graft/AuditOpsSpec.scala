@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class AuditOpsSpec extends AnyFunSuite with SparkFixture {
 
   private def eventsFixture(rows: Seq[(Long, Long, Long, String, Double, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("auditfix").toString
+    val dir = tempDir("auditfix").toString
     def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
     rows.map { case (id, tsec, u, et, v, p) => (id, ts(tsec), u, et, v, p) }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -39,7 +37,7 @@ class AuditOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("q166 leak report: containment is |doc ∩ item| / |item|, zero-hit items still report") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("leakfix").toString
+    val dir = tempDir("leakfix").toString
     // doc_id 0 and 97 are benchmark items (id % 97 == 0).
     // item 0 = 9 tokens a..i (2 8-grams), fully contained in doc 1 (long
     // doc -> containment 1.0 despite tiny doc-side overlap) and
@@ -76,7 +74,7 @@ class AuditOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("q168 median/MAD: hand fixture (med 3, mad 1, one 5*MAD outlier)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("madfix").toString
+    val dir = tempDir("madfix").toString
     // token counts 1,2,3,4,100: median 3, adev {2,1,0,1,97}, MAD 1,
     // outliers = adev > 5 -> exactly the 100-token doc
     def words(n: Int) = Seq.fill(n)("w").mkString(" ")

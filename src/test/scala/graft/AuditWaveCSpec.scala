@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Intent pins for q176-q179: all four reconciliation classes on a hand
@@ -12,7 +10,7 @@ class AuditWaveCSpec extends AnyFunSuite with SparkFixture {
 
   test("q176 recon: all four classes and exact-integer match arithmetic") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("reconfix").toString
+    val dir = tempDir("reconfix").toString
     // order 1: lines sum exactly to the header formula -> match
     // order 2: off by one cent-unit -> mismatch, diff = 10000 (1 cent at 1e4 scale)
     // order 3: no lines -> no_lines
@@ -39,7 +37,7 @@ class AuditWaveCSpec extends AnyFunSuite with SparkFixture {
 
   test("q177 rfm: each threshold branch labels as specified") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("rfmfix").toString
+    val dir = tempDir("rfmfix").toString
     def ts(day: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(day * 86400L))
     // max day = 40 (user 5 anchors it)
     // user 1: 20 events on day 40   -> champion
@@ -64,7 +62,7 @@ class AuditWaveCSpec extends AnyFunSuite with SparkFixture {
 
   test("q178 card: dup and short-doc fields on a hand corpus") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("cardfix").toString
+    val dir = tempDir("cardfix").toString
     def words(n: Int) = Seq.tabulate(n)(i => s"w$i").mkString(" ")
     Seq(
       (0L, "a", words(30)),
@@ -80,7 +78,7 @@ class AuditWaveCSpec extends AnyFunSuite with SparkFixture {
 
   test("q179 lateness: a late row in an expired window drops, in a live window survives") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("latefix").toString
+    val dir = tempDir("latefix").toString
     def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
     val hr = 3600L
     // eviction threshold = ms-truncated corpus max ts (5h10s)

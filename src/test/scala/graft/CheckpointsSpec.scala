@@ -22,8 +22,8 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
     val rt = StructType(Seq(StructField("id", LongType)))
     (1L to 6L).foreach(i => FakeKinesis.putRecord("ck", s"k$i",
       MsgPackCodec.encode(new GenericInternalRow(Array[Any](i)), rt)))
-    val ckpt = Files.createTempDirectory("ck_ckpt").toString
-    val out = Files.createTempDirectory("ck_out").toString
+    val ckpt = tempDir("ck_ckpt").toString
+    val out = tempDir("ck_out").toString
     val q = spark.readStream.format("kinesis-graft").option("stream", "ck").load()
       .select(col("sequence_number"))
       .writeStream.format("parquet").option("path", out)
@@ -59,8 +59,8 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
     val rt = StructType(Seq(StructField("id", LongType)))
     FakeKinesis.putRecord("ckc", "k",
       MsgPackCodec.encode(new GenericInternalRow(Array[Any](1L)), rt))
-    val ckpt = Files.createTempDirectory("ckc_ckpt").toString
-    val out = Files.createTempDirectory("ckc_out").toString
+    val ckpt = tempDir("ckc_ckpt").toString
+    val out = tempDir("ckc_out").toString
     val q = spark.readStream.format("kinesis-graft").option("stream", "ckc").load()
       .select(col("sequence_number"))
       .writeStream.format("parquet").option("path", out)
@@ -71,7 +71,7 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
     assert(committed.nonEmpty)
     // simulate a crash mid-batch: offsets/99 written, commits/99 absent —
     // offsets() must keep reporting the last COMMITTED batch, not batch 99
-    java.nio.file.Files.writeString(
+    Files.writeString(
       java.nio.file.Paths.get(ckpt, "offsets", "99"),
       "v1\n{}\n{\"shard-0\":12345}\n")
     val after = Checkpoints.offsets(spark, ckpt).collect()
@@ -111,8 +111,8 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
     val rt = StructType(Seq(StructField("id", LongType)))
     (1L to 4L).foreach(i => FakeKinesis.putRecord("ckm", s"k$i",
       MsgPackCodec.encode(new GenericInternalRow(Array[Any](i)), rt)))
-    val ckpt = Files.createTempDirectory("ckm_ckpt").toString
-    val out = Files.createTempDirectory("ckm_out").toString
+    val ckpt = tempDir("ckm_ckpt").toString
+    val out = tempDir("ckm_out").toString
     val q = spark.readStream.format("kinesis-graft").option("stream", "ckm").load()
       .select(col("sequence_number"))
       .writeStream.format("parquet").option("path", out)
@@ -140,8 +140,8 @@ class CheckpointsSpec extends AnyFunSuite with SparkFixture {
     val rt = StructType(Seq(StructField("id", LongType)))
     (1L to 6L).foreach(i => FakeKinesis.putRecord("ckauto", s"k$i",
       MsgPackCodec.encode(new GenericInternalRow(Array[Any](i)), rt)))
-    val ckpt = Files.createTempDirectory("ckauto_ckpt").toString
-    val root = Files.createTempDirectory("ckauto_root").toString
+    val ckpt = tempDir("ckauto_ckpt").toString
+    val root = tempDir("ckauto_root").toString
     val db = CheckpointDb.open("jdbc:derby:memory:ckauto;create=true")
     val listener = CheckpointDb.autoMirror(spark, db, ckpt, "cli", "ckauto")
     try {

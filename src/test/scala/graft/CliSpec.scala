@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The four CLI commands against the reference's behaviors
@@ -20,7 +18,7 @@ class CliSpec extends AnyFunSuite with SparkFixture {
 
   test("store then cat: archive range exports ordered JSON lines (K4)") {
     spark // force the shared fixture session so Cli reuses it via getOrCreate
-    val root = Files.createTempDirectory("cli_arch").toString
+    val root = tempDir("cli_arch").toString
     captureOut(Cli.main(Array("store",
       "--sf-dir", "/root/testdata/sf0.001", "--root", root, "--client", "c1")))
     val lines = captureOut(Cli.main(Array("cat",

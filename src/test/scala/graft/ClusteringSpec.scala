@@ -98,7 +98,7 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture {
   test("reliable-checkpoint mode converges to the identical labeling and bounds its files") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cc_reliable")
+    val dir = tempDir("cc_reliable")
     val edges = Seq[(Long, Long)](
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 16L),
       (100L, 50L), (100L, 60L), (100L, 70L), (5L, 7L), (7L, 7L), (200L, 201L))

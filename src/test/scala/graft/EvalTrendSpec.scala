@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,7 +31,7 @@ class EvalTrendSpec extends AnyFunSuite with SparkFixture {
 
   test("q156 split leakage flags the cross-split twin and keeps the in-split one") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q156fix").toString
+    val dir = tempDir("q156fix").toString
     // pick ids by their REAL split buckets so the fixture is stable
     def bucket(id: Long): Long = hash60(id.toString) % 100
     val train = (1L to 500L).filter(bucket(_) < 90)
@@ -52,7 +50,7 @@ class EvalTrendSpec extends AnyFunSuite with SparkFixture {
 
   test("q157 OLS recovers an exact line and zeroes degenerate variance") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q157fix").toString
+    val dir = tempDir("q157fix").toString
     Seq((0L, "ALPHA"), (1L, "BRAVO")).toDF("n_nationkey", "n_name")
       .write.mode("overwrite").parquet(s"$dir/nation.parquet")
     Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L))
@@ -74,7 +72,7 @@ class EvalTrendSpec extends AnyFunSuite with SparkFixture {
 
   test("q158 lag features match the hand gaps incl. floor-div mean") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q158fix").toString
+    val dir = tempDir("q158fix").toString
     def ts(us: Long) = java.sql.Timestamp.from(
       java.time.Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L))
     val rows = Seq(0L, 10L, 30L, 70L, 150L).zipWithIndex

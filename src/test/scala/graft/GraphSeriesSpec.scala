@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Intent pins for the q170-q174 wave: forward-fill sentinels, MaxSim's
@@ -19,7 +17,7 @@ class GraphSeriesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q170 forward fill: gap hour carries the last observed value; pre-first hour is -1") {
-    val dir = Files.createTempDirectory("fffix").toString
+    val dir = tempDir("fffix").toString
     val hr = 3600L
     // type A observed at hours 0 (100 cents) and 2 (200): hour 1 filled 100
     // type B observed at hour 2 only: hours 0-1 are -1 sentinels
@@ -36,7 +34,7 @@ class GraphSeriesSpec extends AnyFunSuite with SparkFixture {
 
   test("q171 maxsim: an exact copy scores 4.0 and ranks first; chunk-permuted copy also 4.0") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("msfix").toString
+    val dir = tempDir("msfix").toString
     val rnd = new scala.util.Random(7)
     def vec(): Array[Float] = Array.fill(64)(rnd.nextFloat() - 0.5f)
     val base = vec()
@@ -58,7 +56,7 @@ class GraphSeriesSpec extends AnyFunSuite with SparkFixture {
 
   test("q172 LPA: two dense triangles stay separate communities across a weak bridge") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("lpafix").toString
+    val dir = tempDir("lpafix").toString
     // orders o1,o2 = triangle {1,2,3}; o3,o4 = triangle {10,11,12};
     // o5,o6 = bridge edge (3,10) — every edge has support 2
     val rows = Seq(
@@ -75,7 +73,7 @@ class GraphSeriesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q173 percentile bands: interpolated p50/p90/p99 on two values") {
-    val dir = Files.createTempDirectory("pbfix").toString
+    val dir = tempDir("pbfix").toString
     writeEvents(dir, Seq(
       (1L, 10L, 1L, "A", 1.00, "{}"),
       (2L, 20L, 2L, "A", 2.00, "{}")))
@@ -86,7 +84,7 @@ class GraphSeriesSpec extends AnyFunSuite with SparkFixture {
 
   test("q174 negative samples: deterministic, never self, neg metadata joined") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("negfix").toString
+    val dir = tempDir("negfix").toString
     (0L to 9L).map(i => (i, s"src${i % 2}", "t"))
       .toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

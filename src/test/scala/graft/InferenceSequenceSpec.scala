@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +20,7 @@ class InferenceSequenceSpec extends AnyFunSuite with SparkFixture {
 
   test("q151 bootstrap CI matches an independent replica computation") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q151fix").toString
+    val dir = tempDir("q151fix").toString
     val orders = (1L to 200L).map(k => (k, k, 10.00 + (k % 7)))
     orders.toDF("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -48,7 +46,7 @@ class InferenceSequenceSpec extends AnyFunSuite with SparkFixture {
 
   test("q152 quantile normalization maps both sources onto the global grid") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q152fix").toString
+    val dir = tempDir("q152fix").toString
     def doc(n: Int): String = Seq.fill(n)("t").mkString(" ")
     // a: lens 1,2,3,4; b: lens 10,20,30,40. Global sorted: 1,2,3,4,10,
     // 20,30,40. Each source's rank r maps to g = ceil(r*8/4) = 2r ->
@@ -66,7 +64,7 @@ class InferenceSequenceSpec extends AnyFunSuite with SparkFixture {
 
   test("q153 sequence support allows gaps and counts users once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q153fix").toString
+    val dir = tempDir("q153fix").toString
     def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
     // user 1: A B C (adjacent); user 2: A x B y C (gapped — still
     // supports A->B->C); user 3: C B A (reversed — supports only
@@ -86,7 +84,7 @@ class InferenceSequenceSpec extends AnyFunSuite with SparkFixture {
 
   test("q154 CUPED: y==x makes theta 1 and kills the raw lift") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q154fix").toString
+    val dir = tempDir("q154fix").toString
     def ts(us: Long) = java.sql.Timestamp.from(
       java.time.Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L))
     // pick two users per hash-parity arm so neither arm is empty

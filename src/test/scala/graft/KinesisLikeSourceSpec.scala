@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,8 +41,8 @@ class KinesisLikeSourceSpec extends AnyFunSuite with SparkFixture {
   test("incremental batches + checkpoint resume without duplication") {
     FakeKinesis.reset()
     FakeKinesis.createStream("s2", 2)
-    val ckpt = Files.createTempDirectory("src_ckpt").toString
-    val out = Files.createTempDirectory("src_out").toString
+    val ckpt = tempDir("src_ckpt").toString
+    val out = tempDir("src_out").toString
     (1L to 5L).foreach(i => put("s2", s"k$i", i, "a"))
     def run(): Unit = {
       val q = spark.readStream.format("kinesis-graft")

@@ -46,7 +46,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
   /** Four records over three dates, stored through `Archive.store`. */
   private def storeArchive(): JPath = {
     import spark.implicits._
-    val root = Files.createTempDirectory("localfs_archive")
+    val root = tempDir("localfs_archive")
     val df = Seq((1L, ts("2024-01-05 10:00:00"), 1.0), (2L, ts("2024-01-06 11:00:00"), 2.0),
       (3L, ts("2024-01-06 12:00:00"), 3.0), (4L, ts("2024-01-07 09:00:00"), 4.0))
       .toDF("event_id", "ts", "value")
@@ -62,7 +62,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
-    val ckpt = Files.createTempDirectory("localfs_ckpt")
+    val ckpt = tempDir("localfs_ckpt")
     try {
       storeArchive()
       FakeKinesis.reset()
@@ -73,7 +73,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
       val decoded = spark.readStream.format("kinesis-graft").option("stream", "lfs").load()
         .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
         .select("r.event_id", "r.ts", "r.value")
-      val root = Files.createTempDirectory("localfs_drain").toString
+      val root = tempDir("localfs_drain").toString
       StreamOps.startStore(decoded, root, "prod", ckpt.toString).awaitTermination()
       assert(Archive.read(spark, root, "prod", "20240101", "20241231").count() === 6)
       // control: the recording does see a process this thread starts
@@ -119,7 +119,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
       def written(conf: Configuration): Seq[(String, Int)] = {
         conf.set(FsPermission.UMASK_LABEL, umask)
         val fs = fileFs(conf)
-        val root = Files.createTempDirectory("localfs_perm")
+        val root = tempDir("localfs_perm")
         val r = new Path(root.toUri)
         fs.create(new Path(r, "a/b/file")).close()
         fs.mkdirs(new Path(r, "plain/dir"))
@@ -170,7 +170,7 @@ class LocalFsSpec extends AnyFunSuite with SparkFixture {
     val stockFc = FileContext.getLocalFSFileContext(new Configuration())
     assert(!stockFs.isInstanceOf[ForkFreeLocalFileSystem])
     assert(!stockFc.getDefaultFileSystem.isInstanceOf[ForkFreeLocalFs])
-    val dir = Files.createTempDirectory("localfs_link")
+    val dir = tempDir("localfs_link")
     val target = Files.write(dir.resolve("target"), "x".getBytes)
     val missing = dir.resolve("missing")
     val link = Files.createSymbolicLink(dir.resolve("link"), target)

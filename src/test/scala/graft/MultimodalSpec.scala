@@ -55,7 +55,7 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
   test("q89 samples every 2nd frame and sums exactly the sampled digests") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("giffix").toString
+    val dir = tempDir("giffix").toString
     // doc 2 -> 4 frames (samples f=0,2), doc 3 -> 5 frames (f=0,2,4)
     Seq((2L, "aa bb"), (3L, "cc dd"))
       .toDF("doc_id", "text")

@@ -16,7 +16,7 @@ class OpCacheSpec extends AnyFunSuite with SparkFixture {
 
   test("memoDir hits on an unchanged dir and rebuilds after mutation") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("opcache_spec")
+    val dir = tempDir("opcache_spec")
     try {
       Files.writeString(dir.resolve("part-0"), "one")
       var builds = 0
@@ -41,7 +41,7 @@ class OpCacheSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("dirStamp distinguishes absent, empty, and populated dirs") {
-    val dir = Files.createTempDirectory("opcache_stamp")
+    val dir = tempDir("opcache_stamp")
     try {
       assert(OpCache.dirStamp(dir.resolve("nope").toString) == "absent")
       val empty = OpCache.dirStamp(dir.toString)

@@ -37,7 +37,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
     // the corpus and the candidate bound goes quadratic — exactly the
     // measured scale failure, reproduced small
     val words = Array("alpha", "beta", "gamma", "delta", "eps")
-    val dir = java.nio.file.Files.createTempDirectory("saturated").toString
+    val dir = tempDir("saturated").toString
     (0 until 200).map { i =>
       val rnd = new scala.util.Random(i)
       (i.toLong, Seq.fill(30)(words(rnd.nextInt(words.length))).mkString(" "))
@@ -106,7 +106,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("empty_q").toString
+    val dir = tempDir("empty_q").toString
     // no vec_id is a multiple of 100 → the query set is empty
     Seq(1L, 2L, 3L).toDF("vec_id")
       .withColumn("embedding", expr("transform(sequence(1, 64), i -> cast(i as float))"))
@@ -119,7 +119,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
   test("annIvfKmeans with an empty corpus returns an empty frame, not a crash") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("empty_kmeans").toString
+    val dir = tempDir("empty_kmeans").toString
     Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
     val out = Similarity.annIvfKmeans(spark, dir)
@@ -130,7 +130,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
   test("q68 int8 quantization matches hand-computed components, zero vector safe") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("quant").toString
+    val dir = tempDir("quant").toString
     Seq((10L, Array(1.0f, -2.0f, 0.5f), 7), (11L, Array(0.0f, 0.0f, 0.0f), 3))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
@@ -410,7 +410,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
       (3L, 0L, "click"),
       (4L, 0L, "purchase"),
       (5L, day, "click"), (5L, day - 3600L * us, "purchase"))
-    val dir = java.nio.file.Files.createTempDirectory("explift").toString
+    val dir = tempDir("explift").toString
     rows.zipWithIndex.map { case ((u, t, ty), i) =>
       (i.toLong, t, u, ty, 0.0, "{}")
     }.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
@@ -444,7 +444,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
     }
     val docs = mk(1 to 400, 1, "bulk") ++ mk(401 to 440, 1, "mirror") ++
       (441 to 450).map(i => (i.toLong, longDoc, "en", "drift", 0L))
-    val dir = java.nio.file.Files.createTempDirectory("psi").toString
+    val dir = tempDir("psi").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val psi = graft.operators.TextAnalysis.sourcePsi(spark, dir).collect()
@@ -481,7 +481,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
     val rows = Seq(
       (1L, 0L, "x"), (2L, 1L * us, "y"),
       (3L, 7200L * us, "x"), (4L, 7201L * us, "y"), (5L, 7202L * us, "z"))
-    val dir = java.nio.file.Files.createTempDirectory("basket").toString
+    val dir = tempDir("basket").toString
     rows.map { case (id, t, ty) => (id, t, 1L, ty, 0.0, "{}") }
       .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
       .select($"event_id", timestamp_micros($"ts_us").as("ts"), $"user_id",
@@ -514,7 +514,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q134 benford: digit counting is exact and the expectation hits log10(1+1/d) to six places") {
-    val dir = java.nio.file.Files.createTempDirectory("benford").toString
+    val dir = tempDir("benford").toString
     writeOrders(dir, Seq(
       (1L, 1L, "O", 12.3, "1-URGENT"),
       (2L, 1L, "O", 923.0, "1-URGENT"),
@@ -529,7 +529,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q135 gini: equal spend is exactly 0, one-customer concentration is (n-1)/n") {
-    val dir = java.nio.file.Files.createTempDirectory("gini").toString
+    val dir = tempDir("gini").toString
     // nation 0: four customers spending identically -> gini exactly 0
     // nation 1: four customers, one holds all revenue -> gini = 3/4
     writeCustomer(dir, Seq(
@@ -551,7 +551,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val us = 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("scd2").toString
+    val dir = tempDir("scd2").toString
     // user 1 emits a,a,b,a -> three versions: a[10,30) b[30,40) a[40,open)
     val rows = Seq(
       (1L, 10L * us, 1L, "a"), (2L, 20L * us, 1L, "a"),
@@ -577,7 +577,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.functions._
     val us = 1000000L
     val day = 86400L
-    val dir = java.nio.file.Files.createTempDirectory("sweep").toString
+    val dir = tempDir("sweep").toString
     // day 0: user 1's session is [0, 1800s); user 3 starts AT 1800s ->
     //        never concurrent (half-open), peak stays 1
     // day 1: users 1 and 2 overlap (0s and 600s starts) -> peak 2
@@ -596,7 +596,7 @@ class OperatorEquivalenceSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q138 expectations: every declared rule fires on its planted violation") {
-    val dir = java.nio.file.Files.createTempDirectory("expect").toString
+    val dir = tempDir("expect").toString
     writeOrders(dir, Seq(
       (1L, 10L, "O", 5.0, "P1"),
       (1L, 10L, "X", 0.0, "P1"),   // dup key, bad status, price at the open bound

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class OverlapSkylineSpec extends AnyFunSuite with SparkFixture {
 
   test("q143 vocabulary Jaccard/overlap on a hand fixture") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q143fix").toString
+    val dir = tempDir("q143fix").toString
     // a: {x,y,z}; b: {y,z,w}; c: {q}. a∩b = {y,z}: J = 2/4, ovl = 2/3.
     Seq((1L, "x y z", "a"), (2L, "y z", "b"), (3L, "w y", "b"), (4L, "q", "c"))
       .toDF("doc_id", "text", "source")
@@ -27,7 +25,7 @@ class OverlapSkylineSpec extends AnyFunSuite with SparkFixture {
 
   test("q144 entity resolution closes chains and keeps singletons canonical") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q144fix").toString
+    val dir = tempDir("q144fix").toString
     // family "rose": aaaa ~ aaab (dist 1), aaab ~ aabb (dist 1) but
     // aaaa ~ aabb dist 2 also pairs; one 3-name chain either way.
     // "zzzz rose" is dist 4 from all -> singleton; family "lily" isolated.
@@ -47,7 +45,7 @@ class OverlapSkylineSpec extends AnyFunSuite with SparkFixture {
 
   test("q145 chi-square matches a hand computation and zeroes under independence") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q145fix").toString
+    val dir = tempDir("q145fix").toString
     def orders(rows: Seq[(String, String, Int)]) = {
       rows.flatMap { case (st, pr, k) => Seq.fill(k)((st, pr)) }
         .zipWithIndex
@@ -75,7 +73,7 @@ class OverlapSkylineSpec extends AnyFunSuite with SparkFixture {
 
   test("q146 skyline equals brute-force dominance incl. equal-point twins") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q146fix").toString
+    val dir = tempDir("q146fix").toString
     // (key, price, size): 1 (1.00, 5) frontier; 2 (1.00, 5) twin ->
     // BOTH survive; 3 (1.00, 3) dominated (same price, smaller);
     // 4 (2.00, 5) dominated (same size, pricier); 5 (2.00, 9) frontier;

@@ -19,7 +19,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cleaning").toString
+    val dir = tempDir("cleaning").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("t"))
@@ -216,7 +216,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
 
   test("q78 writes one file per shard and round-trips every document") {
     val dir = writeDocs((0L until 20L).map(i => i -> s"tok$i a b"))
-    val out = java.nio.file.Files.createTempDirectory("q78spec").toString
+    val out = tempDir("q78spec").toString
     val stats = graft.operators.Pipeline
       .trainingShards(spark, dir, nShards = 4, keepDir = Some(out)).collect()
     assert(stats.map(_.getLong(1)).sum === 20L, "every doc lands in a shard")
@@ -298,7 +298,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
     val spark2 = spark
     import spark2.implicits._
     import org.apache.spark.sql.functions.{col, length, lit}
-    val dir = java.nio.file.Files.createTempDirectory("xsrc").toString
+    val dir = tempDir("xsrc").toString
     // a/b share exactly the trigram "x1 x2 x3"; c shares nothing with
     // either; d and e hold only sub-trigram docs (NO grams at all) — the
     // leakage matrix must still carry every pair, including the
@@ -378,7 +378,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
     val spark2 = spark
     import spark2.implicits._
     import org.apache.spark.sql.functions.{col, length, lit}
-    val dir = java.nio.file.Files.createTempDirectory("tfidf").toString
+    val dir = tempDir("tfidf").toString
     // shared terms score ln(2/2)=0; each source's exclusive term wins rank 1
     Seq(
       (0L, "common one two zebra zebra zebra", "a"),
@@ -405,7 +405,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
   test("q82 per-label sums are the exact quantized-component arithmetic") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("embstats").toString
+    val dir = tempDir("embstats").toString
     Seq(
       (0L, Array(1.0f, -0.5f), 0),
       (1L, Array(0.25f, 0.25f), 0),
@@ -447,7 +447,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
   test("q86 flags the spike hour and withholds z until a full 24 h baseline") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("anomfix").toString
+    val dir = tempDir("anomfix").toString
     // 24 baseline hours alternating 9/11 events, then a 30-event spike
     // hour; hour h gets `cnt(h)` rows
     def cnt(h: Int): Int = if (h == 24) 30 else if (h % 2 == 0) 9 else 11
@@ -479,7 +479,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
   private def writeEvents(rows: Seq[(Long, String, Long, String)]): String = {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evfix").toString
+    val dir = tempDir("evfix").toString
     rows.toDF("event_id", "t", "user_id", "event_type")
       .withColumn("value", org.apache.spark.sql.functions.lit(1.0))
       .withColumn("ts", org.apache.spark.sql.functions.to_timestamp(
@@ -573,7 +573,7 @@ class PipelineCleaningSpec extends AnyFunSuite with SparkFixture {
     val spark2 = spark
     import spark2.implicits._
     import org.apache.spark.sql.functions.{lit => slit, to_timestamp, col}
-    val dir = java.nio.file.Files.createTempDirectory("rifix").toString
+    val dir = tempDir("rifix").toString
     def save(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.write.parquet(s"$dir/$name.parquet")
     save(Seq((1L, "n", 10L, 0.0, "M")).toDF(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +10,7 @@ class ResampleBucketCapSpec extends AnyFunSuite with SparkFixture {
 
   test("q160 resample matches an independent integer-interp reference") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q160fix").toString
+    val dir = tempDir("q160fix").toString
     // ids cover all four source rates; id 0 (8000 Hz) UPSAMPLES to 11025
     val docs = Seq((0L, "abcd"), (1L, "abcdefgh"), (2L, "xyzw"), (3L, "hello world"))
     docs.toDF("doc_id", "text")
@@ -57,7 +55,7 @@ class ResampleBucketCapSpec extends AnyFunSuite with SparkFixture {
 
   test("q162 caps every near-dup cluster at 2 kept docs, hash-ranked") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q162fix").toString
+    val dir = tempDir("q162fix").toString
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val b = "one two three four five six seven eight nine ten"
     val c = "solo unique text nothing matches this lonely document here now"

@@ -50,7 +50,7 @@ class RetrievalLayoutSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q121 dense 256x256 grid: z-order scans exactly 16 buckets, time-sort 64, identical matches") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder").toString
     val grid = spark.range(0, 65536).select(
       $"id".as("event_id"),
       timestamp_micros($"id" % 256).as("ts"),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,7 +35,7 @@ class RobustStatsSpec extends AnyFunSuite with SparkFixture {
 
   test("q141 lower median / MAD / outlier semantics on hand fixtures") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q141fix").toString
+    val dir = tempDir("q141fix").toString
     def doc(n: Int): String = Seq.fill(n)("w").mkString(" ")
     // src a: counts 1,2,3,4 -> lower median (rank 2) = 2; devs 1,0,1,2
     // sorted 0,1,1,2 -> MAD = 1; no dev > 5 -> 0 outliers.
@@ -57,7 +55,7 @@ class RobustStatsSpec extends AnyFunSuite with SparkFixture {
 
   test("q142 integer pagerank matches a hand-iterated fixture and conserves bounds") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q142fix").toString
+    val dir = tempDir("q142fix").toString
     // parts {1,2}, suppliers {1,2,3}; part 1 <-> {s1, s2}, part 2 <-> {s2, s3}
     val pairs = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L))
     pairs.toDF("l_partkey", "l_suppkey")
@@ -84,7 +82,7 @@ class RobustStatsSpec extends AnyFunSuite with SparkFixture {
 
   test("q139 stats are exact on a null/dup fixture and run in ONE Expand scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q139fix").toString
+    val dir = tempDir("q139fix").toString
     val ts = java.sql.Timestamp.valueOf("1995-06-01 00:00:00")
     Seq(
       (1L, 10L, "O", "1-URGENT", 10.00, ts),

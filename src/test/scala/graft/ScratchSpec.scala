@@ -39,35 +39,31 @@ class ScratchSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("deleting a work directory that holds a symlink leaves the link's target intact") {
-    val outside = Files.createTempDirectory("scratch_target")
-    try {
-      val target = Files.writeString(outside.resolve("corpus.parquet"), "corpus")
-      Scratch.withWorkDir("scratch_link") { d =>
-        val src = Files.createDirectories(d.resolve("src"))
-        Scratch.link(outside, src.resolve("dir_link"))
-        Scratch.link(target, src.resolve("file_link"))
-        assert(Files.isSymbolicLink(src.resolve("dir_link")))
-      }
-      assert(Files.readString(target) == "corpus")
-      assert(Scratch.liveWorkDirs.isEmpty)
-    } finally Scratch.delete(outside)
+    val outside = tempDir("scratch_target")
+    val target = Files.writeString(outside.resolve("corpus.parquet"), "corpus")
+    Scratch.withWorkDir("scratch_link") { d =>
+      val src = Files.createDirectories(d.resolve("src"))
+      Scratch.link(outside, src.resolve("dir_link"))
+      Scratch.link(target, src.resolve("file_link"))
+      assert(Files.isSymbolicLink(src.resolve("dir_link")))
+    }
+    assert(Files.readString(target) == "corpus")
+    assert(Scratch.liveWorkDirs.isEmpty)
   }
 
   test("q47 leaves no work directory behind when its drain fails") {
     // an events file without event_type: q47 raises while planning its
     // stream, after its work directory has been staged
-    val dir = Files.createTempDirectory("scratch_noetype")
-    try {
-      spark.read.parquet(s"$sfDir/events.parquet").drop("event_type")
-        .write.parquet(dir.resolve("events.parquet").toString)
-      val before = tmpEntries("q47_append")
-      intercept[Exception] {
-        SparkEntry.queries("q47_stream_hourly_append")(spark, dir.toString).collect()
-      }
-      assert(tmpEntries("q47_append") -- before == Set.empty,
-        "q47 left its work directory behind")
-      assert(Scratch.liveWorkDirs.isEmpty, s"left: ${Scratch.liveWorkDirs}")
-    } finally Scratch.delete(dir)
+    val dir = tempDir("scratch_noetype")
+    spark.read.parquet(s"$sfDir/events.parquet").drop("event_type")
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val before = tmpEntries("q47_append")
+    intercept[Exception] {
+      SparkEntry.queries("q47_stream_hourly_append")(spark, dir.toString).collect()
+    }
+    assert(tmpEntries("q47_append") -- before == Set.empty,
+      "q47 left its work directory behind")
+    assert(Scratch.liveWorkDirs.isEmpty, s"left: ${Scratch.liveWorkDirs}")
   }
 
   test("q185's auto-built ANN artifact is deleted by the scratch root's shutdown hook") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class StatsGraphImageSpec extends AnyFunSuite with SparkFixture {
 
   test("q147 Spearman hits +1/-1 on monotone fixtures and handles ties") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q147fix").toString
+    val dir = tempDir("q147fix").toString
     Seq((0L, "ALPHA"), (1L, "BRAVO"), (2L, "CHARLIE"))
       .toDF("n_nationkey", "n_name")
       .write.mode("overwrite").parquet(s"$dir/nation.parquet")
@@ -46,7 +44,7 @@ class StatsGraphImageSpec extends AnyFunSuite with SparkFixture {
     // (1) the 100x shape the fallback exists for: ONE nation holds every
     // customer, so the window form's nation-partitioned sort would be a
     // single giant task; the grid-rank form must produce the same rho
-    val dir = Files.createTempDirectory("q147grid").toString
+    val dir = tempDir("q147grid").toString
     Seq((0L, "ONLY")).toDF("n_nationkey", "n_name")
       .write.mode("overwrite").parquet(s"$dir/nation.parquet")
     (1L to 40L).map(c => (c, 0L)).toDF("c_custkey", "c_nationkey")
@@ -70,7 +68,7 @@ class StatsGraphImageSpec extends AnyFunSuite with SparkFixture {
 
   test("q148 triangles need every edge frequent, oriented once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q148fix").toString
+    val dir = tempDir("q148fix").toString
     // o10,o11 both carry {1,2,3} -> all three edges support 2 -> triangle.
     // {4,5,6} co-occur only in o13; (4,5) repeats via o12 but (4,6) and
     // (5,6) stay support 1 -> pruned -> NO second triangle.
@@ -88,7 +86,7 @@ class StatsGraphImageSpec extends AnyFunSuite with SparkFixture {
 
   test("q149 KS distance equals the hand ECDF sup") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q149fix").toString
+    val dir = tempDir("q149fix").toString
     def doc(n: Int): String = Seq.fill(n)("t").mkString(" ")
     // a: lens {1,2,3,4}, b: lens {3,4,5,6} -> sup |F_a - F_b| = 1/2
     val docs = Seq(1, 2, 3, 4).map(n => (n.toLong, doc(n), "a")) ++

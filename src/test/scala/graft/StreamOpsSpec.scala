@@ -20,8 +20,8 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
   test("store pipeline: stream -> date-partitioned .tri archive, restart-safe (K1)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val root = Files.createTempDirectory("store_root").toString
-    val ckpt = Files.createTempDirectory("store_ckpt").toString
+    val root = tempDir("store_root").toString
+    val ckpt = tempDir("store_ckpt").toString
     val in = MemoryStream[(Long, Timestamp, Double)]
     in.addData((1L, ts("2024-01-05 10:00:00"), 1.0), (2L, ts("2024-01-06 11:00:00"), 2.0))
     val df = in.toDF.toDF("event_id", "ts", "value")
@@ -44,8 +44,8 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     p.put("pipe", "k1", Map("event_id" -> 1L, "ts" -> ts("2024-01-05 10:00:00"), "value" -> 1.5))
     p.put("pipe", "k2", Map("event_id" -> 2L, "ts" -> ts("2024-01-06 10:00:00"), "value" -> 2.5))
     p.put("pipe", "k3", Map("event_id" -> 3L, "ts" -> ts("2024-01-09 10:00:00"), "value" -> 3.5))
-    val root = Files.createTempDirectory("pipe_root").toString
-    val ckpt = Files.createTempDirectory("pipe_ckpt").toString
+    val root = tempDir("pipe_root").toString
+    val ckpt = tempDir("pipe_ckpt").toString
     val decoded = spark.readStream.format("kinesis-graft").option("stream", "pipe").load()
       .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
       .select("r.event_id", "r.ts", "r.value")
@@ -62,8 +62,8 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     FakeKinesis.reset()
     FakeKinesis.createStream("redrain", 2)
     val p = new graft.streaming.StreamProducer
-    val root = Files.createTempDirectory("redrain_root").toString
-    val ckpt = Files.createTempDirectory("redrain_ckpt").toString
+    val root = tempDir("redrain_root").toString
+    val ckpt = tempDir("redrain_ckpt").toString
     val decoded = spark.readStream.format("kinesis-graft").option("stream", "redrain").load()
       .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
       .select("r.event_id", "r.ts", "r.value")
@@ -86,6 +86,71 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     assert(drain(2) === 0L)
     assert(drain(3) === 0L)
     assert(ids === (1 to 3).flatMap(r => (1L to 40L).map(r * 1000L + _)))
+  }
+
+  test("store drains write one .tri file per date, not one per shard and date") {
+    import spark.implicits._
+    import graft.streaming.FakeKinesis
+    FakeKinesis.reset()
+    FakeKinesis.createStream("perdate", 8)
+    val p = new graft.streaming.StreamProducer
+    val root = tempDir("perdate_root")
+    val ckpt = tempDir("perdate_ckpt").toString
+    val decoded = spark.readStream.format("kinesis-graft").option("stream", "perdate").load()
+      .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
+      .select("r.event_id", "r.ts", "r.value")
+    def put(ids: Seq[Long], day: Long => String): Unit = ids.foreach { id =>
+      p.put("perdate", s"k$id", Map("event_id" -> id, "ts" -> ts(s"${day(id)} 12:00:00"),
+        "value" -> id * 0.5))
+    }
+    def triFiles: Long = {
+      val st = Files.walk(root)
+      try st.filter { f =>
+        val n = f.getFileName.toString
+        n.endsWith(".tri") && !n.startsWith(".")
+      }.count() finally st.close()
+    }
+    def ids = Archive.read(spark, root.toString, "c", "20240101", "20241231")
+      .select("event_id").as[Long].collect().sorted.toSeq
+    // 240 records over 3 dates, spread by key hash over all 8 shards
+    put(1L to 240L, id => s"2024-01-0${5 + id % 3}")
+    assert(FakeKinesis.listShards("perdate").forall(FakeKinesis.latestSequence("perdate", _) >= 0))
+    StreamOps.startStore(decoded, root.toString, "c", ckpt).awaitTermination()
+    assert(triFiles === 3L) // one per date (per shard and date: 24)
+    assert(ids === (1L to 240L))
+    // a second, one-date drain on the same checkpoint adds one file
+    put(241L to 320L, _ => "2024-01-08")
+    StreamOps.startStore(decoded, root.toString, "c", ckpt).awaitTermination()
+    assert(triFiles === 4L)
+    assert(ids === (1L to 320L))
+  }
+
+  test("a finished store drain leaves its per-start session clone unreachable") {
+    import graft.streaming.FakeKinesis
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    FakeKinesis.reset()
+    FakeKinesis.createStream("unpin", 8)
+    val p = new graft.streaming.StreamProducer
+    (1L to 80L).foreach { id =>
+      p.put("unpin", s"k$id", Map("event_id" -> id, "ts" -> ts("2024-01-05 12:00:00"), "value" -> 1.0))
+    }
+    val decoded = spark.readStream.format("kinesis-graft").option("stream", "unpin").load()
+      .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
+      .select("r.event_id", "r.ts", "r.value")
+    // the session Spark cloned for this start, held here only weakly
+    def drain(): java.lang.ref.WeakReference[AnyRef] = {
+      val q = StreamOps.startStore(decoded, tempDir("unpin_root").toString, "c",
+        tempDir("unpin_ckpt").toString)
+      q.awaitTermination()
+      new java.lang.ref.WeakReference(
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.sparkSession)
+    }
+    val clone = drain()
+    // AQE's stage-pool threads live 60 s after their stage; a thread that
+    // inherited the clone as its active session would keep it that long
+    val deadline = System.nanoTime() + 20000000000L
+    while (clone.get != null && System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+    assert(clone.get == null, "a finished drain's session clone is still reachable")
   }
 
   test("watermarked tumbling window counts, late row beyond watermark dropped") {
@@ -278,7 +343,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     // guarantees phase-A files are NOT re-read after restart, so a
     // continued count can only come from recovered operator state.
     import spark.implicits._
-    val work = Files.createTempDirectory("tws_restart")
+    val work = tempDir("tws_restart")
     val src = work.resolve("src"); Files.createDirectories(src)
     val ckpt = work.resolve("ckpt").toString
     val sink = work.resolve("out").toString
@@ -334,7 +399,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
-      graft.io.Scratch.delete(work)
     }
   }
 
@@ -389,7 +453,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("q83 streamed router rollup equals the batch gate; nothing misroutes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q83fix").toString
+    val dir = tempDir("q83fix").toString
     // mixed fixture: doc 0 fails (short), docs 1-2 pass, doc 3 fails (no
     // stopwords) — two sources so the rollup has >1 row and each sink
     // receives rows
@@ -417,7 +481,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("q91 tws running counts over real micro-batches equal the batch rollup") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q91fix").toString
+    val dir = tempDir("q91fix").toString
     Seq(
       (1L, "2024-03-01 10:00:00", 7L, "click", 1.0),
       (2L, "2024-03-01 11:00:00", 7L, "view", 1.0),
@@ -440,7 +504,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("q92 stream-stream join pairs purchases inside the hour, drops the rest") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q92fix").toString
+    val dir = tempDir("q92fix").toString
     Seq(
       (1L, "2024-03-01 10:00:00", 7L, "click", 1.0),
       (2L, "2024-03-01 10:30:00", 7L, "purchase", 1.0), // in window: lag 30 min
@@ -476,7 +540,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("q83 routes a wholesale-failing corpus without a pass sink") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q83all").toString
+    val dir = tempDir("q83all").toString
     Seq((0L, "a b", "s0"), (1L, "c d", "s0"))
       .toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))

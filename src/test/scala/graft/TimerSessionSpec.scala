@@ -16,7 +16,7 @@ class TimerSessionSpec extends AnyFunSuite with SparkFixture {
 
   test("q159 timer sessions equal the batch gap-split, incl. timer-only finals") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("q159fix").toString
+    val dir = tempDir("q159fix").toString
     def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
     val G = 1800L
     // user 7: events at 0,60 | gap 2h | 7200,7260 -> 2 sessions, 4 events
@@ -45,7 +45,7 @@ class TimerSessionSpec extends AnyFunSuite with SparkFixture {
     // after the restart still closes by TIMER from recovered state
     // (user 8: its only event arrived before the stop).
     import spark.implicits._
-    val work = Files.createTempDirectory("tsess_restart")
+    val work = tempDir("tsess_restart")
     val src = work.resolve("src"); Files.createDirectories(src)
     val ckpt = work.resolve("ckpt").toString
     val sinkDir = work.resolve("out").toString
@@ -111,7 +111,6 @@ class TimerSessionSpec extends AnyFunSuite with SparkFixture {
         case Some(v) => spark.conf.set(providerKey, v)
         case None => spark.conf.unset(providerKey)
       }
-      graft.io.Scratch.delete(work)
     }
   }
 }

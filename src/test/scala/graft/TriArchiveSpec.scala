@@ -15,7 +15,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("tri write/read round-trip preserves rows and types") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tri_rt").resolve("out").toString
+    val dir = tempDir("tri_rt").resolve("out").toString
     val df = Seq(
       (1L, "click", 1.5, "2024-01-05 10:00:00"),
       (2L, "view", -2.25, "2024-01-05 11:30:00"),
@@ -32,7 +32,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("schema inference merges heterogeneous files (evolving producers)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tri_mixed").resolve("out").toString
+    val dir = tempDir("tri_mixed").resolve("out").toString
     // two generations of the same stream: a field added later
     Seq((1L, "a")).toDF("id", "kind")
       .write.format("tri").save(dir)
@@ -49,7 +49,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("column pruning: reading two columns decodes only those") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tri_prune").resolve("out").toString
+    val dir = tempDir("tri_prune").resolve("out").toString
     Seq((1L, "a", 9.9), (2L, "b", 8.8)).toDF("id", "kind", "v")
       .write.format("tri").save(dir)
     val pruned = spark.read.format("tri").load(dir).select("id", "kind")
@@ -60,7 +60,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("truncated tri file fails the read cleanly (no hang, no partial garbage)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tri_trunc").resolve("out").toString
+    val dir = tempDir("tri_trunc").resolve("out").toString
     Seq((1L, "a" * 200), (2L, "b" * 200), (3L, "c" * 200)).toDF("id", "s")
       .coalesce(1).write.format("tri").save(dir)
     val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".tri")).head
@@ -78,7 +78,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("garbage bytes in place of a .tri file fail cleanly at the snappy layer") {
-    val dir = Files.createTempDirectory("tri_garbage").toString
+    val dir = tempDir("tri_garbage").toString
     val rnd = new scala.util.Random(7)
     val junk = Array.fill(4096)(rnd.nextInt(256).toByte)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "junk.tri"), junk)
@@ -95,7 +95,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("archive store + range read prunes partitions and orders") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_arch").toString
+    val root = tempDir("tri_arch").toString
     val ev = Seq(
       (1L, "2024-01-05 10:00:00", 1.0),
       (2L, "2024-01-06 10:00:00", 2.0),
@@ -111,7 +111,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("Archive.read plans without running any Spark job (metadata-only invariant check)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_meta").toString
+    val root = tempDir("tri_meta").toString
     val ev = Seq((1L, "2024-01-05 10:00:00", 1.0), (2L, "2024-01-06 10:00:00", 2.0))
       .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
     Archive.store(ev, root, "clientA")
@@ -134,7 +134,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("maxRecordsPerFile rotates archive files like the reference's hourly cap (K1)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_rotate").toString
+    val root = tempDir("tri_rotate").toString
     val ev = (1L to 10L).map(i => (i, "2024-01-05 10:00:00", i.toDouble))
       .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
       .coalesce(1) // one task, so the file count is the rotation policy's doing
@@ -148,7 +148,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("maxBytesPerFile rotates on encoded bytes (skew-proof file sizing, K1)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_bytes").toString
+    val root = tempDir("tri_bytes").toString
     // ~115 encoded bytes/record; a 2 KiB budget forces rotation well below
     // any record-count cap
     val ev = (1L to 200L).map(i => (i, "2024-01-05 10:00:00", "x" * 100))
@@ -163,7 +163,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     val back = Archive.read(spark, root, "c1", "20240101", "20241231")
     assert(back.select("event_id").as[Long].collect().sorted.toSeq === (1L to 200L))
     // same data without a budget: a single file (policy off by default)
-    val root2 = Files.createTempDirectory("tri_bytes_off").toString
+    val root2 = tempDir("tri_bytes_off").toString
     Archive.store(ev, root2, "c1")
     assert(new java.io.File(root2, "date=20240105/client=c1")
       .listFiles().count(_.getName.endsWith(".tri")) === 1)
@@ -171,7 +171,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("leftover empty client dir does not trip the single-client invariant") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_empty").toString
+    val root = tempDir("tri_empty").toString
     val ev = Seq((1L, "2024-01-05 10:00:00", 1.0))
       .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
     Archive.store(ev, root, "clientA")
@@ -188,7 +188,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("mixed clients in a range raise (reference single-client invariant)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_mixed").toString
+    val root = tempDir("tri_mixed").toString
     val ev = Seq((1L, "2024-01-05 10:00:00", 1.0))
       .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
     Archive.store(ev, root, "clientA")
@@ -201,7 +201,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("client names needing partition-path escaping survive the metadata listing") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_esc").toString
+    val root = tempDir("tri_esc").toString
     val ev = Seq((1L, "2024-01-05 10:00:00", 1.0))
       .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
     // ':' and ' ' are escaped in partition directory names — the
@@ -214,7 +214,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("mixed-client check reads date and client from escaped file paths") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_mixed_esc").toString
+    val root = tempDir("tri_mixed_esc").toString
     def ev(ts: String) = Seq((1L, ts, 1.0))
       .toDF("event_id", "ts", "value").withColumn("ts", to_timestamp($"ts"))
     Archive.store(ev("2024-01-05 10:00:00"), root, "client: a")
@@ -231,7 +231,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("a first record over 1 MiB infers its schema and reads back") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_big").toString
+    val root = tempDir("tri_big").toString
     val blob = Array.tabulate[Byte](2 << 20)(i => (i * 31).toByte)
     val ev = Seq((1L, "2024-01-05 10:00:00", blob), (2L, "2024-01-05 11:00:00", Array[Byte](7)))
       .toDF("event_id", "ts", "payload").withColumn("ts", to_timestamp($"ts"))
@@ -245,7 +245,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("a sampled file that holds no record is skipped by schema inference") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tri_empty").resolve("out").toString
+    val dir = tempDir("tri_empty").resolve("out").toString
     // an empty frame writes a header-only .tri file (the snappy stream id)
     Seq.empty[(Long, String)].toDF("id", "kind").coalesce(1).write.format("tri").save(dir)
     Seq((1L, "a")).toDF("id", "kind").write.format("tri").mode("append").save(dir)
@@ -256,7 +256,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("tri works as a file stream source (readStream over the archive)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tri_stream").resolve("in").toString
+    val dir = tempDir("tri_stream").resolve("in").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "kind").write.format("tri").save(dir)
     val schema = spark.read.format("tri").load(dir).schema
     val q = spark.readStream.format("tri").schema(schema).load(dir)
@@ -273,8 +273,8 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
-    val out = Files.createTempDirectory("tri_sink").resolve("out").toString
-    val ckpt = Files.createTempDirectory("tri_sink_ckpt").toString
+    val out = tempDir("tri_sink").resolve("out").toString
+    val ckpt = tempDir("tri_sink_ckpt").toString
     val in = MemoryStream[(Long, String)]
     in.addData((1L, "a"), (2L, "b"))
     val q = in.toDF.toDF("id", "kind")
@@ -298,7 +298,7 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
 
   test("compact collapses a small-file partition, preserves rows, and is idempotent") {
     import spark.implicits._
-    val root = Files.createTempDirectory("tri_compact").resolve("archive").toString
+    val root = tempDir("tri_compact").resolve("archive").toString
     // 20 rows on one day, rotation cap 3 -> ceil(20/3)-ish files per task
     val df = (1L to 20L).map(i => (i, "click", i * 0.5, f"2024-01-05 10:00:${i % 60}%02d"))
       .toDF("event_id", "event_type", "value", "t")
