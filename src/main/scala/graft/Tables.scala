@@ -121,14 +121,13 @@ object Tables {
         builder.config("spark.executor.extraClassPath", sys.env.getOrElse("SPARK_GRAFT_CLASSDIR",
           new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath))
       else builder).getOrCreate()
-    // opt-in state-store provider for the streaming queries (q43/q47/
-    // q59/q72): RocksDB keeps streaming state off-heap, which is how a
-    // production cluster sizes stateful executors — the sf10 ladder
-    // measured q72's in-memory (HDFS-backed) state store paying a
-    // 3.7x GC tax on a 16 GiB heap (BENCH_NOTES). Example:
-    //   SPARK_GRAFT_STATESTORE=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach(p =>
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+    // The state store stays Spark's default. q91 and q159 choose RocksDB
+    // themselves (StreamOps.withRocksDbState). A deployment that wants
+    // RocksDB for every stateful query sets
+    // spark.sql.streaming.stateStore.providerClass as a Spark conf
+    // (`-Dspark.sql.streaming.stateStore.providerClass=...` or `--conf`),
+    // which SparkSession.builder() picks up: the sf10 ladder measured q72's in-memory
+    // store paying a 3.7x GC tax on a 16 GiB heap (BENCH_NOTES).
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.StructType
   *  - `work/<tag>…` — one directory per query run ([[withWorkDir]]), deleted
   *    on every exit path of the run;
   *  - `cache/<tag>…` — corpus-derived files built once and reused by later
-  *    runs in the same JVM ([[cached]]): staged stream inputs, q33's pinned
-  *    `.tri` archive, the auto-built ANN index artifacts.
+  *    runs in the same JVM ([[cacheDir]], memoized by
+  *    [[graft.operators.OpCache.directory]]): staged stream inputs, q33's
+  *    pinned `.tri` archive, the auto-built ANN index artifacts.
   * Counting the files under the root therefore counts what a pass leaves
   * behind.
   *
@@ -51,45 +52,16 @@ object Scratch {
     try body(d) finally delete(d)
   }
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
-  /** The directory memoized under `key`: on first use `build` fills a fresh
-    * `cache/<tag>…` directory (removed again if `build` throws); later calls
-    * return the same directory until [[forget]] or JVM exit. Keys carry
-    * whatever makes the content stale (application id, corpus stamp).
+  /** A fresh directory `cache/<tag>…`, for a memo that outlives one run;
+    * [[graft.operators.OpCache.directory]] owns and deletes it.
     */
-  def cached(key: String, tag: String)(build: Path => Unit): Path = {
-    val hit = memo.get(key)
-    if (hit != null) hit
-    else memo.synchronized {
-      val again = memo.get(key)
-      if (again != null) again
-      else {
-        val d = Files.createTempDirectory(
-          Files.createDirectories(base.resolve("cache")), tag)
-        try build(d)
-        catch { case e: Throwable => delete(d); throw e }
-        memo.put(key, d)
-        d
-      }
-    }
-  }
+  private[graft] def cacheDir(tag: String): Path =
+    Files.createTempDirectory(Files.createDirectories(base.resolve("cache")), tag)
 
-  /** Forgets and deletes every cached directory whose key starts with
-    * `prefix`.
+  /** The shutdown hook's body: deletes the root. A later scratch call
+    * recreates it.
     */
-  def forget(prefix: String): Unit = memo.synchronized {
-    memo.keySet.asScala.filter(_.startsWith(prefix)).toList
-      .foreach(k => Option(memo.remove(k)).foreach(delete))
-  }
-
-  /** The shutdown hook's body: forgets every cached directory and deletes
-    * the root. A later scratch call recreates the root.
-    */
-  private[graft] def deleteRoot(): Unit = {
-    memo.clear()
-    delete(base)
-  }
+  private[graft] def deleteRoot(): Unit = delete(base)
 
   /** Deletes `p` and everything under it. Never traverses through a
     * symlink: staged inputs link to the real corpus, so a link is removed

@@ -272,18 +272,15 @@ object AnnIndexStore {
     }
   }
 
-  /** One artifact per (session, corpus-stamp, params): q185's memo. The
-    * artifact OUTLIVES the memo — a fresh session pointed at the same
-    * path serves without rebuilding (that is the point) — but the
-    * registered query keys its auto-managed path by corpus stamp so a
-    * rewritten corpus triggers a rebuild instead of tripping the serve
-    * guard. The auto-built artifact is a [[graft.io.Scratch.cached]]
-    * directory, deleted with the scratch root on JVM exit.
+  /** The registered queries' auto-built artifact: an [[OpCache.directory]]
+    * memo, so a rewritten corpus rebuilds it instead of tripping the serve
+    * guard. (A written artifact outlives any session — a fresh session
+    * pointed at the same path serves without rebuilding; that is the
+    * point of [[write]].)
     */
   private[graft] def artifactPath(s: SparkSession, dir: String, nCells: Int,
       iters: Int, nSub: Int, nCodes: Int, pqIters: Int): String =
-    graft.io.Scratch.cached(s"annidx|${s.sparkContext.applicationId}|$dir|" +
-        s"${OpCache.dirStamp(dir)}|$nCells|$iters|$nSub|$nCodes|$pqIters", "annidx") { p =>
+    OpCache.directory("annidx", s, dir, s"$nCells|$iters|$nSub|$nCodes|$pqIters") { p =>
       write(s, dir, p.toString, nCells, iters, nSub, nCodes, pqIters)
     }.toString
 

@@ -204,11 +204,11 @@ object Clustering {
     * here four operators share the entire closure computation.)
     */
   private[operators] def lshComponents(s: SparkSession, dir: String): DataFrame =
-    OpCache.memoDir("lshComponents", s.sparkContext.applicationId, dir, "", {
+    OpCache.dataset("lshComponents", s, dir) {
       import s.implicits._
       val pairs = TextDedup.minhashLshPairs(s, dir).select($"doc_a", $"doc_b")
-      connectedComponents(pairs).cache()
-    }).toDF()
+      connectedComponents(pairs)
+    }.toDF()
 
   /** q48: near-dup clusters over the minhash-LSH verified pairs (q21's
     * exact-Jaccard >= 0.8 pair set) — each clustered document with its
@@ -315,8 +315,7 @@ object Clustering {
     * one cached big build, the same discipline a 100 TB Pregel runs.
     */
   def bipartitePagerank(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    val edges = OpCache.memoDir("prEdges", s.sparkContext.applicationId, dir, "",
-      pagerankEdgesWindowed(s, dir).cache())
+    val edges = OpCache.dataset("prEdges", s, dir)(pagerankEdgesWindowed(s, dir))
     pagerankFromEdges(s, edges.toDF(), iters)
   }
 
@@ -439,8 +438,7 @@ object Clustering {
     */
   private[operators] def copurchaseEdges(s: SparkSession, dir: String,
                                          minSupport: Int): DataFrame =
-    OpCache.memoDir("copurchaseEdges", s.sparkContext.applicationId, dir,
-      s"$minSupport", {
+    OpCache.dataset("copurchaseEdges", s, dir, minSupport) {
         import s.implicits._
         val op = graft.Tables.table(s, dir, "lineitem")
           .select($"l_orderkey", $"l_partkey").distinct()
@@ -449,8 +447,7 @@ object Clustering {
           .groupBy($"a.l_partkey".as("pa"), $"b.l_partkey".as("pb"))
           .agg(count(lit(1)).as("c"))
           .where($"c" >= minSupport)
-          .cache()
-      })
+      }
 
   def copurchaseTriangles(s: SparkSession, dir: String,
                           minSupport: Int = 2): DataFrame = {

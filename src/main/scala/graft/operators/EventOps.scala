@@ -679,15 +679,14 @@ object EventOps {
       .limit(k)
   }
 
-  /** One pinned `.tri` archive per source dataset per JVM: the archive is
-    * written on first use and reused by later invocations (the bench's
-    * steady pass then times read+decode, not a repeated write), keyed by
-    * the source directory so different scale factors never collide. It
-    * lives in a [[Scratch.cached]] directory, removed on JVM exit.
+  /** The pinned `.tri` archive of `dir`'s events: written on first use and
+    * reused by later invocations (the bench's steady pass then times
+    * read+decode, not a repeated write) — an [[OpCache.directory]] memo,
+    * so a rewritten events file rebuilds it.
     */
   private def triArchiveFor(s: SparkSession, dir: String): String = {
     import s.implicits._
-    Scratch.cached(s"tri|$dir", "tri_cache") { base =>
+    OpCache.directory("tri_cache", s, s"$dir/events.parquet") { base =>
       val ev = events(s, dir).select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       graft.sources.Archive.store(ev, base.resolve("archive").toString, "graft")
     }.resolve("archive").toString
@@ -1772,12 +1771,11 @@ object EventOps {
     // written per pass before this memo), late slice, two sentinel
     // groups, group order pinned by explicit mtimes — is a pure function
     // of the corpus: built once per (session, corpus stamp) and
-    // symlinked into each run's work dir (StageCache discipline; the
+    // symlinked into each run's work dir (StreamOps.linkInto; the
     // symlinked stream source reads the TARGETS' pinned mtimes, so batch
     // composition is exactly the built layout). The drain, the sink
     // read-back, and the per-type totals still run in full every pass.
-    val stagedSrc = graft.streaming.StreamOps.StageCache.stagedDir(
-        s, s"$dir/events.parquet", s"q179src_$lateMod") { root =>
+    val stagedSrc = OpCache.directory(s"q179src_$lateMod", s, s"$dir/events.parquet") { root =>
       // the on-time write and the max-ts probe are independent jobs —
       // overlap them (guide §2.6); the write's file count gates staging
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
@@ -1854,7 +1852,7 @@ object EventOps {
     // files are shared across passes)
     Scratch.withWorkDir("q179_late") { work =>
       val src = java.nio.file.Files.createDirectories(work.resolve("src"))
-      graft.streaming.StreamOps.StageCache.linkInto(stagedSrc, src)
+      graft.streaming.StreamOps.linkInto(stagedSrc, src)
       val nGroup = math.max(1, stagedSrc.toFile.listFiles().count(f =>
         f.getName.endsWith(".parquet") && !f.getName.startsWith("zz_")))
       val schema = s.read.parquet(src.toString).schema

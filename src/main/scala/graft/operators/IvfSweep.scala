@@ -46,7 +46,7 @@ object IvfSweep {
       }
       val meanFrac = fracs.sum / fracs.length
       println(f"""{"cells":$nCells,"probes":$nProbe,"recall@5":$mean%.3f,"scanned":$meanFrac%.3f,"lift":${mean / meanFrac}%.2f}""")
-      Similarity.releaseCaches()
+      OpCache.releaseAll()
     }
     spark.stop()
   }

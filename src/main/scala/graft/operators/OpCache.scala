@@ -1,51 +1,68 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import java.nio.file.{Files, Path}
 
-/** Operator-lifetime Dataset cache registry, shared by the operators whose
-  * corpus-derived caches must outlive their builder call (the returned
-  * DataFrame's plan reads them at action time) AND whose build closures
-  * capture fresh Broadcast handles — which defeats Spark's plan-identity
-  * cache dedup, so a naive per-call `.cache()` leaks one entry per call.
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+import graft.io.Scratch
+
+/** The engine's one session-memo registry. Every memo — a cached Dataset,
+  * a driver-side value (a codebook, a rank table, a built-table marker) or
+  * a scratch directory (a staged stream input, an archive, an index
+  * artifact) — goes through [[dataset]], [[value]] or [[directory]], under
+  * one rule:
+  *  - the key is (family, application id, input path, the input's
+  *    [[dirStamp]], params), so a new session or a rewritten input misses
+  *    and rebuilds instead of serving what the old contents produced;
+  *  - each family keeps one live entry: a miss releases the family's
+  *    previous entry before the build. Queries that share a family with
+  *    different params name the params in the family, so they do not
+  *    evict each other;
+  *  - each kind has one release: a Dataset is unpersisted, a value is
+  *    dropped, a directory is deleted ([[graft.io.Scratch.delete]]).
   *
-  * Each family memoizes under an explicit (family, session, key): a repeat
-  * call returns the SAME cached Dataset, and a call with a NEW key releases
-  * the family's previous cache, so a long-lived session holds at most one
-  * live cache per operator family. (Unpersisting a cache a still-running
-  * older query references is safe — Spark recomputes evicted partitions
-  * from lineage; it costs that query a rescan, never correctness.)
-  * `releaseAll()` drops everything, for session teardown or tests.
+  * Why a registry at all: the cached frames' build closures capture fresh
+  * Broadcast handles, which defeats Spark's plan-identity cache dedup, so a
+  * bare per-call `.cache()` would leak one entry per call. Unpersisting a
+  * cache an older, still-running query references is safe (Spark
+  * recomputes evicted partitions from lineage); a directory memo is only
+  * evicted by a call with a different key, and its consumers finish with
+  * the directory before the next query runs. [[releaseAll]] drops
+  * everything, for session teardown or tests. Which memos exist at all is
+  * measured (BENCH_NOTES "Memo audit"), and no memo may cover the
+  * computation a registered query exists to measure (OPTIMIZATION_r13.md,
+  * "The memo-boundary rule").
   */
 private[graft] object OpCache {
 
-  private val liveCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, Dataset[_]]()
+  private final case class Entry(key: String, value: Any, isLive: () => Boolean,
+                                 release: () => Unit)
 
-  /** Cheap content fingerprint of an input directory: regular-file count,
-    * total bytes, max mtime (millis). Memo keys that embed an input dir
-    * also embed its stamp (via [[memoDir]]), so a MUTATED dir — a
-    * compaction, a re-generated corpus, an appended partition — misses
-    * the memo and rebuilds instead of silently serving frames derived
-    * from the old contents. The walk is driver-side file listing, the
-    * same cost class planners already pay per query; bounded at 100k
-    * entries (a corpus dir here is a handful of parquet files). Paths
-    * the local filesystem can't resolve (remote URIs) stamp as
-    * "unstamped" — behavior degrades to the round-9 convention (caller
-    * guarantees immutability), never to an error.
+  private val live = new java.util.HashMap[String, Entry]()
+  private var nBuilds = 0L
+
+  /** Cheap content fingerprint of an input path: regular-file count,
+    * total bytes, max mtime (millis). Every memo key carries the stamp of
+    * its input, so a MUTATED input — a compaction, a re-generated corpus,
+    * an appended partition — misses the memo and rebuilds. The walk is
+    * driver-side file listing, the same cost class planners already pay
+    * per query; bounded at 100k entries (a corpus dir here is a handful of
+    * parquet files). Paths the local filesystem can't resolve (remote
+    * URIs) stamp as "unstamped": the caller then guarantees immutability.
     */
   def dirStamp(dir: String): String =
     try {
       val p = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(p)) "absent"
+      if (!Files.exists(p)) "absent"
       else {
         var n = 0L; var bytes = 0L; var maxM = 0L
-        val st = java.nio.file.Files.walk(p)
+        val st = Files.walk(p)
         try {
           val it = st.iterator()
           while (it.hasNext && n < 100000) {
             val f = it.next()
             try {
-              val a = java.nio.file.Files.readAttributes(
+              val a = Files.readAttributes(
                 f, classOf[java.nio.file.attribute.BasicFileAttributes])
               if (a.isRegularFile) {
                 n += 1; bytes += a.size()
@@ -58,60 +75,67 @@ private[graft] object OpCache {
       }
     } catch { case scala.util.control.NonFatal(_) => "unstamped" }
 
-  /** [[memo]] for caches derived from an input directory: the dir's
-    * [[dirStamp]] joins the key, so mutated inputs invalidate (the
-    * family-eviction in memo releases the stale entry on the next call).
-    */
-  def memoDir[T](family: String, appId: String, dir: String, subKey: String,
-                 build: => Dataset[T]): Dataset[T] =
-    memo(family, appId, s"$dir|${dirStamp(dir)}|$subKey", build)
+  /** `build`, cached (`.cache()`), memoized under the rule above. */
+  def dataset[T](family: String, s: SparkSession, dir: String, params: Any = "")
+                (build: => Dataset[T]): Dataset[T] =
+    memo[Dataset[T]](family, s, dir, params, build.cache(), _ => true, _.unpersist())
 
-  def memo[T](family: String, appId: String, key: String,
-              build: => Dataset[T]): Dataset[T] =
-    liveCaches.synchronized {
-      val full = s"$family|$appId|$key"
-      val hit = liveCaches.get(full)
-      if (hit != null) hit.asInstanceOf[Dataset[T]]
+  /** A driver-side value memoized under the rule above. */
+  def value[T](family: String, s: SparkSession, dir: String, params: Any = "")
+              (build: => T): T =
+    memo[T](family, s, dir, params, build, _ => true, _ => ())
+
+  /** A scratch directory `cache/<family>…` that `build` fills on a miss
+    * (deleted again if `build` throws), memoized under the rule above. A
+    * directory deleted under the registry (the scratch root's shutdown
+    * hook) counts as a miss.
+    */
+  def directory(family: String, s: SparkSession, dir: String, params: Any = "")
+               (build: Path => Unit): Path =
+    memo[Path](family, s, dir, params, {
+      val d = Scratch.cacheDir(family)
+      try build(d) catch { case e: Throwable => Scratch.delete(d); throw e }
+      d
+    }, Files.isDirectory(_), Scratch.delete)
+
+  private def memo[T](family: String, s: SparkSession, dir: String, params: Any,
+                      build: => T, isLive: T => Boolean, release: T => Unit): T =
+    synchronized {
+      val key = s"${s.sparkContext.applicationId}|$dir|${dirStamp(dir)}|$params"
+      val hit = live.get(family)
+      if (hit != null && hit.key == key && hit.isLive()) hit.value.asInstanceOf[T]
       else {
-        val it = liveCaches.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getKey.startsWith(family + "|")) {
-            try e.getValue.unpersist()
-            catch { case scala.util.control.NonFatal(_) => () } // stopped old session
-            it.remove()
-          }
-        }
-        val ds = build
-        liveCaches.put(full, ds)
-        ds
+        OpCache.release(family)
+        val v = build
+        nBuilds += 1
+        live.put(family, Entry(key, v, () => isLive(v), () => release(v)))
+        v
       }
     }
 
-  /** Unpersist and forget a single family's live cache (if any). For paths
-    * that prove the cache will never be read (e.g. an empty corpus): a bare
-    * `unpersist()` on the Dataset would leave the registry entry behind, so
-    * a later call on the same key would get a memo hit on a no-longer-
-    * cached Dataset — correct but silently recomputing per action.
+  /** Releases one family's live entry, if any — for a path that proves
+    * the memo will never be read (an empty corpus), so a later call
+    * rebuilds instead of hitting an unpersisted Dataset.
     */
-  def release(family: String): Unit = liveCaches.synchronized {
-    val it = liveCaches.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(family + "|")) {
-        try e.getValue.unpersist()
-        catch { case scala.util.control.NonFatal(_) => () }
-        it.remove()
-      }
+  def release(family: String): Unit = synchronized {
+    Option(live.remove(family)).foreach { e =>
+      try e.release()
+      catch { case scala.util.control.NonFatal(_) => () } // stopped old session
     }
   }
 
-  def releaseAll(): Unit = liveCaches.synchronized {
-    val it = liveCaches.entrySet().iterator()
-    while (it.hasNext) {
-      try it.next().getValue.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-      it.remove()
-    }
+  /** Releases every live entry. */
+  def releaseAll(): Unit = synchronized {
+    new java.util.ArrayList(live.keySet).forEach(f => release(f))
   }
+
+  /** Families holding a live entry (one entry each), sorted. */
+  private[graft] def liveFamilies: Seq[String] = synchronized {
+    import scala.jdk.CollectionConverters._
+    live.keySet.asScala.toList.sorted
+  }
+
+  /** Memos built since the JVM started: a pass that adds none reused
+    * every memo it touched. */
+  private[graft] def builds: Long = synchronized(nBuilds)
 }

@@ -868,8 +868,7 @@ object Relational {
     // and a mutated dir misses the stamp and rebuilds, so a stale table
     // can never serve; the warehouse footprint is two fixed-name tables
     // that the next build overwrites (bounded, not per-run growth).
-    val bk = s"${s.sparkContext.applicationId}|$dir|${OpCache.dirStamp(dir)}|$buckets"
-    bucketedAuditBuilt.computeIfAbsent(bk, _ => {
+    OpCache.value("bucketedAudit", s, dir, buckets) {
       // a PREVIOUS JVM's tables are directories under the warehouse with
       // no entry in THIS session's (in-memory) catalog — saveAsTable then
       // fails with LOCATION_ALREADY_EXISTS instead of overwriting. Drop
@@ -890,8 +889,7 @@ object Relational {
           expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("cents"))
         .write.bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable(tl)
-      java.lang.Boolean.TRUE
-    })
+    }
     try {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = s.table(to)
@@ -927,11 +925,6 @@ object Relational {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
-
-  /** (session, corpus-stamp)-keyed marker for q161's bucketed tables —
-    * built once, joined many times (the bucketing deployment shape). */
-  private val bucketedAuditBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Broadcast-plan audit (q164): q161's canary idea applied to the
     * OTHER join strategy that matters at 100 TB — the star join. The

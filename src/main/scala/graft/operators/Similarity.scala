@@ -21,37 +21,6 @@ import graft.Tables.table
   */
 object Similarity {
 
-  /** Corpus caches (`annBruteForce`'s vectors, the LSH signatures, the
-    * k-means inverted file) live in the shared [[OpCache]] registry — see
-    * its doc for the lifetime/leak rationale. `releaseCaches()` drops
-    * everything, for session teardown or tests.
-    */
-  private def memoCache[T](family: String, s: SparkSession, dir: String,
-                           build: => Dataset[T]): Dataset[T] =
-    memoCacheSub(family, s, dir, "", build)
-
-  private def memoCacheSub[T](family: String, s: SparkSession, dir: String,
-                              subKey: String, build: => Dataset[T]): Dataset[T] =
-    OpCache.memoDir(family, s.sparkContext.applicationId, dir, subKey, build)
-
-  def releaseCaches(): Unit = {
-    OpCache.releaseAll()
-    // the codebook memo is derived data keyed by (appId, dir, ...): after a
-    // release + rewrite of the same dir the vector cache rebuilds from the
-    // new files, so a stale codebook would silently disagree with its
-    // corpus — drop it with the Datasets (and stop old-appId entries
-    // accumulating across sessions)
-    codebooks.clear()
-    pqCodebookCache.clear()
-    // BPE merge ranks are the same class of derived data (trained off the
-    // dir's documents table) — release them with the rest
-    TextAnalysis.clearBpeRankCache()
-    // staged derived stream inputs (sentinels, q104 dup slice, q111/q130
-    // fixed-file-count copies) are corpus-derived too — forget and delete
-    // them with the Dataset memos
-    graft.streaming.StreamOps.StageCache.clear()
-  }
-
   /** (vec_id, v as double[], norm) rows — the shared input shape. */
   private def vecDs(s: SparkSession, dir: String) = {
     import s.implicits._
@@ -130,7 +99,7 @@ object Similarity {
     // for every scoring pass; cached, the file is read once and spills to
     // executor storage if the corpus outgrows memory. Memoized: a repeat
     // query reuses the live cache, a new dir releases the previous one.
-    val vecs = memoCache("annBruteForce", s, dir, vecDs(s, dir).cache())
+    val vecs = OpCache.dataset("annBruteForce", s, dir)(vecDs(s, dir))
     // the query set is chunk-collected below, so cache it across the
     // per-chunk collects (ids pass + one vectors pass per chunk);
     // released before returning — the broadcasts own the data after that
@@ -269,8 +238,8 @@ object Similarity {
     // memoized like minhashLshPairs: q23 and the q155 eval both consume
     // this exact-quadratic frame — without the memo each paid the full
     // all-pairs pass (110 s at sf10 for q155 alone, BENCH_NOTES)
-    OpCache.memoDir("cosineExactPairs", s.sparkContext.applicationId, dir,
-      s"$threshold/$blocks", cosineNearDupPairsUncached(s, dir, threshold, blocks).cache())
+    OpCache.dataset("cosineExactPairs", s, dir, s"$threshold/$blocks")(
+      cosineNearDupPairsUncached(s, dir, threshold, blocks))
   }
 
   private def cosineNearDupPairsUncached(s: SparkSession, dir: String,
@@ -427,25 +396,15 @@ object Similarity {
     // memoized like the LSH signatures (annLshSigs): the codebook is
     // deterministic derived data — k x dim doubles — so repeated queries
     // reuse the built index instead of re-running the k-means jobs
-    // (2.0 s -> probe-only at sf0.1, measured). Keyed per session app id;
-    // entries are a few KB each.
-    val key = s"${s.sparkContext.applicationId}|$dir|$nCells|$iters"
-    codebooks.computeIfAbsent(key, _ => buildKmeansCodebook(s, dir, nCells, iters))
+    // (2.0 s -> probe-only at sf0.1, measured). A few KB per entry.
+    OpCache.value(s"kmeansCodebook|$nCells|$iters", s, dir)(
+      buildKmeansCodebook(s, dir, nCells, iters))
   }
-
-  private val codebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Double], Double)]]()
-
-  /** Test hook: live (coarse, PQ) codebook memo counts —
-    * AnnIndexStoreSpec's no-rebuild-on-serve proof reads these. */
-  private[graft] def codebookCacheSizes: (Int, Int) =
-    (codebooks.size, pqCodebookCache.size)
 
   private def buildKmeansCodebook(s: SparkSession, dir: String,
                                   nCells: Int, iters: Int): Array[(Int, Array[Double], Double)] = {
     import s.implicits._
-    val vecs = memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    val vecs = rawVecs(s, dir)
     // the ONE corpus pass of the build: TakeOrdered by (hash60, vec_id)
     // bounds the training set whatever the corpus size
     val ordered = vecs
@@ -580,8 +539,7 @@ object Similarity {
   def annIvfKmeans(s: SparkSession, dir: String, queries: DataFrame, k: Int,
                    nCells: Int, nProbe: Int, iters: Int): DataFrame = {
     import s.implicits._
-    val vecs = memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    val vecs = rawVecs(s, dir)
     if (vecs.isEmpty) // no corpus → no codebook to seed; mirror annBruteForce's empty contract
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("query_id", "rank", "neighbor_id", "cosine")
@@ -589,8 +547,8 @@ object Similarity {
     // the inverted file (cell assignments) is as deterministic as the
     // codebook — cache it alongside so steady-state queries pay probe +
     // in-cell search only, the IVF contract
-    val assigned = memoCacheSub("annIvfKmeansIdx", s, dir, s"$nCells|$iters",
-      assignCells(s, vecs, cents).cache()).toDF("cell", "vec_id", "v", "nrm")
+    val assigned = OpCache.dataset(s"annIvfKmeansIdx|$nCells|$iters", s, dir)(
+      assignCells(s, vecs, cents)).toDF("cell", "vec_id", "v", "nrm")
     val centsDf = cents.toSeq.toDF("cell", "cv", "cn")
     ivfSearch(s, assigned, centsDf,
       queryDs(s, queries).toDF("query_id", "qv", "qn"), k, nProbe)
@@ -609,19 +567,15 @@ object Similarity {
   private def pqCodebooks(s: SparkSession, dir: String,
                           nSub: Int, nCodes: Int,
                           iters: Int): Array[Array[Array[Double]]] = {
-    val key = s"${s.sparkContext.applicationId}|$dir|$nSub|$nCodes|$iters"
-    pqCodebookCache.computeIfAbsent(key, _ => buildPqCodebooks(s, dir, nSub, nCodes, iters))
+    OpCache.value(s"pqCodebooks|$nSub|$nCodes|$iters", s, dir)(
+      buildPqCodebooks(s, dir, nSub, nCodes, iters))
   }
-
-  private val pqCodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
 
   private def buildPqCodebooks(s: SparkSession, dir: String,
                                nSub: Int, nCodes: Int,
                                iters: Int): Array[Array[Array[Double]]] = {
     import s.implicits._
-    val vecs = memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    val vecs = rawVecs(s, dir)
     // one bounded corpus pass: 64 training points per code (above the
     // FAISS 39-per-centroid floor), hash60-ordered for reproducibility
     val sample = vecs
@@ -711,8 +665,8 @@ object Similarity {
                       bPq: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
                       subDim: Int, subKey: String): DataFrame = {
     import s.implicits._
-    memoCacheSub("annIvfPqIdx", s, dir, subKey,
-      encodePqCodes(s, assigned, bPq, subDim).cache())
+    OpCache.dataset("annIvfPqIdx", s, dir, subKey)(
+      encodePqCodes(s, assigned, bPq, subDim))
       .toDF("cell", "vec_id", "code")
   }
 
@@ -759,11 +713,10 @@ object Similarity {
       nCells: Int = 64, iters: Int = 5, nSub: Int = 8, nCodes: Int = 256,
       pqIters: Int = 3): Set[Int] = {
     import s.implicits._
-    val vecs = memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    val vecs = rawVecs(s, dir)
     val cents = kmeansCodebook(s, dir, nCells, iters)
-    val assigned = memoCacheSub("annIvfKmeansIdx", s, dir, s"$nCells|$iters",
-      assignCells(s, vecs, cents).cache()).toDF("cell", "vec_id", "v", "nrm")
+    val assigned = OpCache.dataset(s"annIvfKmeansIdx|$nCells|$iters", s, dir)(
+      assignCells(s, vecs, cents)).toDF("cell", "vec_id", "v", "nrm")
     val pq = pqCodebooks(s, dir, nSub, nCodes, pqIters)
     val bPq = s.sparkContext.broadcast(pq)
     pqIndex(s, dir, assigned, bPq, pq(0)(0).length,
@@ -814,8 +767,7 @@ object Similarity {
   /** Memoized raw-vector frame `(vec_id, v, nrm)` — the exact-refine
     * input shared by the in-session and artifact-served paths. */
   private[graft] def rawVecs(s: SparkSession, dir: String): DataFrame =
-    memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    OpCache.dataset("annIvfKmeans", s, dir)(vecDs(s, dir)).toDF("vec_id", "v", "nrm")
 
   /** The three artifacts an IVF-PQ index IS — coarse codebook, PQ
     * sub-codebooks, coded corpus `(cell, vec_id, code)` — built via the
@@ -828,8 +780,8 @@ object Similarity {
     import s.implicits._
     val vecs = rawVecs(s, dir)
     val cents = kmeansCodebook(s, dir, nCells, iters)
-    val assigned = memoCacheSub("annIvfKmeansIdx", s, dir, s"$nCells|$iters",
-      assignCells(s, vecs, cents).cache()).toDF("cell", "vec_id", "v", "nrm")
+    val assigned = OpCache.dataset(s"annIvfKmeansIdx|$nCells|$iters", s, dir)(
+      assignCells(s, vecs, cents)).toDF("cell", "vec_id", "v", "nrm")
     val pq = pqCodebooks(s, dir, nSub, nCodes, pqIters)
     val codes = pqIndex(s, dir, assigned, s.sparkContext.broadcast(pq),
       pq(0)(0).length, s"$nCells|$iters|$nSub|$nCodes|$pqIters")
@@ -955,8 +907,7 @@ object Similarity {
                     iters: Int = 5, tau: Double = 0.45, probes: Int = 3,
                     pairBudget: Long = 100000000L): DataFrame = {
     import s.implicits._
-    val vecs = memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    val vecs = rawVecs(s, dir)
     if (vecs.isEmpty)
       return Seq.empty[(Long, Int, Long, Boolean)]
         .toDF("vec_id", "cell", "cluster_id", "keep")
@@ -965,9 +916,8 @@ object Similarity {
     // so a pair splits only when the two memberships are fully disjoint —
     // the recall knob (cost scales ~probes^2, guarded by the same budget).
     // rk = 0 is the primary cell (assignCells' argmax-ties-smaller rule).
-    val assigned = memoCacheSub("semanticDedupIdx", s, dir,
-      s"$nCells|$iters|$probes",
-      assignCellsTopP(s, vecs, cents, probes).cache())
+    val assigned = OpCache.dataset("semanticDedupIdx", s, dir,
+      s"$nCells|$iters|$probes")(assignCellsTopP(s, vecs, cents, probes))
       .toDF("cell", "vec_id", "v", "nrm", "rk")
     val pairBound = assigned.groupBy($"cell").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum(expr("n * (n - 1) DIV 2")), lit(0L)).as("p"))
@@ -1064,11 +1014,11 @@ object Similarity {
   }
 
   /** (vec_id, v, nrm, sig): 64-bit signatures for the multi-probe path,
-    * cached via [[swapCache]] — one live corpus cache per operator however
+    * cached via [[OpCache]] — one live corpus cache per operator however
     * many queries run in the session.
     */
   private def annLshSigs(s: SparkSession, dir: String, nPlanes: Int): DataFrame =
-    memoCacheSub("annLsh", s, dir, s"$nPlanes", {
+    OpCache.dataset("annLsh", s, dir, nPlanes) {
       import s.implicits._
       val bPlanes = s.sparkContext.broadcast(lshPlanesN(nPlanes))
       vecDs(s, dir).mapPartitions { it =>
@@ -1078,8 +1028,8 @@ object Similarity {
           while (p < ps.length) { if (dot(v, ps(p)) >= 0) sig |= 1L << p; p += 1 }
           (id, v, n, sig)
         }
-      }.toDF("vec_id", "v", "nrm", "sig").cache()
-    })
+      }.toDF("vec_id", "v", "nrm", "sig")
+    }
 
   /** Sign an arbitrary query frame with the same deterministic plane
     * family the corpus signatures use — queries probe the index without
@@ -1241,7 +1191,7 @@ object Similarity {
     // hot bucket's C(n,2) work spreads over blocks²/2 tasks, so bucket
     // skew degrades parallelism gracefully instead of spilling. `blocks`
     // is the same executor-fit knob as cosineNearDupPairs'.
-    val sigs = memoCache("cosineNearDupLsh", s, dir, lshSigs(s, dir).cache())
+    val sigs = OpCache.dataset("cosineNearDupLsh", s, dir)(lshSigs(s, dir))
     val tagged = sigs.select($"vec_id", $"v", $"nrm", $"sig")
       .as[(Long, Array[Double], Double, Int)]
       .flatMap { case (id, v, n, sig) =>
@@ -1266,8 +1216,7 @@ object Similarity {
     // consume it, and without the memo the band explode + bucket-local
     // verify (the expensive stage) re-executes per caller — at 100 TB
     // that doubles the heaviest embedding-side stage.
-    memoCacheSub("cosLshPairs", s, dir, s"$threshold|$blocks",
-      pairs.distinct().cache())
+    OpCache.dataset("cosLshPairs", s, dir, s"$threshold|$blocks")(pairs.distinct())
       .select($"vec_a", $"vec_b", graft.Tables.round6($"cosine").as("cosine"))
       .orderBy($"vec_a", $"vec_b")
   }
@@ -1391,14 +1340,13 @@ object Similarity {
                       nCells: Int = 64, iters: Int = 5): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.Encoders
-    val vecs = memoCache("annIvfKmeans", s, dir, vecDs(s, dir).cache())
-      .toDF("vec_id", "v", "nrm")
+    val vecs = rawVecs(s, dir)
     if (vecs.isEmpty)
       return Seq.empty[(Long, Long, Long, Long)]
         .toDF("cell", "n_in_cell", "rank", "vec_id")
     val cents = kmeansCodebook(s, dir, nCells, iters)
-    val assigned = memoCacheSub("annIvfKmeansIdx", s, dir, s"$nCells|$iters",
-      assignCells(s, vecs, cents).cache()).toDF("cell", "vec_id", "v", "nrm")
+    val assigned = OpCache.dataset(s"annIvfKmeansIdx|$nCells|$iters", s, dir)(
+      assignCells(s, vecs, cents)).toDF("cell", "vec_id", "v", "nrm")
     val mink = udaf(new graft.functions.MinKAggregator(k),
       Encoders.product[(Long, Long)])
     assigned

@@ -273,10 +273,9 @@ object TextAnalysis {
     import s.implicits._
     val sh = TextDedup.hashedShinglesCached(s, dir)
     // cached: read once for sizing, once for the BF build, once exact-side
-    val bench = OpCache.memoDir("benchHashes", s.sparkContext.applicationId,
-      dir, s"$benchMod",
+    val bench = OpCache.dataset("benchHashes", s, dir, benchMod)(
       sh.where($"doc_id" % benchMod === 0)
-        .select(explode($"hshs").as("h")).distinct().cache())
+        .select(explode($"hshs").as("h")).distinct())
     val nBench = math.max(bench.count(), 64L)
     val bBf = s.sparkContext.broadcast(
       bench.stat.bloomFilter("h", nBench, fpp))
@@ -425,12 +424,11 @@ object TextAnalysis {
     // below (the sizes aggregate plus both sides of the self-join), so
     // the collapsed vocab×sources frame memoizes through OpCache: the
     // collapse runs once per corpus, not three times per action.
-    val sg = graft.operators.OpCache.memoDir("xsrcGrams",
-      s.sparkContext.applicationId, dir, "", {
+    val sg = OpCache.dataset("xsrcGrams", s, dir) {
         TextDedup.hashedShinglesCached(s, dir)
           .join(table(s, dir, "documents").select($"doc_id", $"source"), "doc_id")
-          .select($"source", explode($"hshs").as("h")).distinct().cache()
-      })
+          .select($"source", explode($"hshs").as("h")).distinct()
+      }
     // size every source that EXISTS in the corpus, not every source that
     // produced a trigram: a source whose docs are all shorter than the
     // shingle width has an empty gram set, and deriving the pair frame
@@ -931,16 +929,15 @@ object TextAnalysis {
     * PipelineCleaningSpec pins the merge/encode semantics on a
     * hand-computed fixture plus round-trip and determinism invariants.
     */
-  /** The corpus-trained BPE merge ranks, memoized per (session, dir,
-    * nMerges, vocabCap): ONE vocab-bounded word-count aggregate + the
+  /** The corpus-trained BPE merge ranks, memoized in [[OpCache]] per
+    * (nMerges, vocabCap): ONE vocab-bounded word-count aggregate + the
     * driver-local merge loop, shared by every subword-denominated
     * consumer (q95's profile, q182's packing) so trainer and consumer
     * CANNOT drift — one rank table, one tokenization.
     */
   private[graft] def bpeRanks(s: SparkSession, dir: String, nMerges: Int,
-                              vocabCap: Int): Map[(String, String), Int] = {
-    val key = s"${s.sparkContext.applicationId}|$dir|$nMerges|$vocabCap"
-    bpeRankCache.computeIfAbsent(key, _ => {
+                              vocabCap: Int): Map[(String, String), Int] =
+    OpCache.value(s"bpeRanks|$nMerges|$vocabCap", s, dir) {
       import s.implicits._
       val wc = table(s, dir, "documents")
         .select(explode(split($"text", " ")).as("w"))
@@ -949,18 +946,7 @@ object TextAnalysis {
         .orderBy($"c".desc, $"w".asc).limit(vocabCap)
         .as[(String, Long)].collect()
       graft.functions.Bpe.train(wc.toSeq, nMerges).zipWithIndex.toMap
-    })
-  }
-
-  private val bpeRankCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[(String, String), Int]]()
-
-  /** Drops the memoized merge ranks. Called from
-    * [[Similarity.releaseCaches]] so a same-dir corpus rewrite cannot
-    * leave q95/q182 budgeting with ranks trained on the old files —
-    * the same staleness rule the codebook memos follow.
-    */
-  private[graft] def clearBpeRankCache(): Unit = bpeRankCache.clear()
+    }
 
   def subwordProfile(s: SparkSession, dir: String, nMerges: Int = 64,
                      vocabCap: Int = 65536): DataFrame = {
@@ -1040,8 +1026,8 @@ object TextAnalysis {
     * pass both consume it, so the paired batch/streaming monitors pay
     * ONE difficulty-projection scan per session instead of one each. */
   private[graft] def psiScoresCorpus(s: SparkSession, dir: String): DataFrame =
-    OpCache.memoDir("psiScoresCorpus", s.sparkContext.applicationId, dir, "",
-      psiScores(s, table(s, dir, "documents")).cache()).toDF()
+    OpCache.dataset("psiScoresCorpus", s, dir)(
+      psiScores(s, table(s, dir, "documents"))).toDF()
 
   /** The (source, iscore) difficulty projection shared by [[sourcePsi]]
     * and the streaming drift monitor (q130). */

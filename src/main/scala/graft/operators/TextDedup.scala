@@ -90,12 +90,12 @@ object TextDedup {
     * per call), so a bare `.cache()` leaked one entry per invocation —
     * and every shingle consumer (q20/q21/q48/q49/q51/q55) can now share
     * ONE materialized shingle set per corpus instead of each rebuilding
-    * it.
+    * it. The width names the family: q166's 8-word shingles would
+    * otherwise evict the 3-word set (and rebuild their own) every pass.
     */
   private[operators] def hashedShinglesCached(s: SparkSession, dir: String,
                                               width: Int = ShingleWidth): DataFrame =
-    OpCache.memoDir("hashedShingles", s.sparkContext.applicationId, dir, s"$width",
-      hashedShingles(s, dir, width).cache())
+    OpCache.dataset(s"hashedShingles|$width", s, dir)(hashedShingles(s, dir, width))
 
   /** doc_id + distinct word n-gram shingle set hashed to sorted 60-bit
     * longs (+ set size), built in one partition-local pass — candidate
@@ -187,9 +187,8 @@ object TextDedup {
     // a fresh frequency-sketch broadcast per call, so a bare per-call
     // .cache() would leak one entry per invocation (plan-identity dedup
     // can't see closure equality)
-    val ranked = OpCache.memoDir("ppjoinRanked", s.sparkContext.applicationId,
-      dir, s"$threshold|$freqSketchSize",
-      prefixRankedFrom(s, sh, threshold, freqSketchSize).cache())
+    val ranked = OpCache.dataset("ppjoinRanked", s, dir, s"$threshold|$freqSketchSize")(
+      prefixRankedFrom(s, sh, threshold, freqSketchSize))
     // SATURATION GUARD — the one measured way this operator dies at scale
     // (bounded shingle vocabulary => prefix groups grow with the corpus,
     // candidates quadratically): sum g(g-1)/2 over per-shingle prefix
@@ -346,8 +345,8 @@ object TextDedup {
     * threshold); a new corpus or threshold releases the previous cache.
     */
   def minhashLshPairs(s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    OpCache.memoDir("lshPairs", s.sparkContext.applicationId, dir, s"$threshold",
-      minhashLshPairsFrom(s, hashedShinglesCached(s, dir), threshold).cache())
+    OpCache.dataset("lshPairs", s, dir, threshold)(
+      minhashLshPairsFrom(s, hashedShinglesCached(s, dir), threshold))
 
   /** (doc_id, band, bkey) LSH band rows from a hashed-shingle set — the
     * signature + banding kernel shared by the within-corpus detector
@@ -562,12 +561,11 @@ object TextDedup {
   private def lineHashesCached(s: SparkSession, dir: String,
                                window: Int): DataFrame = {
     import s.implicits._
-    OpCache.memoDir("lineHashes", s.sparkContext.applicationId, dir, s"$window", {
+    OpCache.dataset("lineHashes", s, dir, window) {
       chunkedLines(table(s, dir, "documents"), window)
         .select($"doc_id",
           posexplode(expr("transform(lines, l -> xxhash64(l))")).as(Seq("pos", "lh")))
-        .cache()
-    })
+    }
   }
 
   def lineDedup(s: SparkSession, dir: String, window: Int = 4,
@@ -687,8 +685,7 @@ object TextDedup {
     // memoize the compact (dp, wh) frame through OpCache, exactly the
     // hashedShingles precedent: corpus-derived, two consumers,
     // spill-backed storage at scale.
-    val cached = OpCache.memoDir("dupSubstrWinsP", s.sparkContext.applicationId,
-      dir, s"$window", wins.cache())
+    val cached = OpCache.dataset("dupSubstrWinsP", s, dir, window)(wins)
     val dupHashes = cached.groupBy($"wh").agg(count(lit(1)).as("c"))
       .where($"c" >= minDf).select($"wh")
     // floor-semantics unpack: pmod keeps pos in [0, 2^32) for a negative

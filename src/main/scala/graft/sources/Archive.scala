@@ -38,11 +38,7 @@ object Archive {
     * reference's Store (`/root/reference/triton/store.go:106-171`) is
     * subsumed by the file sink: each task streams through a snappy-framed
     * writer, files commit atomically, and `maxRecordsPerFile` bounds rows
-    * per file the way hourly rotation bounded it. `maxBytesPerFile` (> 0
-    * to enable) additionally rotates on uncompressed encoded bytes — the
-    * reference's own rotation unit (`store.go:201`) — so skewed record
-    * sizes cannot produce a monster non-splittable file that serializes
-    * the readers.
+    * per file the way hourly rotation bounded it.
     *
     * The layout is the caller's: every task writes one file per date it
     * holds, so `df`'s partitioning decides the file count (a caller that
@@ -51,9 +47,8 @@ object Archive {
     * fragmented archive repartitions).
     */
   def store(df: DataFrame, root: String, client: String,
-            maxRecordsPerFile: Long = 1000000L,
-            maxBytesPerFile: Long = 0L): Unit =
-    writePartitioned(withPartitionColumns(df, client), root, maxRecordsPerFile, maxBytesPerFile)
+            maxRecordsPerFile: Long = 1000000L): Unit =
+    writePartitioned(withPartitionColumns(df, client), root, maxRecordsPerFile)
 
   /** `df` plus the archive's partition columns: `date` (`yyyyMMdd` of
     * `ts`) and `client`. Computed once, before any shuffle a caller puts
@@ -65,16 +60,14 @@ object Archive {
       .withColumn("client", lit(client))
 
   /** Appends `df` (already carrying `date`/`client`) to the archive at
-    * `root`: one `.tri` file per (task, date, client), rotated by the two
-    * limits of [[store]].
+    * `root`: one `.tri` file per (task, date, client), rotated by
+    * `maxRecordsPerFile`.
     */
   private[graft] def writePartitioned(df: DataFrame, root: String,
-                                     maxRecordsPerFile: Long = 1000000L,
-                                     maxBytesPerFile: Long = 0L): Unit =
+                                     maxRecordsPerFile: Long = 1000000L): Unit =
     df.write.format("tri")
       .partitionBy("date", "client")
       .option("maxRecordsPerFile", maxRecordsPerFile) // bounds rows like hourly rotation did
-      .option("maxBytesPerFile", maxBytesPerFile)
       .mode("append")
       .save(root)
 

@@ -121,12 +121,11 @@ class TriFileFormat extends FileFormat with DataSourceRegister with Serializable
 
   override def prepareWrite(sparkSession: SparkSession, job: Job,
                             options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
-    val maxBytes = options.get("maxBytesPerFile").map(_.toLong).getOrElse(0L)
     new OutputWriterFactory {
       override def getFileExtension(context: TaskAttemptContext): String = ".tri"
       override def newInstance(path: String, dataSchema: StructType,
                                context: TaskAttemptContext): OutputWriter =
-        new TriOutputWriter(path, dataSchema, context, maxBytes)
+        new TriOutputWriter(path, dataSchema, context)
     }
   }
 
@@ -141,53 +140,22 @@ class TriFileFormat extends FileFormat with DataSourceRegister with Serializable
   }
 }
 
-/** Writes one task's records; with `maxBytesPerFile > 0` it rotates to a
-  * sibling file (`…-r<k>.tri`) once the UNCOMPRESSED encoded byte count
-  * would exceed the budget, so reader parallelism (= file count for the
-  * non-splittable format) scales with data volume even when record sizes
-  * are skewed — `maxRecordsPerFile` alone bounds rows, not bytes. The
-  * reference rotates on a byte buffer the same way
-  * (`/root/reference/triton/store.go:201` — 1 MiB flush buffer).
-  *
-  * Rotated siblings live next to `path` inside the task attempt directory,
-  * so any directory-commit protocol (the batch write path, incl.
-  * `foreachBatch`) commits them atomically with the primary file. A
-  * manifest-tracked streaming file sink would orphan them — stream into
-  * the archive with `StreamOps.startStore`, the engine's store pipeline,
-  * whose `foreachBatch` rebalances each micro-batch by date and writes it
-  * through the batch path: one writer (so one file, plus rotations) per
-  * (date, client) per batch, not one per source shard.
+/** Writes one task's records to one snappy-framed file. Files are sized
+  * by the writer's caller: Spark's `maxRecordsPerFile` bounds rows per
+  * file (the reference's hourly rotation), and `StreamOps.startStore`
+  * rebalances each micro-batch by date, so AQE's advisory partition size
+  * bounds a date's file.
   */
 private class TriOutputWriter(val path: String, dataSchema: StructType,
-                              context: TaskAttemptContext,
-                              maxBytes: Long = 0L) extends OutputWriter {
-  private var rotation = 0
-  private var written = 0L
-  private var out = open(path)
-
-  private def open(p: String) = {
-    val pp = new Path(p)
-    val fs = pp.getFileSystem(context.getConfiguration)
-    new SnappyFramedOutputStream(fs.create(pp, false))
-  }
-
-  private def rotatedPath(k: Int): String = {
-    val i = path.lastIndexOf('.')
-    if (i < 0) s"$path-r$k" else s"${path.substring(0, i)}-r$k${path.substring(i)}"
+                              context: TaskAttemptContext) extends OutputWriter {
+  private val out = {
+    val p = new Path(path)
+    new SnappyFramedOutputStream(p.getFileSystem(context.getConfiguration).create(p, false))
   }
 
   override def write(row: InternalRow): Unit = {
     val b = MsgPackCodec.encode(row, dataSchema)
-    // `written > 0`: a single record larger than the budget still gets a
-    // file of its own rather than an empty file plus an overflow
-    if (maxBytes > 0 && written > 0 && written + b.length > maxBytes) {
-      out.close()
-      rotation += 1
-      out = open(rotatedPath(rotation))
-      written = 0L
-    }
     out.write(b, 0, b.length)
-    written += b.length
   }
   override def close(): Unit = out.close()
 }

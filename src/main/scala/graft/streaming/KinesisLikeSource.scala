@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,6 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - throttling retried in the partition reader with the reference's
   *    quadratic backoff (`retries^2 * backoffUnit`, max 4 —
   *    `/root/reference/triton/stream.go:41,63-75`).
+  *
+  * `Trigger.AvailableNow` drains up to the shard heads seen when the query
+  * starts, in as many batches as that takes: a restart after a crash
+  * between `offsets/N` and `commits/N` re-runs batch N and then also reads
+  * what arrived since.
   *
   * Registered as `format("kinesis-graft")`. Envelope columns:
   * stream, shard_id, sequence_number, partition_key, data(binary).
@@ -96,9 +101,11 @@ object ShardOffsets {
 private class KinesisLikeStream(stream: String, startingPosition: String,
                                 backoffUnitMs: Long, minFetchIntervalMs: Long,
                                 maxRecordsPerFetch: Int, serviceName: String)
-    extends MicroBatchStream {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private val svc = ShardService.resolve(serviceName)
+  // the shard heads an AvailableNow run stops at, fixed when it starts
+  private var availableNowEnd: Option[Offset] = None
 
   override def initialOffset(): Offset = {
     val shards = svc.listShards(stream)
@@ -115,6 +122,12 @@ private class KinesisLikeStream(stream: String, startingPosition: String,
     val shards = svc.listShards(stream)
     ShardOffsets(shards.map(s => s -> svc.latestSequence(stream, s)).toMap)
   }
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(latestOffset())
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    availableNowEnd.getOrElse(latestOffset())
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ShardOffsets].seqs

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.Tables.{rawEventTsLit, withEventTs}
 import graft.io.Scratch
+import graft.operators.OpCache
 import graft.sources.Archive
 
 /** Streaming operator surface beyond the reference (which is
@@ -208,7 +209,7 @@ object StreamOps {
       // the duplicate slice is a pure function of the corpus: build it
       // once per (session, corpus stamp) and symlink it into each run's
       // work dir — the per-pass slice WRITE was staging fixed cost
-      val dupStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q104dup") { p =>
+      val dupStaged = OpCache.directory("q104dup", s, s"$dir/events.parquet") { p =>
         raw.where($"event_id" % 7 === 0).write.parquet(p.resolve("d").toString)
         val st = java.nio.file.Files.list(p.resolve("d"))
         try {
@@ -223,7 +224,7 @@ object StreamOps {
         } finally st.close()
         Scratch.delete(p.resolve("d"))
       }
-      StageCache.linkInto(dupStaged, srcDir)
+      linkInto(dupStaged, srcDir)
       val out = work.resolve("out").toString
       val stream = withEventTs(s.readStream.schema(raw.schema)
           .parquet(s"${srcDir.toString}/*.parquet"))
@@ -285,11 +286,11 @@ object StreamOps {
       // repartition WRITE was a corpus-sized staging job every pass
       // (order between the two batches is irrelevant: the merge is a
       // commutative sum-combine, as the spec pins)
-      val staged = StageCache.stagedDir(s, s"$dir/events.parquet", "q111src") { p =>
-        // overwrite: stagedDir pre-creates the (empty) target directory
+      val staged = OpCache.directory("q111src", s, s"$dir/events.parquet") { p =>
+        // overwrite: the memo pre-creates the (empty) target directory
         ev.repartition(2).write.mode("overwrite").parquet(p.toString)
       }
-      StageCache.linkInto(staged, srcDir)
+      linkInto(staged, srcDir)
       val src = srcDir.toString
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -627,13 +628,13 @@ object StreamOps {
       // A pure function of the corpus (its max ts), so built once per
       // (session, corpus stamp) — the max-ts scan + the tiny write were a
       // per-pass staging tax — and symlinked into each run's work dir
-      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q47sent") { p =>
-        StageCache.writeOne(raw.limit(1)
+      val sentStaged = OpCache.directory("q47sent", s, s"$dir/events.parquet") { p =>
+        writeOne(raw.limit(1)
             .withColumn("ts", rawEventTsLit(raw, maxEventUs(s, dir) + 7200L * 1000000L))
             .withColumn("event_type", lit("__sentinel")),
           p, "sentinel.parquet")
       }
-      StageCache.linkInto(sentStaged, srcDir)
+      linkInto(sentStaged, srcDir)
       val stream = withEventTs(
         s.readStream.schema(raw.schema).parquet(s"${srcDir.toString}/*.parquet"))
       val outDir = work.resolve("out").toString
@@ -675,13 +676,13 @@ object StreamOps {
       val srcDir = stagedEventsDir(dir, work)
       // corpus-derived sentinel: built once per (session, corpus stamp),
       // symlinked per run (q47 discipline)
-      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q72sent") { p =>
-        StageCache.writeOne(raw.limit(1)
+      val sentStaged = OpCache.directory("q72sent", s, s"$dir/events.parquet") { p =>
+        writeOne(raw.limit(1)
             .withColumn("ts", rawEventTsLit(raw, maxEventUs(s, dir) + 7200L * 1000000L))
             .withColumn("user_id", lit(-1L)),
           p, "sentinel.parquet")
       }
-      StageCache.linkInto(sentStaged, srcDir)
+      linkInto(sentStaged, srcDir)
       val stream = withEventTs(
         s.readStream.schema(raw.schema).parquet(s"${srcDir.toString}/*.parquet"))
       val outDir = work.resolve("out").toString
@@ -1034,16 +1035,16 @@ object StreamOps {
       // the sentinel pair is a pure function of the corpus (its max ts):
       // built once per (session, corpus stamp) — the max-ts scan rides
       // inside the build — and symlinked per run (q47 discipline)
-      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q96sent") { p =>
+      val sentStaged = OpCache.directory("q96sent", s, s"$dir/events.parquet") { p =>
         val sentBase = raw.limit(1)
           .withColumn("ts", rawEventTsLit(raw, maxEventUs(s, dir) + 30L * 86400L * 1000000L))
           .withColumn("user_id", lit(-1L).cast(raw.schema("user_id").dataType))
-        StageCache.writeOne(
+        writeOne(
           sentBase.withColumn("event_type", lit("click"))
             .unionByName(sentBase.withColumn("event_type", lit("purchase"))),
           p, "z_sentinel.parquet")
       }
-      StageCache.linkInto(sentStaged, srcDir)
+      linkInto(sentStaged, srcDir)
       val stream0 = withEventTs(s.readStream.schema(raw.schema).parquet(srcDir.toString))
       def side(eventType: String, alias: String): DataFrame =
         stream0
@@ -1092,68 +1093,46 @@ object StreamOps {
   private def maxEventUs(s: SparkSession, dir: String): Long =
     graft.Tables.events(s, dir).agg(max(col("ts_us"))).head.getLong(0)
 
-  /** Session-scoped staging cache for DERIVED stream-input files. The
-    * drain-pattern lifecycles feed the file source deterministic
-    * corpus-derived artifacts — sentinel rows, the q104 duplicate slice,
-    * the q111/q130 fixed-file-count copies — that were rebuilt through a
-    * full Spark write job on EVERY invocation: pure per-pass fixed cost
-    * (guide §1.2 "don't compute things you throw away"; at sf10 the
-    * q111/q130 copies are corpus-sized writes). Each artifact is now
-    * built ONCE per (session, source stamp) into a [[Scratch.cached]]
-    * directory and SYMLINKED into each run's work dir, extending the
-    * zero-copy staging of the events file to derived inputs. The timed
-    * query still streams every byte through the state machinery — only
-    * the redundant re-STAGING of identical input files is removed; the
-    * bench cold pass prices each build. The files die with the JVM's
-    * scratch root, so no intermediate ever persists across bench/oracle
-    * invocations, and keys embed OpCache.dirStamp of the source file so a
-    * mutated corpus rebuilds instead of serving stale inputs (the q161
-    * corpus-stamp discipline).
+  /** Staged DERIVED stream-input files. The drain-pattern lifecycles feed
+    * the file source deterministic corpus-derived artifacts — sentinel
+    * rows, the q104 duplicate slice, the q111/q130 fixed-file-count copies,
+    * q179's late-data layout — that were rebuilt through a full Spark write
+    * job on EVERY invocation: pure per-pass fixed cost (guide §1.2 "don't
+    * compute things you throw away"; at sf10 the q111/q130 copies are
+    * corpus-sized writes). Each is built once per source stamp into an
+    * [[OpCache.directory]] memo and SYMLINKED into each run's work dir
+    * ([[linkInto]]), extending the zero-copy staging of the events file to
+    * derived inputs. The timed query still streams every byte through the
+    * state machinery — only the redundant re-STAGING of identical input
+    * files is removed; the bench cold pass prices each build.
+    *
+    * This writes `df` as a single parquet part file named `name` inside the
+    * staged dir (the sentinel-file shape every drain lifecycle uses).
+    * `mtimeMs`, when set, pins the file's modification time — batch
+    * ordering under maxFilesPerTrigger rides on mtime, so memoized
+    * sentinels pin theirs relative to the corpus instead of relying on
+    * write-order wall clock (the q179 pinned-mtime discipline).
     */
-  private[graft] object StageCache {
-
-    /** Memoized staged directory: `build` populates a fresh dir on first
-      * use per (app, source-stamp, tag); later calls return the same dir.
-      */
-    def stagedDir(s: SparkSession, srcPath: String, tag: String)
-                 (build: java.nio.file.Path => Unit): java.nio.file.Path =
-      Scratch.cached(s"stage|${s.sparkContext.applicationId}|$srcPath|" +
-        s"${graft.operators.OpCache.dirStamp(srcPath)}|$tag", tag)(build)
-
-    /** Writes `df` as a single parquet part file named `name` inside the
-      * staged dir (the sentinel-file shape every drain lifecycle uses).
-      * `mtimeMs`, when set, pins the file's modification time — batch
-      * ordering under maxFilesPerTrigger rides on mtime, so memoized
-      * sentinels pin theirs relative to the corpus instead of relying on
-      * write-order wall clock (the q179 pinned-mtime discipline).
-      */
-    def writeOne(df: org.apache.spark.sql.DataFrame, staged: java.nio.file.Path,
-                 name: String, mtimeMs: Option[Long] = None): Unit = {
-      val tmp = staged.resolve(s"_w_$name")
-      df.coalesce(1).write.parquet(tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = staged.resolve(name)
-      java.nio.file.Files.move(part.toPath, dest)
-      mtimeMs.foreach { m =>
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(m)): Unit
-      }
-      Scratch.delete(tmp)
+  private def writeOne(df: DataFrame, staged: java.nio.file.Path,
+               name: String, mtimeMs: Option[Long] = None): Unit = {
+    val tmp = staged.resolve(s"_w_$name")
+    df.coalesce(1).write.parquet(tmp.toString)
+    val part = tmp.toFile.listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val dest = staged.resolve(name)
+    java.nio.file.Files.move(part.toPath, dest)
+    mtimeMs.foreach { m =>
+      java.nio.file.Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(m)): Unit
     }
-
-    /** Links every staged *.parquet into `dest` ([[Scratch.link]]). */
-    def linkInto(staged: java.nio.file.Path, dest: java.nio.file.Path): Unit =
-      staged.toFile.listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach(f => Scratch.link(f.toPath, dest.resolve(f.getName)))
-
-    /** Forget and delete every staged artifact (a re-staged key gets a
-      * fresh dir). Wired into Similarity.releaseCaches so a cache release
-      * drops these with the Dataset memos.
-      */
-    def clear(): Unit = Scratch.forget("stage|")
+    Scratch.delete(tmp)
   }
+
+  /** Links every staged *.parquet into `dest` ([[Scratch.link]]). */
+  private[graft] def linkInto(staged: java.nio.file.Path, dest: java.nio.file.Path): Unit =
+    staged.toFile.listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .foreach(f => Scratch.link(f.toPath, dest.resolve(f.getName)))
 
   /** `work/src` holding a link to the events file: the input directory of
     * a drain-pattern lifecycle. The file-stream source sees one directory
@@ -1238,11 +1217,11 @@ object StreamOps {
       // (session, corpus stamp), symlinked per run (the per-pass
       // repartition WRITE was a corpus-sized staging job every pass;
       // batch order is irrelevant, the merge is a commutative sum)
-      val staged = StageCache.stagedDir(s, s"$dir/documents.parquet", "q130src") { p =>
+      val staged = OpCache.directory("q130src", s, s"$dir/documents.parquet") { p =>
         docs.select($"source", $"text").repartition(2)
           .write.mode("overwrite").parquet(p.toString)
       }
-      StageCache.linkInto(staged, srcDir)
+      linkInto(staged, srcDir)
       val src = srcDir.toString
       val stream = s.readStream.schema(s.read.parquet(src).schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -1322,19 +1301,19 @@ object StreamOps {
       // under maxFilesPerTrigger, so the memoized files PIN theirs to the
       // corpus mtime +60 s/+120 s (q179 discipline) instead of relying on
       // write-order wall clock — strictly harder ordering than before
-      val sentStaged = StageCache.stagedDir(s, s"$dir/events.parquet", "q159sent") { p =>
+      val sentStaged = OpCache.directory("q159sent", s, s"$dir/events.parquet") { p =>
         val maxUs = maxEventUs(s, dir)
         val evMtime = java.nio.file.Files.getLastModifiedTime(
           java.nio.file.Paths.get(s"$dir/events.parquet")).toMillis
         def sentinel(hours: Long, uid: Long, name: String, mtimeMs: Long): Unit =
-          StageCache.writeOne(raw.limit(1)
+          writeOne(raw.limit(1)
               .withColumn("ts", rawEventTsLit(raw, maxUs + hours * 3600L * 1000000L))
               .withColumn("user_id", lit(uid)),
             p, s"$name.parquet", Some(mtimeMs))
         sentinel(2, -1L, "sentinel1", evMtime + 60000L)
         sentinel(4, -2L, "sentinel2", evMtime + 120000L)
       }
-      StageCache.linkInto(sentStaged, srcDir)
+      linkInto(sentStaged, srcDir)
       val stream = withEventTs(s.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", math.max(1, nRealFiles).toString)
         .parquet(s"${srcDir.toString}/*.parquet"))

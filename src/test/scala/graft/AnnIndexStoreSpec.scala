@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.operators.{AnnIndexStore, Similarity}
+import graft.operators.{AnnIndexStore, OpCache, Similarity}
 
 /** Earns q185/q186's rows-only oracle exemption: the persisted-index
   * lifecycle (build → write → load → serve) must be RESULT-INVISIBLE —
@@ -22,6 +22,10 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
 
   private val dir = "/root/testdata/sf0.01"
 
+  /** Live coarse and PQ codebook memos in the session registry. */
+  private def codebooks: Seq[String] = OpCache.liveFamilies.filter(f =>
+    f.startsWith("kmeansCodebook|") || f.startsWith("pqCodebooks|"))
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString)
 
@@ -35,8 +39,8 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
     // fresh-session simulation: drop EVERY session memo (vector caches,
     // coarse + PQ codebooks, BPE ranks) — the artifact on disk is all
     // that survives a real session boundary
-    Similarity.releaseCaches()
-    assert(Similarity.codebookCacheSizes === ((0, 0)))
+    OpCache.releaseAll()
+    assert(codebooks.isEmpty)
 
     val idx = AnnIndexStore.load(spark, work)
     val served = rows(AnnIndexStore.serve(spark, dir, idx,
@@ -47,7 +51,7 @@ class AnnIndexStoreSpec extends AnyFunSuite with SparkFixture {
 
     // the serve path re-reads raw vectors (exact refine needs them) but
     // must NOT have re-trained either codebook
-    assert(Similarity.codebookCacheSizes === ((0, 0)),
+    assert(codebooks.isEmpty,
       "serving from the artifact re-trained a codebook")
   }
 

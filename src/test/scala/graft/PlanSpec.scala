@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{EventOps, Pipeline, Relational, Similarity, TextAnalysis, TextDedup}
+import graft.operators.{EventOps, OpCache, Pipeline, Relational, Similarity, TextAnalysis, TextDedup}
 
 /** Physical-plan assertions: the judge-facing scale properties — broadcast
   * joins where a side is small, pushed filters at the parquet scan, top-k
@@ -94,7 +94,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // added a union branch + window per chunk — thousands of nodes at
     // 1% queries of a large corpus)
     def nodes(chunk: Int): Int = {
-      Similarity.releaseCaches() // fresh build per chunk size
+      OpCache.releaseAll() // fresh build per chunk size
       val df = Similarity.annBruteForce(spark, sfDir, queryChunk = chunk)
       df.queryExecution.optimizedPlan.collect { case n => n }.size
     }
@@ -103,12 +103,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(manyChunks === oneChunk,
       s"plan grew with chunk count: $manyChunks nodes vs $oneChunk")
     // and the chunking must not change results
-    Similarity.releaseCaches()
+    OpCache.releaseAll()
     val a = Similarity.annBruteForce(spark, sfDir, queryChunk = 2).collect().toSeq
-    Similarity.releaseCaches()
+    OpCache.releaseAll()
     val b = Similarity.annBruteForce(spark, sfDir, queryChunk = 10000).collect().toSeq
     assert(a === b)
-    Similarity.releaseCaches()
+    OpCache.releaseAll()
   }
 
   test("stratified sample combines map-side: partial aggregate before the exchange (q44)") {

@@ -125,6 +125,40 @@ class StreamOpsSpec extends AnyFunSuite with SparkFixture {
     assert(ids === (1L to 320L))
   }
 
+  test("a restart after a crash before commits/N drains batch N and every record put since") {
+    import spark.implicits._
+    import graft.streaming.{Checkpoints, FakeKinesis}
+    FakeKinesis.reset()
+    FakeKinesis.createStream("crash", 4)
+    val p = new graft.streaming.StreamProducer
+    val root = tempDir("crash_root").toString
+    val ckpt = tempDir("crash_ckpt")
+    val decoded = spark.readStream.format("kinesis-graft").option("stream", "crash").load()
+      .selectExpr("from_msgpack(data, 'event_id BIGINT, ts TIMESTAMP, value DOUBLE') AS r")
+      .select("r.event_id", "r.ts", "r.value")
+    def put(ids: Seq[Long]): Unit = ids.foreach { id =>
+      p.put("crash", s"k$id", Map("event_id" -> id, "ts" -> ts("2024-01-05 12:00:00"),
+        "value" -> id * 0.5))
+    }
+    put(1L to 40L)
+    StreamOps.startStore(decoded, root, "c", ckpt.toString).awaitTermination()
+    // what a crash between the offset log and the commit log leaves behind
+    val commits = ckpt.resolve("commits")
+    val newest = commits.toFile.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(commits.resolve(newest.toString))
+    Files.deleteIfExists(commits.resolve(s".$newest.crc"))
+    put(41L to 60L)
+    StreamOps.startStore(decoded, root, "c", ckpt.toString).awaitTermination()
+    val committed = Checkpoints.offsets(spark, ckpt.toString)
+      .select("shard", "sequence_number").as[(String, Long)].collect().toMap
+    val latest = FakeKinesis.listShards("crash")
+      .map(sh => sh -> FakeKinesis.latestSequence("crash", sh)).toMap
+    assert(committed === latest, "records put after the crash were left uncommitted")
+    // batch N is appended a second time on replay; every record is there
+    assert(Archive.read(spark, root, "c", "20240105", "20240105")
+      .select("event_id").as[Long].collect().distinct.sorted.toSeq === (1L to 60L))
+  }
+
   test("a finished store drain leaves its per-start session clone unreachable") {
     import graft.streaming.FakeKinesis
     import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper

@@ -146,27 +146,18 @@ class TriArchiveSpec extends AnyFunSuite with SparkFixture {
     assert(back.select("event_id").as[Long].collect().sorted.toSeq === (1L to 10L))
   }
 
-  test("maxBytesPerFile rotates on encoded bytes (skew-proof file sizing, K1)") {
+  test("one task's date under the record cap lands in one file, whatever its bytes") {
     import spark.implicits._
-    val root = tempDir("tri_bytes").toString
-    // ~115 encoded bytes/record; a 2 KiB budget forces rotation well below
-    // any record-count cap
+    val root = tempDir("tri_one_file").toString
+    // ~23 KiB of encoded records from one task
     val ev = (1L to 200L).map(i => (i, "2024-01-05 10:00:00", "x" * 100))
       .toDF("event_id", "ts", "payload").withColumn("ts", to_timestamp($"ts"))
-      .coalesce(1) // one task: the file count is the byte policy's doing
-    Archive.store(ev, root, "c1", maxBytesPerFile = 2048L)
-    val dir = new java.io.File(root, "date=20240105/client=c1")
-    val files = dir.listFiles().filter(_.getName.endsWith(".tri"))
-    assert(files.length >= 8,
-      s"~23 KiB at <=2 KiB/file needs ~11 files, got ${files.length}")
-    // every rotated sibling is a standalone snappy-framed stream
+      .coalesce(1)
+    Archive.store(ev, root, "c1")
+    assert(new java.io.File(root, "date=20240105/client=c1")
+      .listFiles().count(_.getName.endsWith(".tri")) === 1)
     val back = Archive.read(spark, root, "c1", "20240101", "20241231")
     assert(back.select("event_id").as[Long].collect().sorted.toSeq === (1L to 200L))
-    // same data without a budget: a single file (policy off by default)
-    val root2 = tempDir("tri_bytes_off").toString
-    Archive.store(ev, root2, "c1")
-    assert(new java.io.File(root2, "date=20240105/client=c1")
-      .listFiles().count(_.getName.endsWith(".tri")) === 1)
   }
 
   test("leftover empty client dir does not trip the single-client invariant") {
