@@ -1,15 +1,73 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line with total + per-query wall seconds. Results are
-  * materialized through the `noop` sink so the full plan executes (a bare
-  * `count()` would let Catalyst prune projections).
+  * prints ONE JSON line with total + per-query wall seconds. Also home of
+  * [[ladder]], the one measurement loop that `Bench` and `QProbe` share.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One query's measurements from [[ladder]]: wall seconds of its cold
+    * pass and of each steady pass, its [[ProfileRow]], and the first error
+    * it raised at the target SF (`None`: every pass ran to the end).
+    */
+  final case class Rung(name: String, cold: Double, steady: Seq[Double],
+                        profile: ProfileRow, error: Option[Throwable]) {
+    def median: Double = {
+      val s = steady.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    }
+  }
+
+  /** The measurement loop: one untimed pass over `warmupDir`, one cold
+    * pass and `passes` steady passes over `sfDir`, then one untimed pass
+    * under a [[Profile]]. Every run writes through the `noop` sink so the
+    * full plan executes (a bare `count()` would let Catalyst prune
+    * projections). Returns the warmup's wall seconds and one [[Rung]] per
+    * query, in order.
+    */
+  def ladder(spark: SparkSession, queries: Seq[(String, Query)], sfDir: String,
+             warmupDir: String, passes: Int): (Double, Seq[Rung]) = {
+    def run(fn: Query, dir: String): Option[Throwable] =
+      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(e) }
+    def timed(fn: Query): (Double, Option[Throwable]) = {
+      val t0 = System.nanoTime()
+      val error = run(fn, sfDir)
+      ((System.nanoTime() - t0) / 1e9, error)
+    }
+    // the warmup runs every query once at smoke scale so janino codegen,
+    // JIT and file-index init are paid before timing; per-query numbers
+    // then measure steady-state latency at the target SF. Its errors are
+    // not the target SF's: a query that fails there fails again below.
+    val w0 = System.nanoTime()
+    queries.foreach { case (_, fn) => run(fn, warmupDir) }
+    val warmup = (System.nanoTime() - w0) / 1e9
+    // pass 0 is the cold pass: it pays the page-cache/file-index cost once
+    // (reported as cold). The per-query numbers are MEDIANS over the steady
+    // passes: the harness box shows ±25% run-to-run noise, which
+    // single-pass numbers repeatedly misread as regressions.
+    val timedPasses = (0 to passes).map(_ => queries.map { case (_, fn) => timed(fn) })
+    // the profiled pass runs AFTER the timed ones, so the listeners never
+    // touch a reported latency
+    val profile = new Profile(spark)
+    val profiled =
+      try queries.map { case (_, fn) =>
+        profile.take()
+        val error = run(fn, sfDir)
+        (profile.take(), error)
+      } finally profile.close()
+    val rungs = queries.indices.map { i =>
+      val times = timedPasses.map(_(i))
+      val error = (times.flatMap(_._2) ++ profiled(i)._2).headOption
+      error.foreach(e => System.err.println(s"[bench] ${queries(i)._1} failed: ${e.getMessage}"))
+      Rung(queries(i)._1, times.head._1, times.tail.map(_._1), profiled(i)._1, error)
+    }
+    (warmup, rungs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the harness contract (local[32], shuffle.partitions=32);
@@ -19,9 +77,6 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // untimed warmup: run the whole suite once at smoke scale so janino
-    // codegen, JIT, and file-index init are paid before timing — per-query
-    // numbers then measure steady-state latency at the target SF
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     // SPARK_GRAFT_BENCH_SKIP: comma-separated query names to exclude at
     // stress SFs. Since round 5, q20 self-guards (in-operator candidate
@@ -37,92 +92,34 @@ object Bench {
     require(unknown.isEmpty,
       s"SPARK_GRAFT_BENCH_SKIP names not registered: ${unknown.mkString(",")}")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => skip(q._1))
-    val w0 = System.nanoTime()
-    queries.foreach { case (_, fn) =>
-      try fn(spark, warmupDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    val warmup = (System.nanoTime() - w0) / 1e9
-    def runSuite(): Seq[(String, Double)] =
-      queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    // cold pass at the target SF pays the page-cache/file-index cost once
-    // (reported as cold_sec); the reported per-query numbers are
-    // MEDIANS over n steady passes — the harness box shows ±25% run-to-run
-    // noise, which single-pass numbers repeatedly misread as regressions
-    val coldRun = runSuite()
-    val cold = coldRun.map(_._2).sum
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val runs: Seq[Seq[(String, Double)]] = (1 to passes).map(_ => runSuite())
-    val names = runs.head.map(_._1)
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val stats = names.map { n =>
-      val xs = runs.map(_.find(_._1 == n).get._2)
-      n -> ((med(xs), xs.min, xs.max))
-    }
+    val (warmup, rungs) = ladder(spark, queries, sfDir, warmupDir, passes)
+    // a failed query has no time: it is listed under "failed" and left out
+    // of every timing map and of both totals
+    val ok = rungs.filter(_.error.isEmpty)
     // "queries" stays a flat name->seconds map (the driver's documented
     // shape, now the per-query median); "queries_spread" carries the
     // {median,min,max} triple per query
-    val qs = stats.map { case (k, (m, _, _)) => "\"" + k + "\":" + f"$m%.3f" }
-      .mkString("{", ",", "}")
-    val spread = stats.map { case (k, (m, lo, hi)) =>
-      "\"" + k + "\":" + f"""{"median":$m%.3f,"min":$lo%.3f,"max":$hi%.3f}"""
+    val qs = ok.map(r => "\"" + r.name + "\":" + f"${r.median}%.3f").mkString("{", ",", "}")
+    val spread = ok.map { r =>
+      "\"" + r.name + "\":" +
+        f"""{"median":${r.median}%.3f,"min":${r.steady.min}%.3f,"max":${r.steady.max}%.3f}"""
     }.mkString("{", ",", "}")
     // per-query COLD times (first pass at the target SF): cold − steady
     // per cache-building query is what attributes the suite's cold_sec
     // overhead to each OpCache family (see BENCH_NOTES cold-vs-steady
     // table), keeping the "build once" memoization claim auditable
-    val coldQs = coldRun.map { case (k, t) => "\"" + k + "\":" + f"$t%.3f" }
-      .mkString("{", ",", "}")
-    val total = stats.map(_._2._1).sum
+    val coldQs = ok.map(r => "\"" + r.name + "\":" + f"${r.cold}%.3f").mkString("{", ",", "}")
+    val total = ok.map(_.median).sum
+    val cold = ok.map(_.cold).sum
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // one extra untimed pass measuring per-query shuffle/spill volume via
-    // task metrics — the scale evidence behind the plan audit ("is there a
-    // shuffle here that becomes the bottleneck at 100x?") measured, not
-    // guessed. Runs AFTER the timed passes so listener settling sleeps
-    // never pollute the reported latencies.
-    val shWrite = new AtomicLong; val shRead = new AtomicLong; val spill = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          spill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    // task-end events are async: wait until the counters are unchanged
-    // across two consecutive 50 ms reads (bounded ~2 s) — a fixed sleep
-    // would let a heavy query's late events land in the next query's window
-    def settle(): Unit = {
-      var tries = 0
-      var prev = (-1L, -1L, -1L)
-      var cur = (shWrite.get, shRead.get, spill.get)
-      while (prev != cur && tries < 40) {
-        Thread.sleep(50); prev = cur
-        cur = (shWrite.get, shRead.get, spill.get); tries += 1
-      }
-    }
-    val io = queries.map { case (name, fn) =>
-      settle()
-      val (w0, r0, s0) = (shWrite.get, shRead.get, spill.get)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      settle()
-      val mb = 1.0 / (1 << 20)
-      f""""$name":{"shuffle_write_mb":${(shWrite.get - w0) * mb}%.1f,"shuffle_read_mb":${(shRead.get - r0) * mb}%.1f,"spill_mb":${(spill.get - s0) * mb}%.1f}"""
-    }.mkString("{", ",", "}")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_spread":$spread,"queries_io":$io,"queries_cold":$coldQs,"passes":$passes,"skipped":$skipped,"warmup_sec":$warmup%.3f,"cold_sec":$cold%.3f,"sf":"$sfDir"}"""
+    val failed = rungs.filter(_.error.nonEmpty).map("\"" + _.name + "\"").mkString("[", ",", "]")
+    // per-query engine profile (jobs, tasks, CPU, GC, shuffle, spill, peak
+    // memory, streaming phases): the scale evidence behind the plan audit
+    // ("is there a shuffle here that becomes the bottleneck at 100x?")
+    // measured, not guessed
+    val profiles = rungs.map(r => "\"" + r.name + "\":" + r.profile.json).mkString("{", ",", "}")
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_spread":$spread,"queries_profile":$profiles,"queries_cold":$coldQs,"passes":$passes,"skipped":$skipped,"failed":$failed,"warmup_sec":$warmup%.3f,"cold_sec":$cold%.3f,"sf":"$sfDir"}"""
     // The full line goes to the repo file ONLY — printing it too is what
     // kept breaking the driver's 2000-char stdout tail parse (r04..r07 the
     // line was cut mid-way; r08 its truncated remnant preceded the compact
@@ -154,9 +151,8 @@ object Bench {
     // memo hide work from the round-over-round comparison (the round-12
     // verdict's accounting-shift caveat, item 2 of its next-round list).
     val base = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cold_sec":$cold%.3f,"sf":"$sfDir","detail":"BENCH_LAST.json""""
-    val entries = stats.sortBy(-_._2._1)
-      .map { case (k, (m, _, _)) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + math.round(m * 10).toString }
+    val entries = ok.sortBy(-_.median)
+      .map(r => "\"" + r.name.takeWhile(_ != '_') + "\":" + math.round(r.median * 10).toString)
     val buf = new StringBuilder
     var omitted = 0
     entries.foreach { e =>
@@ -171,12 +167,8 @@ object Bench {
     // budget the steady map left — steady entries are NEVER displaced
     // (they are the regression gate; cold attribution is the audit
     // trail, with the full-precision map always in BENCH_LAST.json).
-    val medByName = stats.toMap
-    val coldEntries = coldRun
-      .map { case (k, t) => (k, t, t - medByName(k)._1) }
-      .filter(_._3 >= 0.3).sortBy(-_._3)
-      .map { case (k, t, _) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + math.round(t * 10).toString }
+    val coldEntries = ok.filter(r => r.cold - r.median >= 0.3).sortBy(r => r.median - r.cold)
+      .map(r => "\"" + r.name.takeWhile(_ != '_') + "\":" + math.round(r.cold * 10).toString)
     val cbuf = new StringBuilder
     var coldOmitted = 0
     coldEntries.foreach { e =>

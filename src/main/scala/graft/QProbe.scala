@@ -1,10 +1,13 @@
 package graft
 
-/** Focused per-query ladder (round 13): times the NAMED registered
-  * queries with the Bench methodology — untimed sf0.001 warmup pass,
-  * one cold pass at SPARK_GRAFT_SF_DIR, then median over
-  * SPARK_GRAFT_BENCH_PASSES (default 3) steady passes, noop sink —
-  * without paying the other ~180 queries per iteration. Usage:
+/** Focused per-query ladder: runs the NAMED registered queries through
+  * Bench's own loop ([[Bench.ladder]]: untimed sf0.001 warmup pass, one
+  * cold pass at SPARK_GRAFT_SF_DIR, median over SPARK_GRAFT_BENCH_PASSES
+  * (default 3) steady passes, one untimed profiled pass, noop sink)
+  * without paying the other ~180 queries per iteration. Prints one
+  * `QPROBE` line per query with its times and its [[ProfileRow]] (a query
+  * that raised is marked `failed`), then each query's formatted physical
+  * plan, untimed. Usage:
   * `sbt "runMain graft.QProbe q144_entity_resolution q90_integrity_audit"`.
   * Same session config as Bench so the measured plans are the suite's.
   */
@@ -18,23 +21,18 @@ object QProbe {
     val spark = Tables.session("graft-qprobe", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val queries = args.toSeq.map(n => n -> SparkEntry.queries(n))
-    def runOne(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-               dir: String): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    queries.foreach { case (_, fn) =>
-      try runOne(fn, warmupDir) catch { case _: Throwable => () }
-    }
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val cold = queries.map { case (n, fn) => n -> runOne(fn, sfDir) }.toMap
-    val runs = (1 to passes).map(_ => queries.map { case (n, fn) => n -> runOne(fn, sfDir) })
-    queries.foreach { case (n, _) =>
-      val xs = runs.map(_.find(_._1 == n).get._2).sorted
-      val med = if (xs.size % 2 == 1) xs(xs.size / 2)
-        else (xs(xs.size / 2 - 1) + xs(xs.size / 2)) / 2
-      println(f"QPROBE $n median=$med%.3f min=${xs.min}%.3f max=${xs.max}%.3f cold=${cold(n)}%.3f sf=$sfDir")
+    val (_, rungs) = Bench.ladder(spark, queries, sfDir, warmupDir, passes)
+    rungs.foreach { r =>
+      val times =
+        if (r.error.nonEmpty) "failed"
+        else f"median=${r.median}%.3f min=${r.steady.min}%.3f max=${r.steady.max}%.3f cold=${r.cold}%.3f"
+      println(s"QPROBE ${r.name} $times sf=$sfDir profile=${r.profile.json}")
+    }
+    queries.foreach { case (n, fn) =>
+      println(s"=== $n ===")
+      try fn(spark, sfDir).explain("formatted")
+      catch { case e: Throwable => println(s"plan failed: ${e.getMessage}") }
     }
     spark.stop()
   }

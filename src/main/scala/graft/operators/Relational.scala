@@ -976,12 +976,6 @@ object Relational {
     }
   }
 
-  /** Number of shuffle-exchange nodes in `p`'s expanded subtree — typed
-    * (`ShuffleExchangeLike`), so any partitioning spelling counts. */
-  private def countShuffles(p: org.apache.spark.sql.execution.SparkPlan): Long =
-    planNodes(p).count(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]).toLong
-
   /** Order-book reconciliation (q176): the full-outer audit every
     * warehouse runs between a header table and its detail rollup —
     * orders vs the lineitem-derived total. Classes: `no_lines` (header

@@ -523,7 +523,8 @@ object Similarity {
     * gates recall against exact brute force and bounds the scanned
     * fraction (the cost side), like q25.
     *
-    * Defaults measured by [[IvfSweep]] on the near-uniform test
+    * Defaults measured by a (cells, probes) sweep of this operator
+    * (BENCH_NOTES "q53 recall/cost context") on the near-uniform test
     * embeddings (the adversarial geometry): 64 cells / 8 probes reach
     * recall@5 0.72 while scanning 12.5% of the corpus — a 5.8x lift over
     * blind scanning, vs 1.2x for 8 cells / 2 probes. Finer cells pay off
@@ -971,7 +972,7 @@ object Similarity {
     * md5-derived vector whatever n, so the 16-plane prefix used by the
     * oracle-checked q42 path is unchanged when `annLsh` widens to 64.
     */
-  private[operators] def lshPlanesN(n: Int): Array[Array[Double]] = Array.tabulate(n, 64) { (p, i) =>
+  private def lshPlanesN(n: Int): Array[Array[Double]] = Array.tabulate(n, 64) { (p, i) =>
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$p#$i".getBytes("UTF-8")).map("%02x".format(_)).mkString
     (java.lang.Long.parseLong(hex.take(15), 16) % 2001 - 1000) / 1000.0
@@ -998,8 +999,7 @@ object Similarity {
     * each extra probe buys the highest remaining hit probability. Returns
     * the first `n` keys.
     */
-  private[operators] def perturbKeys(key: Long, weakestFirst: Array[Int],
-                                     n: Int): Array[Long] = {
+  private def perturbKeys(key: Long, weakestFirst: Array[Int], n: Int): Array[Long] = {
     val m = math.min(weakestFirst.length, 4) // 2^4 subsets covers any sane n
     val subsets = (0 until (1 << m)).sortBy { bits =>
       var cost = 0; var j = 0
@@ -1085,7 +1085,8 @@ object Similarity {
 
   /** The candidate pairs `annLsh` re-ranks — exposed so the recall spec can
     * assert the candidate FRACTION (the cost side of the recall/cost curve)
-    * as well as the recall. Defaults measured by [[LshSweep]] on the
+    * as well as the recall. Defaults measured by a (planes, band bits,
+    * probes) sweep (BENCH_NOTES "Multi-probe LSH ANN (q25)") on the
     * near-uniform test embeddings (the adversarial geometry): recall@5
     * 0.76/0.70 at 26%/24% of the corpus as candidates (sf0.01/sf0.1) —
     * versus 0.44 at 24% for the old single-probe 16-plane config.

@@ -159,7 +159,8 @@ object TextDedup {
     * measured-good and measured-fatal regimes — sf1's bound is tens of
     * millions (runs in seconds), the sf10 bounded-vocabulary saturation
     * measured 2.01e9 candidates and exhausted the box's spill disk
-    * (`BENCH_NOTES.md`, `PpjoinDiag`).
+    * (BENCH_NOTES "sf10 (100× bench data): the q20 boundary, measured";
+    * `RoutedPairs.candidateBound` reports the bound per call).
     */
   val DefaultCandidateBudget: Long = 500000000L
 
@@ -251,20 +252,11 @@ object TextDedup {
     r.pairs
   }
 
-  /** The PPJoin prefix table behind [[ngramJaccardPairs]]: each document's
-    * `n - ceil(t*n) + 1` globally-rarest shingles with their prefix rank.
-    * Factored out so [[PpjoinDiag]] measures candidate volume from exactly
-    * the operator's prefix selection. Returns (cached shingle sets, prefix
-    * rows `(doc_id, nsh, h, rn)`).
+  /** The PPJoin prefix table behind [[ngramJaccardPairs]], over an
+    * already-built (cached) shingle set: each document's
+    * `n - ceil(t*n) + 1` globally-rarest shingles with their prefix rank,
+    * as rows `(doc_id, nsh, h, rn)`.
     */
-  private[operators] def prefixRanked(s: SparkSession, dir: String,
-                                      threshold: Double,
-                                      freqSketchSize: Int): (DataFrame, DataFrame) = {
-    val sh = hashedShinglesCached(s, dir)
-    (sh, prefixRankedFrom(s, sh, threshold, freqSketchSize))
-  }
-
-  /** [[prefixRanked]] over an already-built (cached) shingle set. */
   private def prefixRankedFrom(s: SparkSession, sh: DataFrame,
                                threshold: Double,
                                freqSketchSize: Int): DataFrame = {

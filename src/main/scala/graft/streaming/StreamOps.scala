@@ -26,10 +26,11 @@ object StreamOps {
     * state partitions to key cardinality; these replay lifecycles carry
     * ≤ ~1M keys, where 32 partitions is pure fixed cost (measured: q92
     * 9.7→4.5 s, q96 9.7→4.4, q159 5.3→3.4 at sf0.1 with 8; round-11
-    * StreamCostProbe then measured 8→2 collapsing per-batch state-store
+    * per-phase profile then measured 8→2 collapsing per-batch state-store
     * open/commit again — q92 state_ms 9100→1100, wall 3.0→2.4; q96
     * 3.5→2.7; q159 3.3→3.0; q179 3.9→3.5 — with 4 between the two, so 2
-    * is the registered setting). Batch stages planned inside `body`
+    * is the registered setting; BENCH_NOTES "Round-11: the streaming
+    * fixed-cost profile"). Batch stages planned inside `body`
     * still coalesce under AQE — but note AQE only shrinks: a heavy BATCH
     * tail inside `body` is capped at `n`, so operators with real batch
     * tails (q59's exact-verify) keep a larger `n`.
@@ -108,11 +109,15 @@ object StreamOps {
 
   /** The reference's `store` pipeline (`/root/reference/triton.go:90-137`)
     * as one Structured Streaming query: micro-batches append to the
-    * date/client-partitioned `.tri` archive, offsets commit to the
-    * checkpoint log only after files are durable (the engine's version of
-    * checkpoint-after-upload, `/root/reference/triton/store.go:51-67`, but
-    * exactly-once instead of at-least-once). `foreachBatch` + deterministic
-    * batch handling keeps re-runs idempotent.
+    * date/client-partitioned `.tri` archive, and Spark writes `commits/N`
+    * to the checkpoint only after the batch's files are durable (the
+    * engine's version of checkpoint-after-upload,
+    * the reference's `triton/store.go:51-67`). Like the reference, this is
+    * at-least-once, not exactly-once: `foreachBatch` ignores the batch id
+    * and appends, so a crash after the archive's job commit but before
+    * `commits/N` makes the restart replay batch N and archive every one of
+    * its records a second time. Making the batch write idempotent is
+    * ROADMAP direction 1 ("Exactly-once archive store across restarts").
     *
     * The source partitions a batch by shard, so a plain `Archive.store`
     * would write one file per (shard, date). Each batch is rebalanced by

@@ -15,8 +15,8 @@ import graft.operators.Similarity
   * adversarial case for any sublinear ANN. The multi-probe config
   * (64 planes, 8×8-bit bands, 8 probes of each band's least-confident
   * bits) measures mean recall@5 0.76 at sf0.01 / 0.70 at sf0.1 while
-  * examining ~24-26% of the corpus as candidates (full curve:
-  * `graft.operators.LshSweep`, table in BENCH_NOTES.md) — the old
+  * examining ~24-26% of the corpus as candidates (full curve: BENCH_NOTES
+  * "Multi-probe LSH ANN (q25)") — the old
   * single-probe 16-plane config bought 0.44 for the same 24% cost. On
   * clustered real-world embeddings the same banding concentrates
   * candidates and recall rises; the gate checks the machinery, not a
@@ -92,9 +92,10 @@ class SimilarityRecallSpec extends AnyFunSuite with SparkFixture {
     // structureless corpus recovers ~f of the true neighbors, and these
     // synthetic embeddings are near-uniform BY DESIGN (the adversarial
     // geometry — see the class doc). The learned cells must beat that
-    // baseline with margin (IvfSweep measured: recall 0.72 at 0.125
-    // scanned for the 64-cell/8-probe default, a 5.8x lift; clustered
-    // real-world embeddings concentrate much harder). An absolute floor
+    // baseline with margin (measured: recall 0.72 at 0.125 scanned for
+    // the 64-cell/8-probe default, a 5.8x lift, BENCH_NOTES "q53
+    // recall/cost context"; clustered real-world embeddings concentrate
+    // much harder). An absolute floor
     // keeps the gate meaningful if the probe reconstruction drifts.
     assert(mean >= meanFrac * 2.0 && mean >= 0.5,
       f"mean recall@5 $mean%.3f did not beat the blind-scan baseline " +
