@@ -49,29 +49,24 @@ object ClusterSmoke {
       val streamDir = work.resolve("stream").toString
       import graft.streaming.FileShardService
       (1L to 6L).foreach(i => FileShardService.put(streamDir, s"shard-${i % 2}", i, s"k$i", rec(i)))
-      val ckpt = work.resolve("ckpt").toString
-      val outDir = work.resolve("out").toString
-      def runOnce(): Unit = {
-        val q = spark.readStream.format("kinesis-graft")
-          .option("stream", streamDir)
-          .option("service", "graft.streaming.FileShardService")
-          .load()
-          .withColumn("rec", expr("from_msgpack(data, 'id BIGINT, kind STRING')"))
-          .select($"shard_id", $"sequence_number", $"rec.id".as("id"))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      runOnce()
-      val ids1 = spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
+      import graft.streaming.StreamOps.{drain, Sink, StateShape}
+      // each run is one AvailableNow drain on the same work dir, so the
+      // second resumes from the first's checkpoint at work/ckpt
+      def runOnce(): Seq[Long] = drain(StateShape.Stateless, work,
+          spark.readStream.format("kinesis-graft")
+            .option("stream", streamDir)
+            .option("service", "graft.streaming.FileShardService")
+            .load()
+            .withColumn("rec", expr("from_msgpack(data, 'id BIGINT, kind STRING')"))
+            .select($"shard_id", $"sequence_number", $"rec.id".as("id")),
+          Sink.Files)
+        .select("id").as[Long].collect().sorted.toSeq
+      val ids1 = runOnce()
       check("stream_first_run", ids1 == (1L to 6L), s"got $ids1")
 
       // 2. resume: more records after a stop; the checkpoint must dedupe
       (7L to 10L).foreach(i => FileShardService.put(streamDir, s"shard-${i % 2}", i, s"k$i", rec(i)))
-      runOnce()
-      val ids2 = spark.read.parquet(outDir).select("id").as[Long].collect().sorted.toSeq
+      val ids2 = runOnce()
       check("stream_resume_exactly_once", ids2 == (1L to 10L), s"got $ids2")
     }
 

@@ -66,11 +66,11 @@ object SparkEntry {
     "q40_token_percentiles" -> ((s, d) => TextAnalysis.tokenPercentiles(s, d)),
     "q41_event_pivot" -> ((s, d) => EventOps.eventTypePivot(s, d)),
     "q42_cosine_neardup_lsh" -> ((s, d) => Similarity.cosineNearDupLsh(s, d)),
-    "q43_stream_hourly" -> ((s, d) => graft.streaming.StreamOps.withArrivalTuning(s, 2)(graft.streaming.StreamOps.hourlyCountsStreamed(s, d))),
+    "q43_stream_hourly" -> ((s, d) => graft.streaming.StreamOps.hourlyCountsStreamed(s, d)),
     "q44_stratified_sample" -> ((s, d) => Pipeline.stratifiedSample(s, d)),
     "q45_filter_funnel" -> ((s, d) => Pipeline.filterFunnel(s, d)),
     "q46_weighted_mix" -> ((s, d) => Pipeline.weightedMix(s, d)),
-    "q47_stream_hourly_append" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, 2)(graft.streaming.StreamOps.hourlyCountsStreamedAppend(s, d))),
+    "q47_stream_hourly_append" -> ((s, d) => graft.streaming.StreamOps.hourlyCountsStreamedAppend(s, d)),
     "q48_dedup_clusters" -> ((s, d) => operators.Clustering.dedupClusters(s, d)),
     "q49_contamination" -> ((s, d) => TextAnalysis.contamination(s, d)),
     "q50_repetition" -> ((s, d) => TextAnalysis.repetitionStats(s, d)),
@@ -82,7 +82,7 @@ object SparkEntry {
     "q56_incremental_dedup" -> ((s, d) => TextDedup.incrementalDedup(s, d)),
     "q57_embed_dedup_clusters" -> ((s, d) => operators.Clustering.embedDedupClusters(s, d)),
     "q58_token_chunks" -> ((s, d) => Pipeline.tokenChunks(s, d)),
-    "q59_stream_incremental_dedup" -> ((s, d) => streaming.StreamOps.withArrivalTuning(s, math.max(8, streaming.StreamOps.statePartitionsFor(s, d, "documents")))(streaming.StreamOps.incrementalDedupStreamed(s, d))),
+    "q59_stream_incremental_dedup" -> ((s, d) => graft.streaming.StreamOps.incrementalDedupStreamed(s, d)),
     "q60_audio_meta" -> ((s, d) => Multimodal.audioMeta(s, d)),
     "q61_image_resize" -> ((s, d) => Multimodal.imageResize(s, d)),
     "q62_audio_energy" -> ((s, d) => Multimodal.audioEnergy(s, d)),
@@ -95,7 +95,7 @@ object SparkEntry {
     "q69_line_dedup_keep_first" -> ((s, d) => TextDedup.lineDedupKeepFirst(s, d)),
     "q70_dup_ngram_fraction" -> ((s, d) => TextAnalysis.dupNgramFraction(s, d)),
     "q71_knn_classify" -> ((s, d) => Similarity.knnClassify(s, d)),
-    "q72_stream_sessionize" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, graft.streaming.StreamOps.statePartitionsFor(s, d))(graft.streaming.StreamOps.sessionizeStreamed(s, d))),
+    "q72_stream_sessionize" -> ((s, d) => graft.streaming.StreamOps.sessionizeStreamed(s, d)),
     "q73_cross_source_overlap" -> ((s, d) => TextAnalysis.crossSourceOverlap(s, d)),
     "q74_user_cardinality_exact" -> ((s, d) => EventOps.userCardinalityExact(s, d)),
     "q75_contamination_bloom" -> ((s, d) => TextAnalysis.contaminationBloom(s, d)),
@@ -106,7 +106,7 @@ object SparkEntry {
     "q80_split_manifest" -> ((s, d) => Pipeline.splitManifest(s, d)),
     "q81_source_tfidf" -> ((s, d) => TextAnalysis.sourceTfidfProfile(s, d)),
     "q82_embed_stats" -> ((s, d) => Similarity.embedStats(s, d)),
-    "q83_stream_quality_gate" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, 2)(graft.streaming.StreamOps.qualityGateStreamed(s, d))),
+    "q83_stream_quality_gate" -> ((s, d) => graft.streaming.StreamOps.qualityGateStreamed(s, d)),
     "q84_archive_compact" -> ((s, d) => EventOps.archiveCompact(s, d)),
     "q85_zipf_profile" -> ((s, d) => TextAnalysis.zipfProfile(s, d)),
     "q86_hourly_anomaly" -> ((s, d) => EventOps.hourlyAnomaly(s, d)),
@@ -114,8 +114,8 @@ object SparkEntry {
     "q88_retention_cohorts" -> ((s, d) => EventOps.retentionCohorts(s, d)),
     "q89_gif_frame_sample" -> ((s, d) => Multimodal.gifFrameSample(s, d)),
     "q90_integrity_audit" -> ((s, d) => Relational.integrityAudit(s, d)),
-    "q91_stream_running_counts" -> ((s, d) => graft.streaming.StreamOps.withArrivalTuning(s, graft.streaming.StreamOps.statePartitionsFor(s, d))(graft.streaming.StreamOps.runningCountsStreamed(s, d))),
-    "q92_stream_stream_join" -> ((s, d) => graft.streaming.StreamOps.withArrivalTuning(s, graft.streaming.StreamOps.statePartitionsFor(s, d))(graft.streaming.StreamOps.streamStreamJoin(s, d))),
+    "q91_stream_running_counts" -> ((s, d) => graft.streaming.StreamOps.runningCountsStreamed(s, d)),
+    "q92_stream_stream_join" -> ((s, d) => graft.streaming.StreamOps.streamStreamJoin(s, d)),
     "q93_event_transitions" -> ((s, d) => EventOps.eventTransitions(s, d)),
     // rows-only BY DESIGN (like q25/q53): IVF neighbor sets are
     // engine-specific; SimilarityRecallSpec gates probe-all exactness
@@ -125,7 +125,7 @@ object SparkEntry {
     // one SQL query; PipelineCleaningSpec pins merges/encode on a hand
     // fixture + round-trip/determinism invariants
     "q95_subword_bpe" -> ((s, d) => TextAnalysis.subwordProfile(s, d)),
-    "q96_stream_abandonment" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, graft.streaming.StreamOps.statePartitionsFor(s, d))(graft.streaming.StreamOps.streamAbandonment(s, d))),
+    "q96_stream_abandonment" -> ((s, d) => graft.streaming.StreamOps.streamAbandonment(s, d)),
     "q97_bigram_entropy" -> ((s, d) => TextAnalysis.bigramCrossEntropy(s, d)),
     "q98_heavy_hitters" -> ((s, d) => TextAnalysis.heavyHitters(s, d)),
     "q99_asof_nearest" -> ((s, d) => EventOps.asOfNearestClick(s, d)),
@@ -133,7 +133,7 @@ object SparkEntry {
     "q101_above_avg_orders" -> ((s, d) => Relational.aboveCustomerAvgOrders(s, d)),
     "q102_curriculum_bins" -> ((s, d) => Pipeline.curriculumBins(s, d)),
     "q103_fuzzy_name_pairs" -> ((s, d) => TextDedup.fuzzyNamePairs(s, d)),
-    "q104_stream_dedup" -> ((s, d) => graft.streaming.StreamOps.withArrivalTuning(s, graft.streaming.StreamOps.statePartitionsFor(s, d))(graft.streaming.StreamOps.streamDedupWithinWatermark(s, d))),
+    "q104_stream_dedup" -> ((s, d) => graft.streaming.StreamOps.streamDedupWithinWatermark(s, d)),
     "q105_order_histogram" -> ((s, d) => Relational.orderValueHistogram(s, d)),
     "q106_stickiness" -> ((s, d) => EventOps.stickiness(s, d)),
     // rows-only BY DESIGN (like q25/q53): float-sum order makes the
@@ -144,7 +144,7 @@ object SparkEntry {
     "q108_bm25_topdocs" -> ((s, d) => TextAnalysis.bm25TopDocs(s, d)),
     "q109_cdc_merge" -> ((s, d) => Relational.cdcMerge(s, d)),
     "q110_grouping_sets" -> ((s, d) => Relational.groupingSetsReport(s, d)),
-    "q111_incremental_view" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, 2)(graft.streaming.StreamOps.incrementalViewMaintenance(s, d))),
+    "q111_incremental_view" -> ((s, d) => graft.streaming.StreamOps.incrementalViewMaintenance(s, d)),
     "q112_orc_roundtrip" -> ((s, d) => EventOps.orcRoundtrip(s, d)),
     "q113_csv_ingest" -> ((s, d) => EventOps.csvDeadLetter(s, d)),
     "q114_latest_state" -> ((s, d) => EventOps.latestStateSnapshot(s, d)),
@@ -154,7 +154,7 @@ object SparkEntry {
     // rows-only BY DESIGN (like q25/q53): cell ids are engine-specific;
     // SimilarityRecallSpec gates coverage/quota/membership/determinism
     "q118_diversity_sample" -> ((s, d) => Similarity.diversitySample(s, d)),
-    "q119_stream_static_join" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, 2)(graft.streaming.StreamOps.streamStaticEnrich(s, d))),
+    "q119_stream_static_join" -> ((s, d) => graft.streaming.StreamOps.streamStaticEnrich(s, d)),
     "q120_hybrid_rrf" -> ((s, d) => Similarity.hybridRrf(s, d)),
     "q121_zorder_pruning" -> ((s, d) => EventOps.zorderPruning(s, d)),
     "q122_experiment_lift" -> ((s, d) => EventOps.experimentLift(s, d)),
@@ -165,7 +165,7 @@ object SparkEntry {
     "q127_seasonal_profile" -> ((s, d) => EventOps.seasonalProfile(s, d)),
     "q128_padding_waste" -> ((s, d) => Pipeline.paddingWaste(s, d)),
     "q129_retrieval_eval" -> ((s, d) => Similarity.retrievalEval(s, d)),
-    "q130_stream_drift" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, 2)(graft.streaming.StreamOps.streamSourceDrift(s, d))),
+    "q130_stream_drift" -> ((s, d) => graft.streaming.StreamOps.streamSourceDrift(s, d)),
     "q131_source_calibration" -> ((s, d) => Pipeline.sourceCalibration(s, d)),
     "q132_skew_report" -> ((s, d) => EventOps.skewReport(s, d)),
     "q133_cohort_ltv" -> ((s, d) => EventOps.cohortLtv(s, d)),
@@ -194,7 +194,7 @@ object SparkEntry {
     "q156_split_leakage" -> ((s, d) => Pipeline.splitLeakage(s, d)),
     "q157_ols_trend" -> ((s, d) => Relational.olsTrend(s, d)),
     "q158_lag_features" -> ((s, d) => EventOps.lagFeatures(s, d)),
-    "q159_stream_timer_sessions" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, graft.streaming.StreamOps.statePartitionsFor(s, d))(graft.streaming.StreamOps.timerSessionsStreamed(s, d))),
+    "q159_stream_timer_sessions" -> ((s, d) => graft.streaming.StreamOps.timerSessionsStreamed(s, d)),
     "q160_audio_resample" -> ((s, d) => Multimodal.audioResample(s, d)),
     "q161_bucketed_join_audit" -> ((s, d) => Relational.bucketedJoinAudit(s, d)),
     "q162_cluster_capped_sample" -> ((s, d) => operators.Clustering.clusterCappedSample(s, d)),
@@ -214,7 +214,7 @@ object SparkEntry {
     "q176_recon_report" -> ((s, d) => Relational.reconReport(s, d)),
     "q177_rfm_segments" -> ((s, d) => EventOps.rfmSegments(s, d)),
     "q178_dataset_card" -> ((s, d) => TextAnalysis.datasetCard(s, d)),
-    "q179_late_data_audit" -> ((s, d) => graft.streaming.StreamOps.withStatePartitions(s, 2)(EventOps.lateDataAudit(s, d))),
+    "q179_late_data_audit" -> ((s, d) => EventOps.lateDataAudit(s, d)),
     "q180_column_stats_approx" -> ((s, d) => Relational.columnStatsApprox(s, d)),
     "q181_ann_ivfpq" -> ((s, d) => Similarity.annIvfPq(s, d)),
     "q182_sequence_packing_bpe" -> ((s, d) => Pipeline.sequencePackingBpe(s, d)),

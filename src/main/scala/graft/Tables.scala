@@ -122,7 +122,7 @@ object Tables {
           new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath))
       else builder).getOrCreate()
     // The state store stays Spark's default. q91 and q159 choose RocksDB
-    // themselves (StreamOps.withRocksDbState). A deployment that wants
+    // in their own state shape (StreamOps.StateShape.RowKeyed). A deployment that wants
     // RocksDB for every stateful query sets
     // spark.sql.streaming.stateStore.providerClass as a Spark conf
     // (`-Dspark.sql.streaming.stateStore.providerClass=...` or `--conf`),

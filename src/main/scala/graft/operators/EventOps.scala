@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables.{events, table}
 import graft.io.Scratch
+import graft.streaming.StreamOps
 
 /** Event-stream operators: the reference's query surface re-expressed over
   * the `events` table (which stands in for the Kinesis stream / S3 archive
@@ -1764,7 +1765,6 @@ object EventOps {
   def lateDataAudit(s: SparkSession, dir: String,
                     lateMod: Long = 50): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val ev = events(s, dir).select($"event_id", $"event_type",
       timestamp_micros($"ts_us").as("ts"))
     // the staged file set — on-time pass-through (~98% of the CORPUS
@@ -1852,7 +1852,7 @@ object EventOps {
     // files are shared across passes)
     Scratch.withWorkDir("q179_late") { work =>
       val src = java.nio.file.Files.createDirectories(work.resolve("src"))
-      graft.streaming.StreamOps.linkInto(stagedSrc, src)
+      StreamOps.linkInto(stagedSrc, src)
       val nGroup = math.max(1, stagedSrc.toFile.listFiles().count(f =>
         f.getName.endsWith(".parquet") && !f.getName.startsWith("zz_")))
       val schema = s.read.parquet(src.toString).schema
@@ -1862,13 +1862,8 @@ object EventOps {
         .withWatermark("ts", "10 minutes")
         .groupBy($"event_type", window($"ts", "1 hour"))
         .agg(count(lit(1)).as("n"))
-      val q = counts.writeStream.outputMode(OutputMode.Append)
-        .format("parquet").option("path", work.resolve("out").toString)
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val survived = s.read.parquet(work.resolve("out").toString)
+      val survived = StreamOps.drain(StreamOps.StateShape.Grid(), work, counts,
+          StreamOps.Sink.Files)
         .where($"event_type" =!= "__sentinel")
         .groupBy($"event_type").agg(sum($"n").as("n_survived"))
       val total = ev.groupBy($"event_type").agg(count(lit(1)).as("n_total"))

@@ -7,7 +7,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.MsgPackCodec
-import graft.streaming.{FakeKinesis, ShardOffsets}
+import graft.io.Scratch
+import graft.streaming.{Checkpoints, FakeKinesis, ShardOffsets, StreamOps}
+import graft.streaming.StreamOps.{Sink, StateShape}
 
 /** The streaming read path (SURVEY.md §2.1 S1-S4, §2.3 C1-C3) against the
   * in-memory service, mirroring the reference's multi-shard and
@@ -236,6 +238,34 @@ class KinesisLikeSourceSpec extends AnyFunSuite with SparkFixture {
     assert(spark.table("t9").collect().map(_.getLong(0)).toSeq === Seq(7L))
     assert(RecordingShardService.calls.get() > 0,
       "the named service implementation must be the one invoked")
+  }
+
+  test("an empty shard: the others drain exactly once under AvailableNow; its offset stays -1") {
+    FakeKinesis.reset()
+    FakeKinesis.createStream("s12", 3)
+    // keys that hash to shards 0 and 2 only: shard-1 stays empty
+    Iterator.from(1).map(i => s"k$i").filter(k => math.floorMod(k.hashCode, 3) != 1)
+      .take(12).zipWithIndex.foreach { case (k, i) => put("s12", k, i + 1L, "x") }
+    val heads = Seq("shard-0", "shard-1", "shard-2")
+      .map(sh => sh -> FakeKinesis.latestSequence("s12", sh)).toMap
+    assert(heads("shard-1") === -1L && heads("shard-0") >= 0L && heads("shard-2") >= 0L)
+    Scratch.withWorkDir("empty_shard") { work =>
+      def drainIds(): Seq[Long] = StreamOps.drain(StateShape.Stateless, work,
+          spark.readStream.format("kinesis-graft").option("stream", "s12").load()
+            .withColumn("rec", expr("from_msgpack(data, 'id BIGINT, kind STRING')"))
+            .select("rec.id"),
+          Sink.Files)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(drainIds() === (1L to 12L))
+      assert(spark.streams.active.isEmpty, "the AvailableNow query must terminate")
+      // pinned as the source behaves: the empty shard is listed, at -1
+      // (trim horizon), beside each other shard's last sequence number
+      val offsets = Checkpoints.offsets(spark, work.resolve("ckpt").toString)
+        .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+      assert(offsets === heads)
+      // a second drain on the same checkpoint adds nothing
+      assert(drainIds() === (1L to 12L))
+    }
   }
 
   test("offsets serialize/deserialize stably (C1/C2 shape)") {

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's entry points are a fixed set. Measurement goes through
   * `Bench` and `QProbe` (one pass loop, one profiler), so a new one-off
-  * probe main shows up here instead of growing unnoticed.
+  * probe main shows up here instead of growing unnoticed; a streaming
+  * lifecycle drains through `StreamOps.drain`, so a hand-rolled drain
+  * does too.
   */
 class MainsInventorySpec extends AnyFunSuite {
 
@@ -25,5 +27,28 @@ class MainsInventorySpec extends AnyFunSuite {
     }
     assert(sources.nonEmpty)
     assert(mains.sorted == Seq("Bench", "Cli", "ClusterSmoke", "QProbe", "Smoke", "Verify"))
+  }
+
+  test("src/main awaits a streaming query only inside StreamOps.drain") {
+    val calls = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toSeq
+        lines.indices.collect {
+          // code lines only: a scaladoc may name the call
+          case i if lines(i).contains("awaitTermination(") && !isComment(lines(i)) =>
+            // the method it sits in: the last `def` opened at or above it
+            val method = lines.take(i + 1).reverse
+              .flatMap(l => "\\bdef (\\w+)".r.findFirstMatchIn(l).map(_.group(1)))
+              .headOption.getOrElse("<none>")
+            (p.getFileName.toString, method)
+        }
+      }
+    assert(calls == Seq(("StreamOps.scala", "drain")))
+  }
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
   }
 }
