@@ -802,9 +802,9 @@ object StreamOps {
       .toDF("doc_a", "doc_b", "est")
       .where(inA =!= inB)
       .select(col("doc_a"), col("doc_b"))
-    // floor 8: the shape q59 has carried since its exact-verify tail ran
-    // inside the conf swap (BENCH_NOTES "One drain for the streaming
-    // lifecycles")
+    // floor 8: the state layout q59 is measured at; the floor was set for
+    // the exact-verify tail below, which runs outside the drain at the
+    // session's count (ROADMAP direction 5 asks whether the state needs it)
     val sunk = drain(StateShape.RowKeyed(s"$dir/documents.parquet", floor = 8, onArrival = true),
       work, crossing, Sink.Files)
     require(overflow.value == 0L,
